@@ -3382,3 +3382,63 @@ def test_fused_sq8_train_cell_counts_matches_train_and_tripwire(spark, embedding
     assert (max(counts) / total > 0.5) == (old_share > 0.5)
     # on the gate fixture the shares agree to the stats' own rounding
     assert abs(max(counts) / total - old_share) < 5e-4
+
+
+def test_ivf_sq8_search_plan_cost_flat_in_dim(spark):
+    """Planning one ``IvfSq8Index.search`` must cost O(1) py4j round trips
+    in the vector dimension: the query, its int64 ADC weights and the
+    re-rank query vector cross as whole constant arrays (``array_lit``),
+    never one call per element. Counts the driver→JVM commands sent while
+    BUILDING the frame (no collect) at dim 16 and dim 256; py4j's
+    reference-release messages are excluded, since their timing follows
+    Python garbage collection, not planning."""
+    import gc
+
+    import numpy as np
+    import py4j.clientserver as clientserver
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    rng = np.random.default_rng(7)
+    counts = {}
+    send = clientserver.ClientServerConnection.send_command
+    for dim in (16, 256):
+        x = rng.normal(size=(200, dim)).astype(np.float32)
+        df = spark.createDataFrame(
+            [(i, x[i].tolist()) for i in range(len(x))],
+            "vec_id long, embedding array<float>",
+        )
+        idx = IvfSq8Index.build(df, n_centroids=4)
+        q = x[3].tolist()
+        idx.search(query_vec=q, k=5)  # warm-up: lazy imports, cached handles
+        gc.collect()
+        n = [0]
+
+        def counting(self, command, *args, **kwargs):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                n[0] += 1
+            return send(self, command, *args, **kwargs)
+
+        clientserver.ClientServerConnection.send_command = counting
+        try:
+            idx.search(query_vec=q, k=5)
+        finally:
+            clientserver.ClientServerConnection.send_command = send
+        counts[dim] = n[0]
+    assert abs(counts[256] - counts[16]) <= 16, counts
+
+
+def test_ivf_sq8_build_train_impl_deprecated(spark, embeddings):
+    """``train_impl`` is ignored (the fused Arrow pass always trains the
+    scaler); a non-default value says so instead of passing silently."""
+    import warnings
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    emb = embeddings.select("vec_id", "embedding").limit(200)
+    with pytest.warns(DeprecationWarning, match="train_impl"):
+        IvfSq8Index.build(emb, n_centroids=4, train_impl="numpy")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", DeprecationWarning)
+        IvfSq8Index.build(emb, n_centroids=4)

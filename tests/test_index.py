@@ -391,6 +391,14 @@ def test_local_df_semantics_match_row_path_on_edge_values(spark):
     ).collect()[0]
     assert out["x"] is not None and math.isnan(out["x"])
 
+    # ... at any nesting depth: the Arrow detour folds a NaN inside
+    # array<array<double>> to null too
+    nested = local_df(
+        spark, [(1, [[0.5, float("nan")]])], "id long, xss array<array<double>>"
+    ).collect()[0]["xss"]
+    assert nested[0][0] == 0.5 and nested[0][1] is not None
+    assert math.isnan(nested[0][1])
+
     # StructType schemas ride the fast path with identical content
     from pyspark.sql.types import LongType, StructField, StructType
 

@@ -162,3 +162,45 @@ def test_centroid_outliers_flag_planted_outlier(spark):
     assert flagged == {(0, 99), (1, 199)}
     for r in out.collect():
         assert r["dist"] > 3 * r["med_dist"]
+
+
+@pytest.mark.parametrize(
+    "element_type, values, per_element",
+    [
+        (
+            "double",
+            [-0.0, 5e-324, 1.7976931348623157e308, -1.7976931348623157e308,
+             1 / 3, float("nan"), float("inf"), float("-inf"), 0.1],
+            lambda v: F.array(*[F.lit(float(x)) for x in v]),
+        ),
+        (
+            "int",
+            [-(2**31), 2**31 - 1, 0, -1, 1],
+            lambda v: F.array(*[F.lit(int(x)) for x in v]),
+        ),
+        (
+            "bigint",
+            [-(2**63), 2**63 - 1, 0, -1, 1],
+            lambda v: F.array(*[F.lit(x).cast("long") for x in v]),
+        ),
+    ],
+)
+def test_array_lit_matches_per_element_literals(spark, element_type, values, per_element):
+    """``array_lit`` is the per-element literal array sent in one call:
+    same element type (nullability included) and the same values, bit for
+    bit — signed zero, subnormals, NaN, infinities, integer extremes."""
+    import struct
+
+    from whatsapp_vectordb_spark.functions.vector import array_lit
+
+    df = spark.range(1).select(
+        per_element(values).alias("old"), array_lit(values, element_type).alias("new")
+    )
+    assert df.schema["new"].dataType == df.schema["old"].dataType
+    row = df.head()
+
+    def bits(xs):
+        return [struct.pack("<d", x) if isinstance(x, float) else x for x in xs]
+
+    assert bits(row["new"]) == bits(row["old"])
+    assert bits(row["new"]) == bits([type(row["old"][0])(v) for v in values])

@@ -1,16 +1,30 @@
-"""Regenerate PLANS.md: formatted physical plans for the headline queries.
-
-The plan *shape* is the scale argument — this artifact makes it reviewable
-without running Spark. tests/test_plans.py asserts the load-bearing
-properties; this file shows them.
+"""Formatted physical plans of registry queries.
 
     python tools/dump_plans.py
+    SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 \
+        python tools/dump_plans.py --out-dir plans/r19 --suffix before NAME [NAME ...]
+
+With no names, regenerates PLANS.md: the headline queries at sf0.01 with a
+caption each. The plan *shape* is the scale argument — this artifact makes
+it reviewable without running Spark; tests/test_plans.py asserts the
+load-bearing properties.
+
+With names, writes ``<out-dir>/<name>_<suffix>.txt`` per query, for the
+before/after plan evidence of an optimization. Each query's builder runs
+(side effects included) at $SPARK_GRAFT_SF_DIR (required; sf0.1 is the
+bench scale), so composites' pre-plan phases (builds, commits) run for real and
+the final plan reads the same artifacts the bench reads. A query that
+fails to build records the error in its file and the rest continue.
+``knn_topk_1536_expr`` and ``ann_pq1536_adc_topk`` are bench-only names,
+built as bench.py builds them.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -71,15 +85,15 @@ SHOWN = [
 ]
 
 
-def main() -> None:
-    from whatsapp_vectordb_spark.harness import QUERIES
-    from whatsapp_vectordb_spark.session import get_spark
-
-    spark = get_spark(app_name="dump-plans")
-    spark.sparkContext.setLogLevel("ERROR")
+def _formatted(spark, df) -> str:
     em = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    sf_dir = "/root/testdata/sf0.01"
+    return df._jdf.queryExecution().explainString(em)
 
+
+def write_plans_md(spark) -> None:
+    from whatsapp_vectordb_spark.harness import QUERIES
+
+    sf_dir = "/root/testdata/sf0.01"
     out = [
         "# PLANS — physical plans of the headline queries (sf0.01)",
         "",
@@ -93,12 +107,97 @@ def main() -> None:
         # names outside the registry (e.g. _curate_base) resolve to plain
         # harness functions with the same (spark, sf_dir) signature
         fn = QUERIES.get(name) or getattr(harness, name)
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(em)
+        plan = _formatted(spark, fn(spark, sf_dir))
         out += [f"## {name}", "", caption, "", "```", plan.rstrip(), "```", ""]
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWN)} plans)")
+
+
+def _bench_only() -> dict:
+    """Builders for the 1536-dim bench rows, which are not registry
+    queries — their frames exactly as bench.py builds them."""
+    from pyspark.sql import functions as F
+
+    from whatsapp_vectordb_spark.harness import _t
+
+    def emb1536(spark, sf_dir):
+        emb = _t(spark, sf_dir, "embeddings")
+        e = emb.select(
+            "vec_id",
+            F.flatten(F.array_repeat(F.col("embedding"), 24)).alias("embedding"),
+        )
+        return e, e.where(F.col("vec_id") == 0).head()["embedding"]
+
+    def knn_topk_1536_expr(spark, sf_dir):
+        from whatsapp_vectordb_spark.operators.search import topk
+
+        e, q = emb1536(spark, sf_dir)
+        return topk(e, q, k=10)
+
+    def ann_pq1536_adc_topk(spark, sf_dir):
+        from whatsapp_vectordb_spark.operators.ann import PqIndex
+
+        e, q = emb1536(spark, sf_dir)
+        pq = PqIndex.build(e, m=16, ksub=16, sample_rows=1000, seed=0)
+        return pq.adc_topk(pq.encode(e), q, k=10)
+
+    return {
+        "knn_topk_1536_expr": knn_topk_1536_expr,
+        "ann_pq1536_adc_topk": ann_pq1536_adc_topk,
+    }
+
+
+def write_plan_files(
+    spark, names: list[str], out_dir: str, suffix: str, sf_dir: str
+) -> None:
+    from whatsapp_vectordb_spark.harness import QUERIES
+
+    builders = {**QUERIES, **_bench_only()}
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        t0 = time.time()
+        try:
+            plan = _formatted(spark, builders[name](spark, sf_dir))
+        except Exception as e:  # keep going; record the failure
+            plan = f"ERROR building plan: {e!r}"
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(f"-- {name} ({suffix}) sf_dir={sf_dir}\n")
+            f.write(plan.rstrip() + "\n")
+        print(f"{name}: {time.time() - t0:.1f}s", flush=True)
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="queries to dump (default: PLANS.md)")
+    ap.add_argument("--out-dir", help="directory for the per-query plan files")
+    ap.add_argument("--suffix", default="before", help="file name suffix")
+    args = ap.parse_args(argv)
+    if bool(args.names) != bool(args.out_dir):
+        ap.error("NAME ... and --out-dir go together")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if args.names and not sf_dir:
+        ap.error("set SPARK_GRAFT_SF_DIR to the testdata scale to plan at")
+    if args.names and "SPARK_GRAFT_ORACLE_SCRATCH" not in os.environ:
+        # composites persist oracle state; keep it out of the shared path
+        import atexit
+        import shutil
+        import tempfile
+
+        from whatsapp_vectordb_spark.session import local_scratch_root
+
+        scratch = tempfile.mkdtemp(prefix="wvs-plans-", dir=local_scratch_root())
+        os.environ["SPARK_GRAFT_ORACLE_SCRATCH"] = scratch
+        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+
+    from whatsapp_vectordb_spark.session import get_spark
+
+    spark = get_spark(app_name="dump-plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.names:
+        write_plan_files(spark, args.names, args.out_dir, args.suffix, sf_dir)
+    else:
+        write_plans_md(spark)
     spark.stop()
 
 

@@ -17,6 +17,8 @@ undefined there; FIXTURES.md §3 invariant).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -85,6 +87,40 @@ def similarity_score(a: Column | str, b: Column | str, metric: str = "cosine") -
 def metric_ascending(metric: str) -> bool:
     """True if smaller scores are better (euclidean)."""
     return metric == "euclidean"
+
+
+# SQL integer literal suffix per element type: the parser types ``7L`` as
+# bigint and a bare ``7`` exactly as ``F.lit(7)`` does (int, widened to
+# bigint past the int32 range)
+_INT_SUFFIX = {"bigint": "L", "int": ""}
+
+
+def _sql_literal(v, element_type: str) -> str:
+    if element_type != "double":
+        return f"{int(v)}{_INT_SUFFIX[element_type]}"
+    x = float(v)
+    if math.isfinite(x):
+        return f"{x!r}D"  # repr round-trips: the JVM parses the same double
+    # no SQL literal spells NaN/±inf; the coalesce keeps the element
+    # non-nullable, like a per-element lit, and folds to the same Literal
+    return f"coalesce(CAST('{x!r}' AS DOUBLE), 0D)"
+
+
+def array_lit(values, element_type: str) -> Column:
+    """A driver-side constant array (query vector, ADC weights, scaler
+    bounds, hyperplanes) as one Spark column, sent to the JVM in O(1) py4j
+    calls. ``F.array(*[F.lit(x) ...])`` — and ``F.lit(list)``, which
+    expands to it — pays one round trip per element (two with a cast);
+    that was most of a single search's planning time. Here the values
+    travel as one SQL ``array(...)`` text, so the analyzed tree is the
+    same ``CreateArray`` of non-null literals, constant-folded to the
+    same ``Literal``: element type, values (-0.0, subnormals, NaN, ±inf,
+    int64 extremes) and plans are unchanged.
+
+    ``element_type``: ``"double"``, ``"bigint"`` or ``"int"``."""
+    return F.expr(
+        "array(" + ", ".join(_sql_literal(v, element_type) for v in values) + ")"
+    )
 
 
 def register_sql_functions(spark) -> None:

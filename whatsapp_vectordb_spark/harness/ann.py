@@ -1428,11 +1428,11 @@ def knn_topk_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass — score map-side, one shuffle by label, per-partition rank.
     The shape for 'best matches per tenant/namespace/category' that would
     otherwise be |labels| separate queries."""
-    from whatsapp_vectordb_spark.functions.vector import cosine_similarity
+    from whatsapp_vectordb_spark.functions.vector import array_lit, cosine_similarity
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
-    qcol = F.lit([float(x) for x in qvec]).cast("array<double>")
+    qcol = array_lit(qvec, "double")
     scored = emb.select(
         "label",
         "vec_id",

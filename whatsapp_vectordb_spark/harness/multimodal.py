@@ -312,7 +312,7 @@ def multimodal_chunk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted and both engines score the identical float32 parquet
     (the persisted-state oracle template)."""
     from whatsapp_vectordb_spark.embedder import embed_text
-    from whatsapp_vectordb_spark.functions.vector import cosine_similarity
+    from whatsapp_vectordb_spark.functions.vector import array_lit, cosine_similarity
     from whatsapp_vectordb_spark.multimodal import extract_chunk_features
 
     chunks = extract_chunk_features(
@@ -324,7 +324,7 @@ def multimodal_chunk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(index_path)
     idx = spark.read.parquet(index_path)
     qvec = embed_text(_CHUNK_QUERY, dim=64)
-    qcol = F.lit([float(x) for x in qvec]).cast("array<double>")
+    qcol = array_lit(qvec, "double")
     sc = idx.select(
         "media_id",
         "chunk_start_ms",

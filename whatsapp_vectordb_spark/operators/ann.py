@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import math
 import os
+import warnings
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame
 from whatsapp_vectordb_spark.session import local_df
 from pyspark.sql import functions as F
 
-from whatsapp_vectordb_spark.functions.vector import cosine_similarity
+from whatsapp_vectordb_spark.functions.vector import array_lit, cosine_similarity
 from whatsapp_vectordb_spark.operators.search import topk
 
 
@@ -104,7 +105,7 @@ def _signature_col(vec_col, planes: np.ndarray):
     aggregate HOFs per plane, whole-stage codegen'd."""
     bits = []
     for row in planes:
-        plane = F.array(*[F.lit(float(x)) for x in row])
+        plane = array_lit(row, "double")
         dot = F.aggregate(
             F.zip_with(vec_col, plane, lambda x, y: x.cast("double") * y),
             F.lit(0.0),
@@ -212,7 +213,7 @@ def portable_signature(vec_col, planes: list[list[int]]):
     )
     bits = []
     for row in planes:
-        plane = F.array(*[F.lit(int(s)) for s in row])
+        plane = array_lit(row, "int")
         dot = F.aggregate(
             F.zip_with(q, plane, lambda a, b: a * b),
             F.lit(0).cast("long"),
@@ -1854,7 +1855,7 @@ def graph_beam_topk(
     set undersamples the allowed region (widen beam/iters, or use the
     cell-probe tiers whose pre-scan filter guarantees k matches).
     """
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    qlit = array_lit(query_vec, "double")
     vecs = df.select(F.col(id_col), F.col(vec_col))
 
     def scored(ids: DataFrame) -> DataFrame:
@@ -2707,8 +2708,8 @@ def sq8_encode(
     bit-packed/RLE encoding of the ≤8-bit values lands at ~1 B/dim on
     disk, the ~4× cut vs float32 that makes the codes table the thing
     you scan."""
-    mn = F.array(*[F.lit(float(v)) for v in mins])
-    dl = F.array(*[F.lit(float(v)) for v in deltas])
+    mn = array_lit(mins, "double")
+    dl = array_lit(deltas, "double")
     centered = F.zip_with(
         F.col(vec_col), mn, lambda x, m: x.cast("double") - m
     )
@@ -2779,7 +2780,7 @@ def sq8_topk(
         return partial.orderBy(
             F.col("score_int").desc(), F.col(id_col).asc()
         ).limit(k)
-    warr = F.array(*[F.lit(v).cast("long") for v in w])
+    warr = array_lit(w, "bigint")
     score = F.aggregate(
         F.zip_with(F.col("sq8_codes"), warr, lambda c, wv_: c * wv_),
         F.lit(0).cast("long"),
@@ -4581,11 +4582,23 @@ class IvfSq8Index:
         form posexplodes N·dim rows through a shuffle) and the MLlib
         ``model.transform`` + aggregate behind ``cell_stats``. The
         scaler is bit-identical to ``sq8_train`` in either impl (min/max
-        are exact in any association; ``train_impl`` is kept for API
-        compatibility); the tripwire now thresholds ``max_share`` of the
-        house assignment over the ENCODED corpus — the layout actually
-        being persisted — rather than MLlib's assignment of the fit
-        sample (same decision on every gate corpus, asserted by test)."""
+        are exact in any association). ``train_impl`` is DEPRECATED and
+        ignored: any value but the default ``"expr"`` warns
+        (``DeprecationWarning``). The degenerate-layout tripwire now
+        thresholds ``max_share`` of the house nearest-centroid
+        assignment of the FULL corpus — the layout actually being
+        persisted — not MLlib's assignment of the fit sample. Same
+        decision on every gate corpus (asserted by test); on other data
+        sample-vs-corpus shares and tie-breaking can differ, so the
+        rebuild decision can too."""
+        if train_impl != "expr":
+            warnings.warn(
+                "IvfSq8Index.build(train_impl=...) is deprecated and ignored: "
+                "the SQ8 scaler is always trained by the fused Arrow pass "
+                "(bit-identical to either impl)",
+                DeprecationWarning,
+                stacklevel=2,
+            )
         fit_on = df
         if sample_rows is not None:
             n = df.count()
@@ -5712,8 +5725,8 @@ def sq8_topk_euclidean(
         return partial.orderBy(
             F.col("score_int").asc(), F.col(id_col).asc()
         ).limit(k)
-    aarr = F.array(*[F.lit(v).cast("long") for v in a])
-    barr = F.array(*[F.lit(v).cast("long") for v in b])
+    aarr = array_lit(a, "bigint")
+    barr = array_lit(b, "bigint")
     s_sq = F.aggregate(
         F.zip_with(
             F.col("sq8_codes"), aarr, lambda c, av: c.cast("long") * c * av

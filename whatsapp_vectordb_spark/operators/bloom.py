@@ -25,14 +25,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from whatsapp_vectordb_spark.functions.vector import array_lit
+
 WORD_BITS = 32
 
 def _pow2() -> Column:
     """pyspark's shiftleft() takes only a literal shift amount, so
     1 << (p % 32) is a 32-entry power-of-two lookup instead — same
-    integers in any engine. One ArrayType literal node (F.lit on a list),
-    not 32 child Literal nodes — keeps expression trees codegen-small."""
-    return F.lit([1 << b for b in range(WORD_BITS)]).cast("array<long>")
+    integers in any engine. One constant-folded ArrayType literal, not 32
+    child Literal nodes — keeps expression trees codegen-small."""
+    return array_lit([1 << b for b in range(WORD_BITS)], "bigint")
 
 
 def _positions(key: Column, n_bits: int, k: int) -> list[Column]:
@@ -81,10 +83,10 @@ def bloom_might_contain(
     dense = [0] * (n_bits // WORD_BITS)
     for w, b in words:
         dense[int(w)] = int(b)
-    # ONE ArrayType literal node: F.array(*1024 lits) built a ~4k-node
-    # expression tree (referenced k times) that blew past codegen limits
-    # and fell back to interpreted eval — measured 2.4× slower end-to-end
-    arr = F.lit([int(x) for x in dense]).cast("array<long>")
+    # ONE constant-folded ArrayType literal: a ~4k-node expression tree of
+    # per-element casts (referenced k times) blew past codegen limits and
+    # fell back to interpreted eval — measured 2.4× slower end-to-end
+    arr = array_lit(dense, "bigint")
     cond = F.lit(True)
     for p in _positions(key, n_bits, k):
         word = F.element_at(arr, (p / WORD_BITS).cast("int") + 1)

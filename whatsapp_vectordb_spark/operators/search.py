@@ -39,11 +39,15 @@ from whatsapp_vectordb_spark.session import local_df
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from whatsapp_vectordb_spark.functions.vector import metric_ascending, similarity_score
+from whatsapp_vectordb_spark.functions.vector import (
+    array_lit,
+    metric_ascending,
+    similarity_score,
+)
 
 
 def _query_vec_lit(query_vec) -> Column:
-    return F.array(*[F.lit(float(x)) for x in query_vec])
+    return array_lit(query_vec, "double")
 
 
 def _order(score: Column, id_col: Column, metric: str) -> list[Column]:
@@ -338,7 +342,7 @@ def mmr_rerank(
             "Re-rank a smaller exact-top shortlist, or raise k-NN k instead."
         )
     spark = index.sparkSession
-    qcol = F.lit([float(x) for x in query_vec]).cast("array<double>")
+    qcol = array_lit(query_vec, "double")
     rel6 = F.round(cosine_similarity(F.col(vec_col), qcol) * 1_000_000).cast("long")
     cand = (
         index.select(F.col(id_col), F.col(vec_col), rel6.alias("rel"))

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from whatsapp_vectordb_spark.functions.text import portable_hash64
+from whatsapp_vectordb_spark.functions.vector import array_lit
 
 # rank width: the 60-bit hash splits into log2m register bits + W rank bits
 HLL_W = 44
@@ -187,7 +188,7 @@ def heavy_hitters(
     c = F.col(value_col)
     ests = [
         F.element_at(
-            F.array(*[F.lit(int(v)) for v in grid[r]]),
+            array_lit(grid[r], "int"),
             (F.pmod(portable_hash64(c.cast("string"), seed=r), F.lit(width)) + 1).cast(
                 "int"
             ),

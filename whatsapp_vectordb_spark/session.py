@@ -114,15 +114,13 @@ def local_df(spark: SparkSession, data, schema=None):
                 # float NaN is folded to NULL by the pandas/Arrow detour
                 # (pyarrow treats NaN-as-null) where the row path keeps
                 # NaN — the r17-verdict latent edge; fall back on any NaN
-                # (top level or one list level down; these frames are
-                # driver-local kilobytes, the scan is free)
+                # at any list/tuple depth (array<array<double>>, structs;
+                # these frames are driver-local kilobytes, the scan is free)
                 def _nan(v):
                     if isinstance(v, float):
                         return v != v
                     if isinstance(v, (list, tuple)):
-                        return any(
-                            isinstance(x, float) and x != x for x in v
-                        )
+                        return any(_nan(x) for x in v)
                     return False
 
                 if any(_nan(v) for r in data for v in r):
