@@ -2041,19 +2041,19 @@ def test_parse_batch_seq_rejects_nonwriter_shapes():
     uuid-only dir — which never contains an underscore — orders as
     legacy seq 0 even when its 32 hex chars are coincidentally all
     decimal; and seqs past 10^8-1 (f"{seq:08d}" grows to 9+ digits)
-    keep parsing instead of silently freezing _next_batch_seq."""
-    from whatsapp_vectordb_spark.operators.ann import _parse_batch_seq
+    keep parsing instead of silently freezing seq allocation."""
+    from whatsapp_vectordb_spark.commitlog import _parse_seq
 
-    assert _parse_batch_seq("00000007_" + "a" * 32) == 7
-    assert _parse_batch_seq("12345678_" + "f" * 32) == 12345678
+    assert _parse_seq("00000007_" + "a" * 32) == 7
+    assert _parse_seq("12345678_" + "f" * 32) == 12345678
     # the 10^8-th commit: 9-digit head must keep parsing (not reset to 0)
-    assert _parse_batch_seq("100000000_" + "0" * 22) == 100_000_000
+    assert _parse_seq("100000000_" + "0" * 22) == 100_000_000
     # legacy uuid-only dir, all-decimal hex: no underscore → legacy 0
-    assert _parse_batch_seq("1" * 32) == 0
+    assert _parse_seq("1" * 32) == 0
     # a head narrower than the writer's zero-padding is not a seq
-    assert _parse_batch_seq("1234567_" + "0" * 24) == 0
+    assert _parse_seq("1234567_" + "0" * 24) == 0
     # plain legacy uuid (mixed hex) still legacy
-    assert _parse_batch_seq("deadbeefdeadbeefdeadbeefdeadbeef") == 0
+    assert _parse_seq("deadbeefdeadbeefdeadbeefdeadbeef") == 0
 
 
 def test_upsert_batch_with_duplicate_ids_keeps_one_row(
@@ -2325,11 +2325,11 @@ def test_writer_lease_two_threads_exactly_one_wins(
     ConcurrentWriterError instead of double-allocating a commit seq."""
     import threading
 
-    from whatsapp_vectordb_spark.operators.ann import (
+    from whatsapp_vectordb_spark.commitlog import (
         ConcurrentWriterError,
-        IvfSq8Index,
         _writer_lease,
     )
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
 
     emb = embeddings.select("vec_id", "embedding")
     path = str(tmp_path / "lease_race")
@@ -2376,10 +2376,8 @@ def test_writer_lease_two_processes_exactly_one_wins(
     import sys as _sys
     import time as _time
 
-    from whatsapp_vectordb_spark.operators.ann import (
-        ConcurrentWriterError,
-        IvfSq8Index,
-    )
+    from whatsapp_vectordb_spark.commitlog import ConcurrentWriterError
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
 
     emb = embeddings.select("vec_id", "embedding")
     path = str(tmp_path / "lease_proc")
@@ -2392,7 +2390,7 @@ def test_writer_lease_two_processes_exactly_one_wins(
             _sys.executable,
             "-c",
             "import sys, time; sys.path.insert(0, sys.argv[2]);"
-            "from whatsapp_vectordb_spark.operators.ann import _writer_lease;"
+            "from whatsapp_vectordb_spark.commitlog import _writer_lease;"
             "l = _writer_lease(sys.argv[1], 'other_process');"
             "l.__enter__(); print('HELD', flush=True); time.sleep(60)",
             path,
@@ -2437,10 +2435,8 @@ def test_writer_lease_breaks_stale_and_rejects_live(
     is respected with a loud error."""
     import json
 
-    from whatsapp_vectordb_spark.operators.ann import (
-        ConcurrentWriterError,
-        IvfSq8Index,
-    )
+    from whatsapp_vectordb_spark.commitlog import ConcurrentWriterError
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
 
     emb = embeddings.select("vec_id", "embedding")
     path = str(tmp_path / "lease_stale")
@@ -2480,8 +2476,8 @@ def test_duplicate_commit_seq_fails_loudly_on_read(
     layout_mutation_stats, and the fold all trip."""
     import shutil
 
+    from whatsapp_vectordb_spark.commitlog import ConcurrentWriterError
     from whatsapp_vectordb_spark.operators.ann import (
-        ConcurrentWriterError,
         IvfSq8Index,
         layout_mutation_stats,
         layout_snapshots,
@@ -3275,7 +3271,7 @@ def test_verify_layout_flags_duplicate_seq_and_orphans(
 
     rep = verify_layout(path)
     assert not rep["ok"]
-    assert any("duplicate mutation seq" in e for e in rep["errors"])
+    assert any("duplicate commit seq" in e for e in rep["errors"])
     assert any("_staging" in w for w in rep["warnings"])
 
 
@@ -3427,18 +3423,3 @@ def test_ivf_sq8_search_plan_cost_flat_in_dim(spark):
             clientserver.ClientServerConnection.send_command = send
         counts[dim] = n[0]
     assert abs(counts[256] - counts[16]) <= 16, counts
-
-
-def test_ivf_sq8_build_train_impl_deprecated(spark, embeddings):
-    """``train_impl`` is ignored (the fused Arrow pass always trains the
-    scaler); a non-default value says so instead of passing silently."""
-    import warnings
-
-    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
-
-    emb = embeddings.select("vec_id", "embedding").limit(200)
-    with pytest.warns(DeprecationWarning, match="train_impl"):
-        IvfSq8Index.build(emb, n_centroids=4, train_impl="numpy")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", DeprecationWarning)
-        IvfSq8Index.build(emb, n_centroids=4)

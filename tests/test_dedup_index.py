@@ -174,14 +174,14 @@ def test_winnow_index_crash_retry_keeps_pairs_durable(spark, tmp_path):
     b2 = docs.where("doc_id >= 3")
 
     # batch 0: crash AFTER the durable pairs write, BEFORE the append commit
-    real_commit = idx._commit_append
-    def boom(fp_new):
+    real_commit = idx._commit_batch
+    def boom(frames):
         raise RuntimeError("simulated crash before fingerprint commit")
-    idx._commit_append = boom
+    idx._commit_batch = boom
     import pytest as _pt
     with _pt.raises(RuntimeError):
         idx.add_batch(b1, pairs_path=pairs_dir, batch_key=0)
-    idx._commit_append = real_commit
+    idx._commit_batch = real_commit
     # retry: docs not yet stored, so the batch recomputes and overwrites
     idx.add_batch(b1, pairs_path=pairs_dir, batch_key=0)
 
@@ -327,8 +327,8 @@ def test_minhash_index_crash_mid_compact_leaves_old_state_readable(
 
 
 def test_winnow_index_compact_preserves_probe_results(spark, tmp_path):
-    """Winnow twin: loose per-batch files merge into one compact_<uuid>
-    dir; fingerprint state is bit-identical and later batches still pair
+    """Winnow twin: per-batch dirs merge into one compacted batch dir;
+    fingerprint state is bit-identical and later batches still pair
     against pre-compaction docs."""
     import os
 
@@ -353,17 +353,17 @@ def test_winnow_index_compact_preserves_probe_results(spark, tmp_path):
     idx = WinnowDedupIndex(spark, str(tmp_path / "wn_c"), min_shared=2)
     idx.add_batch(docs1)
     idx.add_batch(docs2)
-    fp = MinHashDedupIndex._content_fingerprint(idx._stored())
-    assert len(idx._live_entries()) == 2
+    fp = MinHashDedupIndex._content_fingerprint(idx._stored("fingerprints"))
+    assert len(idx._live_batch_dirs()) == 2
 
     merged = idx.compact()
     assert merged == 2
-    assert len(idx._live_entries()) == 1
+    assert len(idx._live_batch_dirs()) == 1
     # superseded entries RETAINED until vacuum (r17)
-    assert len(os.listdir(idx._fp_path)) == 3
+    assert len(os.listdir(idx._batches_path)) == 3
     idx.vacuum()
-    assert len(os.listdir(idx._fp_path)) == 1
-    assert MinHashDedupIndex._content_fingerprint(idx._stored()) == fp
+    assert len(os.listdir(idx._batches_path)) == 1
+    assert MinHashDedupIndex._content_fingerprint(idx._stored("fingerprints")) == fp
     assert idx.compact() == 0
 
     pairs = {(r["id_a"], r["id_b"]) for r in idx.add_batch(docs3).collect()}
@@ -393,7 +393,7 @@ def test_winnow_index_crash_mid_compact_leaves_old_state_readable(
             "doc_id long, text string",
         )
     )
-    fp = MinHashDedupIndex._content_fingerprint(idx._stored())
+    fp = MinHashDedupIndex._content_fingerprint(idx._stored("fingerprints"))
 
     def boom(src, dst):
         raise OSError("simulated crash before commit rename")
@@ -404,18 +404,18 @@ def test_winnow_index_crash_mid_compact_leaves_old_state_readable(
     except OSError:
         pass
     monkeypatch.undo()
-    assert len(idx._live_entries()) == 2
-    assert MinHashDedupIndex._content_fingerprint(idx._stored()) == fp
+    assert len(idx._live_batch_dirs()) == 2
+    assert MinHashDedupIndex._content_fingerprint(idx._stored("fingerprints")) == fp
 
     # committed compaction with deletion suppressed: dead entries invisible
-    monkeypatch.setattr(WinnowDedupIndex, "_gc_dead_entries", lambda self: None)
+    monkeypatch.setattr(WinnowDedupIndex, "_gc_dead_batches", lambda self: None)
     assert idx.compact() == 2
     monkeypatch.undo()
-    assert len(os.listdir(idx._fp_path)) == 3  # 2 dead files + 1 compact dir
-    assert len(idx._live_entries()) == 1
-    assert MinHashDedupIndex._content_fingerprint(idx._stored()) == fp
-    idx._gc_dead_entries()
-    assert len(os.listdir(idx._fp_path)) == 1
+    assert len(os.listdir(idx._batches_path)) == 3  # 2 dead dirs + 1 compacted dir
+    assert len(idx._live_batch_dirs()) == 1
+    assert MinHashDedupIndex._content_fingerprint(idx._stored("fingerprints")) == fp
+    idx._gc_dead_batches()
+    assert len(os.listdir(idx._batches_path)) == 1
 
 
 def test_staging_gc_sweeps_orphaned_dirs(spark, tmp_path):
@@ -531,21 +531,37 @@ def test_semdedup_index_greedy_election_and_reingest(spark, embeddings, tmp_path
     emb.unpersist()
 
 
-def test_winnow_compact_with_dataless_entries_is_noop(spark, tmp_path):
-    """ADVICE r14: >1 live entries none of which yields parquet data
-    (e.g. compact dirs whose data subdir was lost) must make compact()
-    a clean no-op (return 0), not an AttributeError from fingerprinting
-    a None frame."""
+def _assert_dataless_compact_is_noop(idx):
+    """>1 live dirs none of which holds parquet (e.g. dirs whose table
+    subdirs were lost) leave nothing to merge: compact() returns 0 and
+    publishes nothing."""
     import os
 
+    for name in (f"{1:08d}_{'a' * 32}", f"{2:08d}_{'b' * 32}"):
+        os.makedirs(os.path.join(idx._batches_path, name))
+    assert len(idx._live_batch_dirs()) == 2
+    assert all(idx._stored(t) is None for t in idx._TABLES)
+    assert idx.compact() == 0
+    assert len(os.listdir(idx._batches_path)) == 2
+
+
+def test_winnow_compact_with_dataless_entries_is_noop(spark, tmp_path):
+    """ADVICE r14: must be a clean no-op, not an AttributeError from
+    fingerprinting a None frame."""
     from whatsapp_vectordb_spark.operators.dedup_index import WinnowDedupIndex
 
-    idx = WinnowDedupIndex(spark, str(tmp_path / "w_idx"), k=5, w=4, min_shared=2)
-    for name in ("compact_lost_a", "compact_lost_b"):
-        os.makedirs(os.path.join(idx._fp_path, name))
-    assert len(idx._live_entries()) == 2
-    assert idx._stored() is None
-    assert idx.compact() == 0
+    _assert_dataless_compact_is_noop(
+        WinnowDedupIndex(spark, str(tmp_path / "w_idx"), k=5, w=4, min_shared=2)
+    )
+
+
+def test_minhash_compact_with_dataless_dirs_is_noop(spark, tmp_path):
+    """The shared compact() publishes no manifest-only dir."""
+    from whatsapp_vectordb_spark.operators.dedup_index import MinHashDedupIndex
+
+    _assert_dataless_compact_is_noop(
+        MinHashDedupIndex(spark, str(tmp_path / "mh_idx"), threshold=0.5)
+    )
 
 
 # ------------------------------------------------------- time travel (r17)
@@ -711,8 +727,8 @@ def test_dedup_index_maintenance_tick_policy(spark, documents, tmp_path):
     widx = WinnowDedupIndex(spark, str(tmp_path / "wn_tick"), min_shared=2)
     widx.add_batch(docs.where(F.col("doc_id") % 2 == 0))
     widx.add_batch(docs.where(F.col("doc_id") % 2 == 1))
-    assert widx.maintenance_tick(max_live_entries=8)["compacted"] is False
-    out = widx.maintenance_tick(max_live_entries=1)
+    assert widx.maintenance_tick(max_live_dirs=8)["compacted"] is False
+    out = widx.maintenance_tick(max_live_dirs=1)
     assert out["compacted"] and out["live_dirs_after"] == 1
     docs.unpersist()
 
@@ -723,20 +739,21 @@ def test_dedup_index_maintenance_tick_policy(spark, documents, tmp_path):
 # --------------------------------------------------------------------------
 
 
-def _built_mh_index(spark, documents, tmp_path, name):
+def _built_index(spark, documents, tmp_path, name, cls=None):
+    """Two committed batches on a MinHash index (or on ``cls``)."""
     from whatsapp_vectordb_spark.operators.dedup_index import MinHashDedupIndex
 
     docs = documents.select("doc_id", "text").limit(80)
-    idx = MinHashDedupIndex(spark, str(tmp_path / name), threshold=0.5)
+    if cls is None:
+        idx = MinHashDedupIndex(spark, str(tmp_path / name), threshold=0.5)
+    else:
+        idx = cls(spark, str(tmp_path / name))
     idx.add_batch(docs.where(F.col("doc_id") < 40))
     idx.add_batch(docs.where(F.col("doc_id") >= 40))
     return idx
 
 
-def test_dedup_index_verify_clean_and_deep_after_compaction(
-    spark, documents, tmp_path
-):
-    idx = _built_mh_index(spark, documents, tmp_path, "fsck_mh_clean")
+def _check_verify_clean_and_deep(idx):
     rep = idx.verify()
     assert rep["ok"] and rep["errors"] == [] and rep["warnings"] == []
     assert rep["info"]["state_dirs"] == 2
@@ -748,14 +765,11 @@ def test_dedup_index_verify_clean_and_deep_after_compaction(
     assert any(v == "ok" for _, _, v in deep["info"]["deep_checked"])
 
 
-def test_dedup_index_verify_flags_duplicate_seq_orphans_and_stale_lease(
-    spark, documents, tmp_path
-):
+def _check_verify_flags_duplicate_seq_orphans_and_stale_lease(idx):
     import json
     import os
     import shutil
 
-    idx = _built_mh_index(spark, documents, tmp_path, "fsck_mh_bad")
     bdir = idx._batches_path
     victim = sorted(os.listdir(bdir))[0]
     forged = f"{victim.split('_')[0]}_{'e' * 32}"
@@ -775,13 +789,45 @@ def test_dedup_index_verify_flags_duplicate_seq_orphans_and_stale_lease(
     assert any("stale _writer.lock" in w for w in rep["warnings"])
 
 
+def test_dedup_index_verify_clean_and_deep_after_compaction(
+    spark, documents, tmp_path
+):
+    _check_verify_clean_and_deep(
+        _built_index(spark, documents, tmp_path, "fsck_mh_clean")
+    )
+
+
+def test_dedup_index_verify_flags_duplicate_seq_orphans_and_stale_lease(
+    spark, documents, tmp_path
+):
+    _check_verify_flags_duplicate_seq_orphans_and_stale_lease(
+        _built_index(spark, documents, tmp_path, "fsck_mh_bad")
+    )
+
+
+def test_winnow_index_verify_clean_deep_and_flags_duplicate_seq(
+    spark, documents, tmp_path
+):
+    """The Winnow tier inherits the batch-dir fsck: clean after two
+    batches and a compaction (deep replay included), and a forged
+    duplicate seq is an error."""
+    from whatsapp_vectordb_spark.operators.dedup_index import WinnowDedupIndex
+
+    _check_verify_clean_and_deep(
+        _built_index(spark, documents, tmp_path, "fsck_wn_clean", WinnowDedupIndex)
+    )
+    _check_verify_flags_duplicate_seq_orphans_and_stale_lease(
+        _built_index(spark, documents, tmp_path, "fsck_wn_bad", WinnowDedupIndex)
+    )
+
+
 def test_dedup_index_verify_deep_catches_tampered_retained_victim(
     spark, documents, tmp_path
 ):
     import glob
     import os
 
-    idx = _built_mh_index(spark, documents, tmp_path, "fsck_mh_tamper")
+    idx = _built_index(spark, documents, tmp_path, "fsck_mh_tamper")
     assert idx.compact() == 2
     # corrupt a RETAINED victim: the pre-compaction bound no longer
     # reproduces what the compaction published
@@ -804,7 +850,7 @@ def test_dedup_index_verify_unreadable_manifest_warns(
 ):
     import os
 
-    idx = _built_mh_index(spark, documents, tmp_path, "fsck_mh_manifest")
+    idx = _built_index(spark, documents, tmp_path, "fsck_mh_manifest")
     assert idx.compact() == 2
     live = idx._live_batch_dirs()
     man = os.path.join(idx._batches_path, live[0], "replaces.json")

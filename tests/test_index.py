@@ -329,7 +329,7 @@ def test_vector_index_mutations_hold_the_writer_lease(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from whatsapp_vectordb_spark.index import VectorIndex
-    from whatsapp_vectordb_spark.operators.ann import (
+    from whatsapp_vectordb_spark.commitlog import (
         ConcurrentWriterError,
         _writer_lease,
     )

@@ -127,7 +127,9 @@ def main() -> None:
     try:
         idx = WinnowDedupIndex(spark, root, k=5, w=4, min_shared=2)
         t0 = time.perf_counter()
-        fps.write.mode("overwrite").parquet(os.path.join(root, "fingerprints"))
+        fps.write.mode("overwrite").parquet(
+            os.path.join(idx._batches_path, "seed", "fingerprints")
+        )
         out["seed_s"] = round(time.perf_counter() - t0, 2)
         base_id = (replicas + 100) * 10_000_000
         batches = [

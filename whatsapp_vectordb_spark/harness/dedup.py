@@ -1026,10 +1026,10 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register("dedup_winnow_index_compact", _winnow_pairs_sql(5, 4, 2, _AUG_SQL))
 def dedup_winnow_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnow twin of ``dedup_index_compact``: the per-batch single-file
-    commits accumulate one file per micro-batch; ``compact()`` merges
-    them into one ``compact_<uuid>`` dir (manifest supersession, single
-    rename, checksum gate). Batch 3 probes the compacted fingerprint
+    """Winnow twin of ``dedup_index_compact``: the per-batch atomic dir
+    commits accumulate one dir per micro-batch; ``compact()`` merges
+    them into one batch dir (manifest supersession, single rename,
+    checksum gate). Batch 3 probes the compacted fingerprint
     inverted index; the one-shot SQL oracle hash-gates that no
     fingerprint row was lost or duplicated (either would shift an
     ``n_shared`` count across the ``min_shared`` threshold)."""
@@ -1272,7 +1272,7 @@ _WN_TT_SRC = f"SELECT doc_id, text FROM ({_AUG_SQL}) WHERE doc_id % 4 IN (0, 1, 
 )
 def dedup_winnow_index_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-tier time travel — same scenario, same bound, over the
-    winnowing-fingerprint index (loose per-batch files + a retained
+    winnowing-fingerprint index (per-batch dirs + a retained
     compaction dir): ``pairs_at(3)`` returns every pair sharing >= 2
     fingerprints within the first three batches' corpus."""
     import shutil

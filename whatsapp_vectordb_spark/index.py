@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from whatsapp_vectordb_spark.session import local_df
 from pyspark.sql import functions as F
 
+from whatsapp_vectordb_spark.commitlog import _writer_lease
 from whatsapp_vectordb_spark.types import DEFAULT_METRIC, METRICS
 
 
@@ -44,8 +45,6 @@ def _single_writer(verb: str):
     def deco(fn):
         @functools.wraps(fn)
         def wrapper(self, *args, **kwargs):
-            from whatsapp_vectordb_spark.operators.ann import _writer_lease
-
             with _writer_lease(
                 self.path, verb, lock_path=self.path + ".writer.lock"
             ):

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import math
 import os
-import warnings
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -31,6 +30,14 @@ from pyspark.sql import DataFrame
 from whatsapp_vectordb_spark.session import local_df
 from pyspark.sql import functions as F
 
+from whatsapp_vectordb_spark.commitlog import (
+    _batch_names_checked,
+    _commit,
+    _fsck,
+    _gc_staging,
+    _parse_seq,
+    _writer_lease,
+)
 from whatsapp_vectordb_spark.functions.vector import array_lit, cosine_similarity
 from whatsapp_vectordb_spark.operators.search import topk
 
@@ -3155,204 +3162,14 @@ def batched_exact_rerank(
     )
 
 
-def _parse_batch_seq(name: str) -> int:
-    """Mutation-order sequence from a committed batch dir name
-    (``<seq>_<uuid>``). Legacy uuid-only dirs (layouts written before
-    the mutation verbs existed) order as 0 — alongside the base: they
-    predate any delete commit, so a later tombstone correctly masks
-    them, and a later re-add (higher seq) correctly survives.
-
-    The writer's format is ``f"{seq:08d}_{uuid}"`` (``add_batch``) — a
-    zero-padded AT-LEAST-8-digit decimal head followed by an underscore
-    (``:08d`` grows past 8 digits without truncating, so seqs beyond
-    10^8-1 still parse; an exactly-8 requirement would silently return
-    0 for them, freezing ``_next_batch_seq`` and mis-ordering every
-    later commit — review finding). A legacy uuid-only dir has NO
-    underscore, so even one whose 32 hex chars are coincidentally all
-    decimal digits cannot parse as an astronomically large seq (the
-    ADVICE r15 hazard)."""
-    if "_" not in name:
-        return 0
-    head = name.split("_", 1)[0]
-    return int(head) if head.isdigit() and len(head) >= 8 else 0
-
-
 def _committed_batches(path: str) -> list[str]:
-    """Committed batch-dir names for a saved layout, sorted — with the
-    DUPLICATE-SEQ tripwire (r16 verdict #1): two dirs parsing the same
-    mutation seq ≥ 1 mean two writers allocated the same sequence
-    number (``<seq>_<uuidA>`` and ``<seq>_<uuidB>`` are distinct rename
-    targets, so both commits 'succeed') — the strictly-older tombstone
-    mask cannot order equal seqs, and a silent union of both would
-    serve an arbitrary merge of two writers' states. Every read of the
-    commit log goes through here, so a violated single-writer contract
-    fails LOUDLY at the next load/stats/fold instead of serving wrong
-    rows. Seq 0 is exempt: legacy uuid-only dirs (pre-mutation-verb
-    layouts) all parse as 0 by design and are append-only data."""
+    """Committed batch-dir names for a saved layout, sorted, through the
+    duplicate-seq tripwire (``commitlog._batch_names_checked``): the
+    strictly-older tombstone mask cannot order two commits at one seq,
+    so every read of the commit log refuses them."""
     return _batch_names_checked(
         os.path.join(path, "batches"), f"layout at {path!r}"
     )
-
-
-def _next_batch_seq(path: str) -> int:
-    """Next mutation sequence number for a saved layout — 1 + the max
-    committed batch/delete seq. Callers hold the writer lease
-    (``_writer_lease``) across this allocation AND the commit rename —
-    the listdir-max+1 is only safe single-writer."""
-    return 1 + max(
-        (_parse_batch_seq(b) for b in _committed_batches(path)), default=0
-    )
-
-
-class ConcurrentWriterError(RuntimeError):
-    """A second writer contended for (or already corrupted) a saved
-    layout's single-writer mutation contract."""
-
-
-# in-process lease registry: realpath -> [thread_ident, depth]. The
-# lease FILE gives cross-process mutual exclusion (O_CREAT|O_EXCL);
-# this registry gives (a) same-thread REENTRANCY — upsert→add_batch,
-# maintenance_tick→save, rebuild→save all nest writer verbs — and
-# (b) cross-thread exclusion inside one process, where the pid in the
-# lease file cannot distinguish threads.
-import threading as _threading
-
-_LEASES: dict[str, list[int]] = {}
-_LEASES_GUARD = _threading.Lock()
-
-
-class _writer_lease:
-    """THE single-writer contract, enforced (r16 verdict #1): every
-    verb that commits to a saved layout — ``add_batch``/``upsert``/
-    ``delete`` with a path, ``save``/fold, ``maintenance_tick``,
-    ``rebuild_layout``, ``apply_cdc_events`` — acquires
-    ``<path>/_writer.lock`` with ``O_CREAT|O_EXCL`` (atomic on POSIX
-    and on the object-store semantics HDFS exposes for create-no-
-    overwrite) before allocating a mutation seq, and releases it after
-    the commit rename. A contending writer gets a loud
-    ``ConcurrentWriterError`` naming the holder instead of silently
-    double-allocating a seq (the failure ``_committed_batches`` would
-    otherwise only catch after the corruption lands).
-
-    STALE leases (a writer that died holding the lock): broken when
-    the recorded pid is dead on this host, or the lease age exceeds
-    ``ttl`` seconds (the cross-host backstop — a real cluster would
-    carry a fencing token; the ttl mirrors Delta's lease-expiry
-    posture). Breaking re-contends through O_EXCL, so two breakers
-    still serialize. Reentrant per (process, thread): nested verbs on
-    the same layout share the outer hold."""
-
-    def __init__(
-        self,
-        path: str,
-        verb: str,
-        ttl: float = 3600.0,
-        lock_path: str | None = None,
-    ):
-        self.path = path
-        self.verb = verb
-        self.ttl = ttl
-        self.key = os.path.realpath(path)
-        # lock_path: for artifacts whose data dir is itself REPLACED by a
-        # whole-directory swap (VectorIndex's generation rename), the
-        # lease must live BESIDE the dir, not inside it — a lock inside
-        # would vanish mid-hold with the old generation
-        self.lease = lock_path or os.path.join(path, "_writer.lock")
-
-    def __enter__(self):
-        import json as _json
-        import time as _time
-
-        me = _threading.get_ident()
-        with _LEASES_GUARD:
-            held = _LEASES.get(self.key)
-            if held is not None:
-                if held[0] == me:
-                    held[1] += 1
-                    return self
-                raise ConcurrentWriterError(
-                    f"{self.verb}: another thread of this process holds "
-                    f"the writer lease on {self.path!r}"
-                )
-        os.makedirs(os.path.dirname(self.lease) or ".", exist_ok=True)
-        for attempt in (0, 1):
-            try:
-                fd = os.open(self.lease, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                holder = self._read_holder()
-                if attempt == 0 and self._is_stale(holder, _time.time()):
-                    # break-and-retry re-contends through O_EXCL: of two
-                    # concurrent breakers, exactly one wins the re-create
-                    try:
-                        os.unlink(self.lease)
-                    except FileNotFoundError:
-                        pass
-                    continue
-                raise ConcurrentWriterError(
-                    f"{self.verb}: layout at {self.path!r} is held by "
-                    f"another writer ({holder!r}); concurrent mutation "
-                    "would double-allocate a commit seq — retry after the "
-                    "holder finishes, or remove a stale _writer.lock"
-                ) from None
-            with os.fdopen(fd, "w") as f:
-                _json.dump(
-                    {
-                        "pid": os.getpid(),
-                        "host": os.uname().nodename,
-                        "verb": self.verb,
-                        "acquired_at": _time.time(),
-                    },
-                    f,
-                )
-            break
-        with _LEASES_GUARD:
-            _LEASES[self.key] = [me, 1]
-        return self
-
-    def _read_holder(self) -> dict:
-        import json as _json
-
-        try:
-            with open(self.lease) as f:
-                return _json.load(f)
-        except (OSError, ValueError):
-            # mid-write or already-broken lease: treat as anonymous —
-            # the ttl (file mtime) still applies via _is_stale
-            return {}
-
-    def _is_stale(self, holder: dict, now: float) -> bool:
-        if holder.get("host") == os.uname().nodename and isinstance(
-            holder.get("pid"), int
-        ):
-            try:
-                os.kill(holder["pid"], 0)
-                return False  # holder alive on this host
-            except ProcessLookupError:
-                return True  # holder died without releasing
-            except PermissionError:
-                return False  # alive, different uid
-        try:
-            age = now - float(holder.get("acquired_at", "nan"))
-            if age == age:  # not NaN
-                return age > self.ttl
-            return now - os.path.getmtime(self.lease) > self.ttl
-        except OSError:
-            return True  # lease vanished under us — re-contend
-
-    def __exit__(self, *exc):
-        with _LEASES_GUARD:
-            held = _LEASES.get(self.key)
-            if held is None or held[0] != _threading.get_ident():
-                return False
-            held[1] -= 1
-            if held[1] > 0:
-                return False
-            del _LEASES[self.key]
-        try:
-            os.unlink(self.lease)
-        except FileNotFoundError:
-            pass
-        return False
 
 
 def _require_writable(idx, verb: str) -> None:
@@ -3428,26 +3245,6 @@ def _fold_info(path: str, epoch: int) -> dict:
         ) from None
 
 
-def _batch_names_checked(bdir: str, where: str) -> list[str]:
-    """Sorted committed batch-dir names under ``bdir`` with the
-    duplicate-seq tripwire (see ``_committed_batches``)."""
-    names = sorted(os.listdir(bdir)) if os.path.isdir(bdir) else []
-    seen: dict[int, str] = {}
-    for b in names:
-        s = _parse_batch_seq(b)
-        if s >= 1 and s in seen:
-            raise ConcurrentWriterError(
-                f"{where} holds two commits at mutation seq {s} "
-                f"({seen[s]!r} and {b!r}) — a second writer violated "
-                "the single-writer contract (the _writer.lock lease "
-                "prevents this when every writer honors it); the layout "
-                "cannot be ordered and must be repaired by removing the "
-                "losing commit before any read or fold"
-            )
-        seen[s] = b
-    return names
-
-
 def _epoch_batch_dir(path: str, epoch: int, current: int) -> str:
     """The ``batches/`` directory holding epoch ``epoch``'s commit log:
     live for the current epoch, else inside the retained dir of the
@@ -3489,7 +3286,7 @@ def layout_snapshots(path: str) -> list[tuple[int, int]]:
     for e in _readable_epochs(path):
         bdir = _epoch_batch_dir(path, e, current)
         seqs = {0} | {
-            _parse_batch_seq(b)
+            _parse_seq(b)
             for b in _batch_names_checked(bdir, f"epoch {e} of {path!r}")
         }
         pairs.extend((e, s) for s in sorted(seqs))
@@ -3532,7 +3329,7 @@ def _check_as_of(
     bdir = _epoch_batch_dir(path, e, current)
     tip = max(
         (
-            _parse_batch_seq(b)
+            _parse_seq(b)
             for b in _batch_names_checked(bdir, f"epoch {e} of {path!r}")
         ),
         default=0,
@@ -3639,14 +3436,14 @@ def _snapshot_table(
             )
     bdir = _epoch_batch_dir(path, epoch, _layout_epoch(path))
     for b in _batch_names_checked(bdir, f"epoch {epoch} of {path!r}"):
-        if _parse_batch_seq(b) > seq:
+        if _parse_seq(b) > seq:
             continue
         root = os.path.join(bdir, b, sub)
         if os.path.isdir(root) and has_parquet(root):
             df = spark.read.parquet(root)
             if "_seq" not in df.columns:
                 df = df.withColumn(
-                    "_seq", F.lit(_parse_batch_seq(b)).cast("long")
+                    "_seq", F.lit(_parse_seq(b)).cast("long")
                 )
             parts.append(df)
     if not parts:
@@ -3714,7 +3511,6 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
     "info": {...}}``; ``ok`` means zero errors (warnings allowed).
     """
     import json as _json
-    import time as _time
 
     errors: list[str] = []
     warnings: list[str] = []
@@ -3735,22 +3531,13 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
         errors.append("meta.json is not valid JSON — torn publish")
         meta, current = {}, 0
 
-    # commit log: duplicate seqs are an error; gaps only a warning
+    # commit log: duplicate seqs are an error (with the staging and
+    # lease checks every tier shares); gaps only a warning
     bdir = os.path.join(path, "batches")
     names = sorted(os.listdir(bdir)) if os.path.isdir(bdir) else []
-    seen: dict[int, str] = {}
-    seqs: list[int] = []
+    _fsck(path, names, errors, warnings, info)
+    seqs = [s for s in map(_parse_seq, names) if s >= 1]
     for b in names:
-        s = _parse_batch_seq(b)
-        if s >= 1 and s in seen:
-            errors.append(
-                f"duplicate mutation seq {s}: {seen[s]!r} and {b!r} — "
-                "two writers committed at the same sequence; remove the "
-                "losing commit before any read or fold"
-            )
-        seen[s] = b
-        if s >= 1:
-            seqs.append(s)
         has_parquet = any(
             f.endswith(".parquet")
             for _, _, files in os.walk(os.path.join(bdir, b))
@@ -3767,30 +3554,6 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
             "seq allocation and its commit rename (harmless: seqs "
             "order commits, density is not required)"
         )
-
-    # staging orphans
-    stag = os.path.join(path, "_staging")
-    orphans = sorted(os.listdir(stag)) if os.path.isdir(stag) else []
-    info["staging_orphans"] = len(orphans)
-    if orphans:
-        warnings.append(
-            f"{len(orphans)} orphaned _staging entr"
-            f"{'y' if len(orphans) == 1 else 'ies'} (crashed pre-commit "
-            "writer) — reclaimed by the next mutation verb"
-        )
-
-    # writer lease
-    lease = os.path.join(path, "_writer.lock")
-    if os.path.exists(lease):
-        probe = _writer_lease(path, "verify_layout")
-        holder = probe._read_holder()
-        if probe._is_stale(holder, _time.time()):
-            warnings.append(
-                f"stale _writer.lock (holder {holder!r} dead or past "
-                "TTL) — the next acquirer breaks it"
-            )
-        else:
-            info["active_writer"] = holder
 
     # retention chain
     retained = _retained_epochs(path)
@@ -3994,15 +3757,20 @@ def rebuild_layout(idx_cls, spark: SparkSession, path: str, **build_kwargs):
         return fresh.save(path, store_vectors=True)
 
 
+def _write_deletes(ids: DataFrame, stage: str, seq: int) -> None:
+    """A commit's tombstone table: the ids stamped with the commit seq,
+    one small file (the set is broadcast on every read until folded)."""
+    ids.withColumn("_seq", F.lit(seq).cast("long")).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(stage, "deletes"))
+
+
 def _index_delete(idx, ids, path: str | None) -> None:
     """Shared delete-by-id implementation for the persisted serving
     artifacts (IvfSq8Index / IvfPqIndex — one contract, see
     ``IvfSq8Index.delete``): pin the id set, commit it (with ``path``)
     as an atomic ``batches/<seq>_<uuid>/deletes`` rename, and mask the
     in-memory plans with one broadcast anti-join each."""
-    import shutil
-    import uuid
-
     _require_writable(idx, "delete")
 
     spark = idx.codes.sparkSession
@@ -4018,23 +3786,12 @@ def _index_delete(idx, ids, path: str | None) -> None:
     if ids.isEmpty():
         return
     if path is not None:
-        with _writer_lease(path, "delete"):
-            IvfSq8Index._gc_staging(path)
-            seq = _next_batch_seq(path)
-            batch_id = f"{seq:08d}_{uuid.uuid4().hex}"
-            stage = os.path.join(path, "_staging", batch_id)
-            try:
-                ids.withColumn("_seq", F.lit(seq).cast("long")).coalesce(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(stage, "deletes")
-                )
-                bdir = os.path.join(path, "batches")
-                os.makedirs(bdir, exist_ok=True)
-                os.rename(stage, os.path.join(bdir, batch_id))
-            except BaseException:
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
+        _commit(
+            path,
+            "delete",
+            lambda stage, seq: _write_deletes(ids, stage, seq),
+            lambda: _committed_batches(path),
+        )
     idx.codes = idx.codes.join(F.broadcast(ids), idx.id_col, "left_anti")
     if idx.vectors is not None:
         idx.vectors = idx.vectors.join(F.broadcast(ids), idx.id_col, "left_anti")
@@ -4044,6 +3801,85 @@ def _index_delete(idx, ids, path: str | None) -> None:
     idx._mirror_path = (
         path if getattr(idx, "_mirror_path", None) == path else None
     )
+
+
+def _index_add(
+    idx, batch: DataFrame, path: str | None, replace: bool, code_col: str, encode
+):
+    """Shared ``add_batch`` body for the persisted serving artifacts
+    (IvfSq8Index / IvfPqIndex — one contract, see
+    ``IvfSq8Index.add_batch``). ``encode(batch)`` is the class's
+    frozen-quantizer derivation: ``(codes frame with code_col and
+    centroid, (id, vec, centroid) float rows)``.
+
+    The INPUT is pinned once: codes, co-located floats, tombstones and
+    the in-memory unions are separate Spark jobs over ``batch``, so a
+    nondeterministic batch (df.sample, a limit, a source dir changing
+    between jobs) could otherwise commit codes whose floats row never
+    materialized inside the same "atomic" dir. The replace path dedupes
+    by id FIRST: two same-id rows in one upsert would share a commit
+    seq and both survive the strictly-older tombstone mask forever —
+    replace semantics admit exactly one winner per id per commit."""
+    _require_writable(idx, "add_batch")
+    if replace:
+        batch = batch.dropDuplicates([idx.id_col])
+    batch = batch.select(idx.id_col, idx.vec_col).localCheckpoint(eager=True)
+    if batch.isEmpty():
+        # nothing to ingest — and an EMPTY partitioned batch dir on disk
+        # would hold no partition subdirs, making every later load()'s
+        # per-root parquet read fail schema inference (bricking the
+        # index). Decided on the PINNED batch: the encode is a map-only
+        # 1:1 derivation, so its output is empty iff the batch is, and
+        # checking it would pay an extra encode job per commit.
+        return idx
+    enc, vecs = encode(batch)
+    if path is not None:
+
+        def write(stage: str, seq: int) -> None:
+            stamp = F.lit(seq).cast("long")
+            writes = [
+                lambda: _cluster_for_write(
+                    enc.select(idx.id_col, code_col, "centroid").withColumn(
+                        "_seq", stamp
+                    )
+                )
+                .write.partitionBy("centroid")
+                .mode("overwrite")
+                .parquet(os.path.join(stage, "codes"))
+            ]
+            if os.path.isdir(os.path.join(path, "vectors")):
+                writes.append(
+                    lambda: _cluster_for_write(vecs.withColumn("_seq", stamp))
+                    .write.partitionBy("centroid")
+                    .mode("overwrite")
+                    .parquet(os.path.join(stage, "vectors"))
+                )
+            if replace:
+                writes.append(
+                    lambda: _write_deletes(batch.select(idx.id_col), stage, seq)
+                )
+            _run_writes(writes)
+
+        _commit(path, "add_batch", write, lambda: _committed_batches(path))
+    if replace:
+        # in-memory mirror of the seq rule: older rows with these ids
+        # vanish, then the batch's own rows union in below
+        old_ids = F.broadcast(batch.select(idx.id_col))
+        idx.codes = idx.codes.join(old_ids, idx.id_col, "left_anti")
+        if idx.vectors is not None:
+            idx.vectors = idx.vectors.join(old_ids, idx.id_col, "left_anti")
+    idx.codes = idx.codes.unionByName(
+        enc.select(idx.id_col, code_col, "centroid"), allowMissingColumns=True
+    )
+    if idx.vectors is not None:
+        idx.vectors = idx.vectors.unionByName(vecs, allowMissingColumns=True)
+    # a commit onto the mirrored layout keeps the mirror; an
+    # in-memory-only (or foreign-path) ingest breaks it — save() then
+    # takes the full rewrite instead of the bounded fold
+    idx._mirror_path = (
+        path if getattr(idx, "_mirror_path", None) == path else None
+    )
+    return idx
 
 
 def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
@@ -4237,7 +4073,7 @@ def _save_layout_locked(idx, path, store_vectors, code_col):
     import shutil
     import uuid
 
-    IvfSq8Index._gc_staging(path)
+    _gc_staging(path)
     disk_has_vectors = os.path.isdir(os.path.join(path, "vectors")) or any(
         os.path.isdir(os.path.join(path, "batches", b, "vectors"))
         for b in (
@@ -4465,7 +4301,7 @@ def layout_mutation_stats(path: str) -> dict:
         "batch_commits": len(commits),
         "data_commits": data,
         "tombstone_commits": tomb,
-        "max_seq": max((_parse_batch_seq(b) for b in commits), default=0),
+        "max_seq": max((_parse_seq(b) for b in commits), default=0),
         "staging_orphans": len(os.listdir(sdir)) if os.path.isdir(sdir) else 0,
     }
 
@@ -4565,7 +4401,6 @@ class IvfSq8Index:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         iters: int = 5,
-        train_impl: str = "expr",
         sample_rows: int | None = None,
         seed: int = 1,
     ) -> "IvfSq8Index":
@@ -4582,23 +4417,13 @@ class IvfSq8Index:
         form posexplodes N·dim rows through a shuffle) and the MLlib
         ``model.transform`` + aggregate behind ``cell_stats``. The
         scaler is bit-identical to ``sq8_train`` in either impl (min/max
-        are exact in any association). ``train_impl`` is DEPRECATED and
-        ignored: any value but the default ``"expr"`` warns
-        (``DeprecationWarning``). The degenerate-layout tripwire now
+        are exact in any association). The degenerate-layout tripwire now
         thresholds ``max_share`` of the house nearest-centroid
         assignment of the FULL corpus — the layout actually being
         persisted — not MLlib's assignment of the fit sample. Same
         decision on every gate corpus (asserted by test); on other data
         sample-vs-corpus shares and tie-breaking can differ, so the
         rebuild decision can too."""
-        if train_impl != "expr":
-            warnings.warn(
-                "IvfSq8Index.build(train_impl=...) is deprecated and ignored: "
-                "the SQ8 scaler is always trained by the fused Arrow pass "
-                "(bit-identical to either impl)",
-                DeprecationWarning,
-                stacklevel=2,
-            )
         fit_on = df
         if sample_rows is not None:
             n = df.count()
@@ -4626,18 +4451,6 @@ class IvfSq8Index:
             codes, centroids, mins, deltas, id_col, vec_col,
             vectors=assigned.select(id_col, vec_col, "centroid"),
         )
-
-    @staticmethod
-    def _gc_staging(path: str) -> None:
-        """Delete orphaned ``_staging`` entries left by a hard crash
-        mid-save/mid-add_batch (ADVICE r13). They are invisible to reads
-        (only committed ``codes``/``batches/<uuid>`` dirs are ever
-        listed) so correctness never depended on this — it just stops
-        dead staging bytes accumulating forever. One implementation,
-        shared with the dedup indexes (same single-writer posture)."""
-        from whatsapp_vectordb_spark.operators.dedup_index import _gc_staging
-
-        _gc_staging(path)
 
     def save(
         self, path: str, store_vectors: bool | None = None
@@ -4714,9 +4527,9 @@ class IvfSq8Index:
             roots.append((0, base))
         bdir = os.path.join(path, "batches")
         roots.extend(
-            (_parse_batch_seq(b), os.path.join(bdir, b, sub))
+            (_parse_seq(b), os.path.join(bdir, b, sub))
             for b in _committed_batches(path)
-            if (as_of is None or _parse_batch_seq(b) <= as_of)
+            if (as_of is None or _parse_seq(b) <= as_of)
             and os.path.isdir(os.path.join(bdir, b, sub))
             and has_parquet(os.path.join(bdir, b, sub))
         )
@@ -5060,105 +4873,18 @@ class IvfSq8Index:
         floats, and delete marks visible together or not at all (an
         upsert can never be observed as its delete half alone).
         ``save`` folds accumulated batch dirs back into the base
-        layout (compaction), applying tombstones physically."""
-        import shutil
-        import uuid
+        layout (compaction), applying tombstones physically. Body shared
+        with ``IvfPqIndex.add_batch`` (``_index_add``)."""
 
-        # pin the INPUT once: the codes write, the vectors write, and
-        # the in-memory unions are separate Spark jobs over `batch` — a
-        # nondeterministic batch could otherwise commit codes whose
-        # co-located floats row never materialized, inside the same
-        # "atomic" dir (r15 review finding; same fix as IvfPqIndex).
-        # The replace path also dedupes by id FIRST: two same-id rows in
-        # one upsert batch would share a commit seq, both surviving the
-        # strictly-older tombstone mask forever (ADVICE r15) — replace
-        # semantics admit exactly one winner per id per commit.
-        _require_writable(self, "add_batch")
-        if replace:
-            batch = batch.dropDuplicates([self.id_col])
-        batch = batch.select(self.id_col, self.vec_col).localCheckpoint(eager=True)
-        if batch.isEmpty():
-            # nothing to ingest — and an EMPTY partitioned batch dir on
-            # disk would hold no partition subdirs, making every later
-            # load()'s per-root parquet read fail schema inference
-            # (bricking the index); the SemDedupIndex guards identically.
-            # Decided on the PINNED batch (`enc` is an inner join of two
-            # map-only 1:1 derivatives of it on the id, so enc is empty
-            # iff the batch is) — checking `enc` paid an extra
-            # encode+assign+join job per commit for the same answer.
-            return self
-        assigned = assign_nearest_centroid(batch, self.centroids, self.vec_col)
-        enc = sq8_encode(
-            batch, self.mins, self.deltas, id_col=self.id_col, vec_col=self.vec_col
-        ).join(assigned.select(self.id_col, "centroid"), self.id_col)
-        if path is not None:
-            with _writer_lease(path, "add_batch"):
-                self._gc_staging(path)
-                seq = _next_batch_seq(path)
-                batch_id = f"{seq:08d}_{uuid.uuid4().hex}"
-                stage = os.path.join(path, "_staging", batch_id)
-                try:
-                    writes = [
-                        lambda: _cluster_for_write(
-                            enc.select(
-                                self.id_col, "sq8_codes", "centroid"
-                            ).withColumn("_seq", F.lit(seq).cast("long"))
-                        )
-                        .write.partitionBy("centroid")
-                        .mode("overwrite")
-                        .parquet(os.path.join(stage, "codes"))
-                    ]
-                    if os.path.isdir(os.path.join(path, "vectors")):
-                        writes.append(
-                            lambda: _cluster_for_write(
-                                assigned.select(
-                                    self.id_col, self.vec_col, "centroid"
-                                ).withColumn("_seq", F.lit(seq).cast("long"))
-                            )
-                            .write.partitionBy("centroid")
-                            .mode("overwrite")
-                            .parquet(os.path.join(stage, "vectors"))
-                        )
-                    if replace:
-                        writes.append(
-                            lambda: batch.select(self.id_col)
-                            .withColumn("_seq", F.lit(seq).cast("long"))
-                            .coalesce(1)
-                            .write.mode("overwrite")
-                            .parquet(os.path.join(stage, "deletes"))
-                        )
-                    _run_writes(writes)
-                    bdir = os.path.join(path, "batches")
-                    os.makedirs(bdir, exist_ok=True)
-                    os.rename(stage, os.path.join(bdir, batch_id))
-                except BaseException:
-                    shutil.rmtree(stage, ignore_errors=True)
-                    raise
-        if replace:
-            # in-memory mirror of the seq rule: older rows with these
-            # ids vanish, then the batch's own rows union in below
-            old_ids = F.broadcast(batch.select(self.id_col))
-            self.codes = self.codes.join(old_ids, self.id_col, "left_anti")
-            if self.vectors is not None:
-                self.vectors = self.vectors.join(
-                    old_ids, self.id_col, "left_anti"
-                )
-        self.codes = self.codes.unionByName(
-            enc.select(self.id_col, "sq8_codes", "centroid"),
-            allowMissingColumns=True,
-        )
-        if self.vectors is not None:
-            self.vectors = self.vectors.unionByName(
-                assigned.select(self.id_col, self.vec_col, "centroid"),
-                allowMissingColumns=True,
-            )
-        # a commit onto the mirrored layout keeps the mirror; an
-        # in-memory-only (or foreign-path) ingest breaks it — save()
-        # then takes the full rewrite instead of the bounded fold
-        self._mirror_path = (
-            path if getattr(self, "_mirror_path", None) == path else None
-        )
-        return self
+        def encode(batch):
+            assigned = assign_nearest_centroid(batch, self.centroids, self.vec_col)
+            enc = sq8_encode(
+                batch, self.mins, self.deltas, id_col=self.id_col,
+                vec_col=self.vec_col,
+            ).join(assigned.select(self.id_col, "centroid"), self.id_col)
+            return enc, assigned.select(self.id_col, self.vec_col, "centroid")
+
+        return _index_add(self, batch, path, replace, "sq8_codes", encode)
 
     def upsert(self, batch: DataFrame, path: str | None = None) -> "IvfSq8Index":
         """Replace-by-id ingest — the reference's write verb
@@ -5529,93 +5255,10 @@ class IvfPqIndex:
         Codebook drift is the maintenance signal: rebuild when residual
         distortion on new batches degrades (same posture as SQ8's
         clamp-rate watch)."""
-        import shutil
-        import uuid
-
-        # pin the INPUT once: codes (encode) and co-located vectors
-        # (assign) are derived in SEPARATE Spark jobs, so a
-        # nondeterministic batch (df.sample, a limit, a source dir
-        # changing between jobs) could otherwise commit codes for a row
-        # whose vectors write never saw it — inside the same "atomic"
-        # batch dir. One eager checkpoint makes every derivation read
-        # the same materialized rows (r15 review finding). The replace
-        # path dedupes by id first: same-id rows sharing one commit seq
-        # would BOTH outlive the strictly-older tombstone mask (ADVICE
-        # r15) — replace semantics admit one winner per id per commit.
-        _require_writable(self, "add_batch")
-        if replace:
-            batch = batch.dropDuplicates([self.id_col])
-        batch = batch.select(self.id_col, self.vec_col).localCheckpoint(eager=True)
-        if batch.isEmpty():
-            # an EMPTY partitioned batch dir would brick later loads on
-            # schema inference — commit nothing (house guard). Decided
-            # on the PINNED batch: encode is a map-only 1:1 derivation,
-            # so enc is empty iff the batch is, and checking enc paid an
-            # extra encode job per commit.
-            return self
-        enc = self._proto().encode(batch)
-        if path is not None:
-            with _writer_lease(path, "add_batch"):
-                IvfSq8Index._gc_staging(path)
-                seq = _next_batch_seq(path)
-                batch_id = f"{seq:08d}_{uuid.uuid4().hex}"
-                stage = os.path.join(path, "_staging", batch_id)
-                try:
-                    writes = [
-                        lambda: _cluster_for_write(
-                            enc.select(
-                                self.id_col, "codes", "centroid"
-                            ).withColumn("_seq", F.lit(seq).cast("long"))
-                        )
-                        .write.partitionBy("centroid")
-                        .mode("overwrite")
-                        .parquet(os.path.join(stage, "codes"))
-                    ]
-                    if os.path.isdir(os.path.join(path, "vectors")):
-                        writes.append(
-                            lambda: _cluster_for_write(
-                                self._assign_vectors(batch).withColumn(
-                                    "_seq", F.lit(seq).cast("long")
-                                )
-                            )
-                            .write.partitionBy("centroid")
-                            .mode("overwrite")
-                            .parquet(os.path.join(stage, "vectors"))
-                        )
-                    if replace:
-                        writes.append(
-                            lambda: batch.select(self.id_col)
-                            .withColumn("_seq", F.lit(seq).cast("long"))
-                            .coalesce(1)
-                            .write.mode("overwrite")
-                            .parquet(os.path.join(stage, "deletes"))
-                        )
-                    _run_writes(writes)
-                    bdir = os.path.join(path, "batches")
-                    os.makedirs(bdir, exist_ok=True)
-                    os.rename(stage, os.path.join(bdir, batch_id))
-                except BaseException:
-                    shutil.rmtree(stage, ignore_errors=True)
-                    raise
-        if replace:
-            old_ids = F.broadcast(batch.select(self.id_col))
-            self.codes = self.codes.join(old_ids, self.id_col, "left_anti")
-            if self.vectors is not None:
-                self.vectors = self.vectors.join(
-                    old_ids, self.id_col, "left_anti"
-                )
-        self.codes = self.codes.unionByName(
-            enc.select(self.id_col, "codes", "centroid"), allowMissingColumns=True
+        return _index_add(
+            self, batch, path, replace, "codes",
+            lambda b: (self._proto().encode(b), self._assign_vectors(b)),
         )
-        if self.vectors is not None:
-            self.vectors = self.vectors.unionByName(
-                self._assign_vectors(batch), allowMissingColumns=True
-            )
-        # mirror bookkeeping — the IvfSq8Index.add_batch contract
-        self._mirror_path = (
-            path if getattr(self, "_mirror_path", None) == path else None
-        )
-        return self
 
     def upsert(self, batch: DataFrame, path: str | None = None) -> "IvfPqIndex":
         """Replace-by-id ingest (upsert.go:16) — one atomic commit of

@@ -28,6 +28,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from whatsapp_vectordb_spark.commitlog import (
+    _commit,
+    _fsck,
+    _gc_staging,
+    _parse_seq,
+    _writer_lease,
+)
 from whatsapp_vectordb_spark.session import local_df
 from pyspark.sql import functions as F
 
@@ -36,58 +43,6 @@ from whatsapp_vectordb_spark.operators.dedup import (
     _signatures_from_hashed,
     _verify_jaccard,
 )
-
-
-def _gc_staging(path: str) -> None:
-    """Delete orphaned ``_staging/<uuid>`` dirs left by a HARD crash
-    before the commit rename (ADVICE r13): the in-process exception path
-    already cleans up, but a killed process leaves its staging dir
-    behind forever. Orphans are invisible to reads (only committed
-    ``batches/``/``fingerprints/`` state is listed) so correctness never
-    depended on this sweep — it just stops dead bytes accumulating.
-    Called at the top of every ``add_batch`` under the single-writer
-    posture these indexes assume (a concurrent writer's in-flight stage
-    would be swept — don't run two writers against one index)."""
-    import shutil
-
-    stag = os.path.join(path, "_staging")
-    if os.path.isdir(stag):
-        for d in os.listdir(stag):
-            full = os.path.join(stag, d)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            else:  # e.g. an orphaned _meta_*.tmp from a crashed publish
-                try:
-                    os.remove(full)
-                except OSError:
-                    pass
-
-
-def _parse_seq(name: str) -> int:
-    """Commit sequence from a state entry name — ``<seq>_<uuid>`` batch
-    dirs, ``<seq>_<uuid>.parquet`` fingerprint files, or
-    ``compact_<seq>_<uuid>`` compaction entries (the serving layouts'
-    ``_parse_batch_seq`` contract: zero-padded at-least-8-digit decimal
-    head). Legacy unnumbered entries order as 0 — they predate the
-    time-travel verbs and are append-only data, so any bound includes
-    them (round 17)."""
-    if name.startswith("compact_"):
-        name = name[len("compact_") :]
-    if "_" not in name:
-        return 0
-    head = name.split("_", 1)[0]
-    return int(head) if head.isdigit() and len(head) >= 8 else 0
-
-
-def _lease(path: str, verb: str):
-    """The house writer lease (``ann._writer_lease`` — O_EXCL lock file,
-    stale-breaking, same-thread reentrant), shared by the dedup indexes:
-    they carry the identical single-writer posture, so the r17
-    enforcement applies here too. Lazy import: ``operators.ann`` only
-    imports this module inside function bodies, so no cycle."""
-    from whatsapp_vectordb_spark.operators.ann import _writer_lease
-
-    return _writer_lease(path, verb)
 
 
 class _BatchDirIndex:
@@ -121,14 +76,6 @@ class _BatchDirIndex:
             for b in sorted(os.listdir(root))
             if os.path.isdir(os.path.join(root, b))
         ]
-
-    def _next_seq(self) -> int:
-        """1 + max committed seq over ALL dirs (dead included — a
-        compaction's retained victims must never be re-numbered over).
-        Callers hold the writer lease across allocation + rename."""
-        return 1 + max(
-            (_parse_seq(b) for b in self._all_batch_dirs()), default=0
-        )
 
     def snapshots(self) -> list[int]:
         """Readable time-travel bounds: every commit seq still on disk
@@ -247,41 +194,29 @@ class _BatchDirIndex:
         return self.spark.read.parquet(*paths)
 
     def _commit_batch(self, frames: dict[str, DataFrame]) -> None:
-        """Stage every table of one batch under a single ``_staging``
-        dir, then commit with ONE atomic directory rename into
-        ``batches/<seq>_<uuid>`` — the tables become visible together or
-        not at all (the MinHash index's ADVICE-r12 contract,
-        generalized). Seq allocation + rename run under the writer
-        lease (r17 — the serving layouts' enforced single-writer
-        contract)."""
-        import shutil
-        import uuid
-
+        """Stage every table of one batch, then commit with ONE atomic
+        directory rename into ``batches/<seq>_<uuid>`` (``commitlog.
+        _commit``, under the writer lease) — the tables become visible
+        together or not at all."""
         from whatsapp_vectordb_spark.operators.ann import _run_writes
 
-        with _lease(self.path, "add_batch"):
-            batch_id = f"{self._next_seq():08d}_{uuid.uuid4().hex}"
-            stage = os.path.join(self.path, "_staging", batch_id)
-            try:
-                # one commit's tables are independent jobs over pinned
-                # inputs — run them concurrently (guide §2.6), and let
-                # REBALANCE coalesce each to advisory-size files instead
-                # of one tiny file per upstream task (guide §6)
-                _run_writes(
-                    [
-                        (
-                            lambda w=which, d=df: d.hint("rebalance")
-                            .write.mode("overwrite")
-                            .parquet(os.path.join(stage, w))
-                        )
-                        for which, df in frames.items()
-                    ]
-                )
-                os.makedirs(self._batches_path, exist_ok=True)
-                os.rename(stage, os.path.join(self._batches_path, batch_id))
-            except BaseException:
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
+        def write(stage: str, seq: int) -> None:
+            # one commit's tables are independent jobs over pinned
+            # inputs — run them concurrently (guide §2.6), and let
+            # REBALANCE coalesce each to advisory-size files instead of
+            # one tiny file per upstream task (guide §6)
+            _run_writes(
+                [
+                    (
+                        lambda w=which, d=df: d.hint("rebalance")
+                        .write.mode("overwrite")
+                        .parquet(os.path.join(stage, w))
+                    )
+                    for which, df in frames.items()
+                ]
+            )
+
+        _commit(self.path, "add_batch", write, self._all_batch_dirs)
 
     def compact(self) -> int:
         """Merge every live ``batches/<uuid>`` dir into ONE — the
@@ -306,13 +241,12 @@ class _BatchDirIndex:
         manifest for tip readers, they are exactly the snapshots a
         time-travel bound before this compaction reads; ``vacuum()`` is
         the explicit reclaim verb (the serving layouts' fold/vacuum
-        split). Runs under the writer lease."""
+        split). Runs under the writer lease. Live dirs that hold no
+        parquet for any table leave nothing to merge: 0, nothing
+        published."""
         import json as _json
-        import shutil
-        import uuid
 
-        with _lease(self.path, "compact"):
-            _gc_staging(self.path)
+        with _writer_lease(self.path, "compact"):
             live = self._live_batch_dirs()
             if len(live) <= 1:
                 return 0
@@ -321,14 +255,14 @@ class _BatchDirIndex:
                 for which in self._TABLES
                 if (df := self._stored(which)) is not None
             }
-            batch_id = f"{self._next_seq():08d}_{uuid.uuid4().hex}"
-            stage = os.path.join(self.path, "_staging", batch_id)
-            try:
+            if not before:
+                return 0
+
+            def write(stage: str, seq: int) -> None:
                 for which in before:
                     self._stored(which).write.mode("overwrite").parquet(
                         os.path.join(stage, which)
                     )
-                os.makedirs(stage, exist_ok=True)  # both tables may be empty
                 # TRANSITIVE manifest: carry forward every already-dead
                 # name too — otherwise GC deleting an older compact dir
                 # (whose manifest was keeping a failed-rmtree survivor
@@ -344,10 +278,8 @@ class _BatchDirIndex:
                             "staged content differs from the live union — "
                             "aborting with the old state intact"
                         )
-                os.rename(stage, os.path.join(self._batches_path, batch_id))
-            except BaseException:
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
+
+            _commit(self.path, "compact", write, self._all_batch_dirs)
             return len(live)
 
     def vacuum(self) -> None:
@@ -358,7 +290,7 @@ class _BatchDirIndex:
         read time (the ``_live_batch_dirs`` vacuum tripwire). Under the
         writer lease — racing a compaction could delete the dir it is
         mid-publishing against."""
-        with _lease(self.path, "vacuum"):
+        with _writer_lease(self.path, "vacuum"):
             _gc_staging(self.path)
             self._gc_dead_batches()
 
@@ -371,7 +303,7 @@ class _BatchDirIndex:
         at streaming cadence, one dir lands per trigger). Retention
         untouched — ``vacuum`` stays a separate decision. Runs under
         the writer lease end-to-end (poll→compact TOCTOU)."""
-        with _lease(self.path, "maintenance_tick"):
+        with _writer_lease(self.path, "maintenance_tick"):
             before = len(self._live_batch_dirs())
             merged = self.compact() if before > max_live_dirs else 0
             return {
@@ -404,7 +336,6 @@ class _BatchDirIndex:
         compare), never a false error. Metadata walk takes no lease —
         safe against a live writer (worst case a transient flag)."""
         import json as _json
-        import time as _time
 
         errors: list[str] = []
         warnings: list[str] = []
@@ -412,16 +343,8 @@ class _BatchDirIndex:
 
         dirs = self._all_batch_dirs()
         info["state_dirs"] = len(dirs)
-        seen: dict[int, str] = {}
+        _fsck(self.path, dirs, errors, warnings, info)
         for b in dirs:
-            s = _parse_seq(b)
-            if s >= 1 and s in seen:
-                errors.append(
-                    f"duplicate commit seq {s}: {seen[s]!r} and {b!r} — "
-                    "a second writer violated the single-writer "
-                    "contract; remove the losing commit"
-                )
-            seen[s] = b
             man = os.path.join(self._batches_path, b, "replaces.json")
             if os.path.exists(man):
                 try:
@@ -433,28 +356,6 @@ class _BatchDirIndex:
                         "treat it as a plain batch dir (interrupted "
                         "compaction publish?)"
                     )
-
-        stag = os.path.join(self.path, "_staging")
-        orphans = sorted(os.listdir(stag)) if os.path.isdir(stag) else []
-        info["staging_orphans"] = len(orphans)
-        if orphans:
-            warnings.append(
-                f"{len(orphans)} orphaned _staging entr"
-                f"{'y' if len(orphans) == 1 else 'ies'} — reclaimed by "
-                "the next mutation verb"
-            )
-
-        lease = os.path.join(self.path, "_writer.lock")
-        if os.path.exists(lease):
-            probe = _lease(self.path, "verify")
-            holder = probe._read_holder()
-            if probe._is_stale(holder, _time.time()):
-                warnings.append(
-                    f"stale _writer.lock (holder {holder!r} dead or "
-                    "past TTL) — the next acquirer breaks it"
-                )
-            else:
-                info["active_writer"] = holder
 
         if deep and not errors:
             checked = []
@@ -588,7 +489,6 @@ class MinHashDedupIndex(_BatchDirIndex):
         (the referenced dirs disappear): consume or persist returned
         pairs before vacuuming, as the durability contract already
         requires."""
-        _gc_staging(self.path)
         # ONE read of the stored signatures serves both the re-ingest
         # anti-join and the candidate join's stored side (r18 — the
         # second _stored("signatures") paid a second listing + schema
@@ -644,7 +544,7 @@ class MinHashDedupIndex(_BatchDirIndex):
             dest = os.path.join(pairs_path, f"batch_id={batch_key}")
             if not sh_new.isEmpty() or not os.path.exists(dest):
                 pairs.hint("rebalance").write.mode("overwrite").parquet(dest)
-        self._commit_appends(banded_new, sh_new)
+        self._commit_batch({"signatures": banded_new, "shingles": sh_new})
         return pairs
 
     def pairs_at(self, as_of: int | None = None) -> DataFrame:
@@ -685,34 +585,22 @@ class MinHashDedupIndex(_BatchDirIndex):
             cand, sh.select("doc_id", "_h"), "doc_id", self.threshold, 6
         )
 
-    def _commit_appends(self, banded_new: DataFrame, sh_new: DataFrame) -> None:
-        """Stage BOTH tables under one batch directory, then commit with a
-        SINGLE atomic directory rename into ``batches/<seq>_<uuid>/``
-        (``_BatchDirIndex._commit_batch``).
 
-        The pre-r13 scheme renamed part-files into two live dirs in a
-        loop; a crash mid-loop could leave a doc with signatures but no
-        shingles — the re-ingest anti-join (keyed on stored signature
-        doc_ids) would then skip the doc forever while its Jaccard verify
-        side stayed broken. One dir-level rename has no such window: a
-        batch is either fully in (both tables, all files) or fully out.
-        Cost: ``_stored`` unions per-batch dirs (micro-batch counts;
-        ``compact()`` merges them when listing matters)."""
-        self._commit_batch({"signatures": banded_new, "shingles": sh_new})
-
-
-class WinnowDedupIndex:
+class WinnowDedupIndex(_BatchDirIndex):
     """Persistent winnowing-fingerprint index — incremental SUBSTRING-level
     dedup, the ingest-time twin of ``winnow_duplicate_pairs`` exactly as
     ``MinHashDedupIndex`` is the twin of ``minhash_near_duplicates``.
 
-    State is ONE parquet table ``fingerprints``: the selected
+    State is ONE table ``fingerprints`` per committed batch dir
+    (``batches/<seq>_<uuid>/fingerprints/``): the selected
     ``(doc_id, fp_pos, fp_hash)`` rows — ~10-20 rows/doc at the default
     k=5/w=4 (the winnowing density is ~2/(w+1) of shingles), so the
     stored index is orders of magnitude smaller than the shingle state
     the MinHash index must keep for Jaccard verification; winnowing
     needs no verify table because each shared hash IS the evidence (a
-    shared ≥k-token run).
+    shared ≥k-token run). Commits, compaction, retention, vacuum,
+    ``maintenance_tick`` and ``verify`` are the inherited batch-dir
+    machinery.
 
     ``add_batch`` computes the batch's fingerprints once, probes
     batch↔corpus and batch↔batch via the fp_hash equi-join (inverted
@@ -727,6 +615,8 @@ class WinnowDedupIndex:
     filtering downstream if needed.
     """
 
+    _TABLES = ("fingerprints",)
+
     def __init__(
         self,
         spark: SparkSession,
@@ -735,102 +625,10 @@ class WinnowDedupIndex:
         w: int = 4,
         min_shared: int = 2,
     ):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.k = k
         self.w = w
         self.min_shared = min_shared
-
-    @property
-    def _fp_path(self) -> str:
-        return os.path.join(self.path, "fingerprints")
-
-    def _all_entries(self) -> list[str]:
-        p = self._fp_path
-        if not os.path.exists(p):
-            return []
-        return [
-            e
-            for e in sorted(os.listdir(p))
-            if e.endswith(".parquet")
-            or (e.startswith("compact_") and os.path.isdir(os.path.join(p, e)))
-        ]
-
-    def _next_seq(self) -> int:
-        """1 + max committed seq over ALL entries (dead included).
-        Callers hold the writer lease across allocation + rename."""
-        return 1 + max((_parse_seq(e) for e in self._all_entries()), default=0)
-
-    def snapshots(self) -> list[int]:
-        """Readable time-travel bounds — the ``_BatchDirIndex`` contract
-        (every commit seq still on disk, 0 = pre-ingest)."""
-        return sorted({0} | {_parse_seq(e) for e in self._all_entries()})
-
-    def _live_entries(self, as_of: int | None = None) -> list[str]:
-        """State entry names under ``fingerprints/`` LIVE at the tip
-        (default) or at commit bound ``as_of``: loose
-        ``<seq>_<uuid>.parquet`` files (one per committed batch) plus
-        ``compact_<seq>_<uuid>`` dirs, minus every name in a manifest
-        visible AT THE BOUND — same supersession + retention +
-        vacuum-tripwire rules as ``_BatchDirIndex._live_batch_dirs``
-        (a committed compaction makes the merged entries dead to tip
-        readers even before deletion; a bound BEFORE it reads them)."""
-        entries = self._all_entries()
-        on_disk = set(entries)
-        if as_of is not None:
-            entries = [e for e in entries if _parse_seq(e) <= as_of]
-        dead = self._dead_entry_names(as_of)
-        if as_of is not None:
-            vanished = self._dead_entry_names(None) - on_disk
-            lost = [
-                v
-                for v in vanished
-                if _parse_seq(v) <= as_of and v not in dead
-            ]
-            if lost:
-                raise ValueError(
-                    f"as_of={as_of} is no longer readable at {self.path!r}: "
-                    f"vacuum reclaimed commits this bound needs ({sorted(lost)}); "
-                    "re-read snapshots() for the retained bounds"
-                )
-        return [e for e in entries if e not in dead]
-
-    def _dead_entry_names(self, as_of: int | None = None) -> set[str]:
-        """Every entry name declared dead by a compact manifest visible
-        at the bound (newer compactions' manifests do not apply)."""
-        import json as _json
-
-        p = self._fp_path
-        dead: set[str] = set()
-        if not os.path.exists(p):
-            return dead
-        for e in os.listdir(p):
-            if as_of is not None and _parse_seq(e) > as_of:
-                continue
-            man = os.path.join(p, e, "replaces.json")
-            if e.startswith("compact_") and os.path.exists(man):
-                try:
-                    with open(man) as f:
-                        dead.update(_json.load(f))
-                except (OSError, ValueError):
-                    pass
-        return dead
-
-    def _stored(self, as_of: int | None = None) -> DataFrame | None:
-        paths = []
-        for e in self._live_entries(as_of):
-            full = os.path.join(self._fp_path, e)
-            if e.endswith(".parquet"):
-                paths.append(full)
-            else:
-                data = os.path.join(full, "data")
-                if os.path.isdir(data) and any(
-                    f.endswith(".parquet") for f in os.listdir(data)
-                ):
-                    paths.append(data)
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
 
     def pairs_at(self, as_of: int | None = None) -> DataFrame:
         """The index's FULL verdict set at commit bound ``as_of`` (tip
@@ -839,7 +637,7 @@ class WinnowDedupIndex:
         time-travel read (r16 verdict #4), equal to the union of the
         per-batch ``add_batch`` pair sets through that commit (documents
         immutable — the union-of-batches ≡ one-shot argument)."""
-        fp = self._stored(as_of)
+        fp = self._stored("fingerprints", as_of)
         if fp is None:
             return local_df(self.spark, 
                 [], "id_a long, id_b long, n_shared long"
@@ -863,102 +661,6 @@ class WinnowDedupIndex:
             .where(F.col("n_shared") >= self.min_shared)
         )
 
-    def _gc_dead_entries(self) -> None:
-        """Reclaim entries superseded by a committed compaction (already
-        invisible to reads; crash-safe at any point)."""
-        import shutil
-
-        p = self._fp_path
-        if not os.path.exists(p):
-            return
-        live = set(self._live_entries())
-        for e in os.listdir(p):
-            if e in live:
-                continue
-            full = os.path.join(p, e)
-            if e.endswith(".parquet") and os.path.isfile(full):
-                os.remove(full)
-            elif e.startswith("compact_") and os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-
-    def compact(self) -> int:
-        """Merge every live state entry into ONE ``compact_<uuid>`` dir —
-        the per-batch single-file commits (the right durability call)
-        accumulate one file per micro-batch and file LISTING degrades at
-        streaming cadence. Returns the number of entries merged.
-
-        Atomicity mirrors ``MinHashDedupIndex.compact``: merged data +
-        a ``replaces.json`` manifest stage under ``_staging/<uuid>`` and
-        publish with ONE ``os.rename``; a count + xxhash64-XOR checksum
-        against the live union gates the rename; a crash at any point
-        leaves a readable, correct index. RETENTION (r17): superseded
-        entries stay on disk — dead by manifest for tip readers, they
-        are the pre-compaction time-travel bounds until ``vacuum()``
-        reclaims them. Under the writer lease."""
-        import json as _json
-        import shutil
-        import uuid
-
-        with _lease(self.path, "compact"):
-            _gc_staging(self.path)
-            live = self._live_entries()
-            if len(live) <= 1:
-                return 0
-            stored = self._stored()
-            if stored is None:
-                # >1 live entries but none yields parquet data (e.g.
-                # compact dirs whose data subdir was lost): nothing to
-                # merge — the fingerprint of None would raise
-                # AttributeError (ADVICE r14)
-                return 0
-            before = _BatchDirIndex._content_fingerprint(stored)
-            cid = f"compact_{self._next_seq():08d}_{uuid.uuid4().hex}"
-            stage = os.path.join(self.path, "_staging", cid)
-            try:
-                stored.write.mode("overwrite").parquet(
-                    os.path.join(stage, "data")
-                )
-                with open(os.path.join(stage, "replaces.json"), "w") as f:
-                    # transitive manifest (same resurrection hazard as the
-                    # batch-dir compact): keep already-dead names dead
-                    _json.dump(
-                        sorted(set(live) | self._dead_entry_names()), f
-                    )
-                staged = self.spark.read.parquet(os.path.join(stage, "data"))
-                if _BatchDirIndex._content_fingerprint(staged) != before:
-                    raise RuntimeError(
-                        "compaction checksum mismatch on fingerprints: "
-                        "staged content differs from the live union — "
-                        "aborting with the old state intact"
-                    )
-                os.rename(stage, os.path.join(self._fp_path, cid))
-            except BaseException:
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
-            return len(live)
-
-    def vacuum(self) -> None:
-        """Reclaim compaction-superseded entries + orphaned staging —
-        the explicit retention-expiry verb (the ``_BatchDirIndex.vacuum``
-        contract); expired bounds raise loudly at read time."""
-        with _lease(self.path, "vacuum"):
-            _gc_staging(self.path)
-            self._gc_dead_entries()
-
-    def maintenance_tick(self, max_live_entries: int = 8) -> dict:
-        """ONE compaction-policy decision per interval — the
-        ``_BatchDirIndex.maintenance_tick`` contract (poll the live
-        entry count, compact past the threshold, retention untouched),
-        under the writer lease end-to-end."""
-        with _lease(self.path, "maintenance_tick"):
-            before = len(self._live_entries())
-            merged = self.compact() if before > max_live_entries else 0
-            return {
-                "compacted": merged > 0,
-                "live_dirs_before": before,
-                "live_dirs_after": len(self._live_entries()),
-            }
-
     def add_batch(
         self,
         batch: DataFrame,
@@ -969,7 +671,7 @@ class WinnowDedupIndex:
         """Returns the verified pairs ``(id_a, id_b, n_shared)`` with at
         least one batch-side member, then folds the batch in. Re-ingest
         safe (already-stored ids are anti-joined out) and crash safe
-        (staged write + single-file rename).
+        (staged write + single dir rename).
 
         DURABILITY CONTRACT (ADVICE r11): the fingerprint append commits
         at the END of this call, and once it commits a retry anti-joins
@@ -992,17 +694,16 @@ class WinnowDedupIndex:
         The returned pairs are LAZY but PINNED (r18, same contract as
         the MinHash index): the batch's fingerprints are eagerly
         localCheckpointed (pinning the re-ingest anti-join too) and the
-        stored side reads the pre-commit fingerprint files by explicit
-        path — the append only ADDS a file, so a later consumption
-        (after further ingests or a compaction) computes exactly this
-        batch's pair set; the fingerprint join + n_shared count run only
-        when the pairs are consumed. Only ``vacuum()`` can invalidate an
+        stored side reads the pre-commit batch dirs by explicit path —
+        the append only ADDS a dir, so a later consumption (after
+        further ingests or a compaction) computes exactly this batch's
+        pair set; the fingerprint join + n_shared count run only when
+        the pairs are consumed. Only ``vacuum()`` can invalidate an
         unconsumed result, loudly.
         """
         from whatsapp_vectordb_spark.operators.dedup import winnow_fingerprints
 
-        _gc_staging(self.path)
-        stored = self._stored()
+        stored = self._stored("fingerprints")
         if stored is not None:
             batch = batch.join(
                 stored.select(F.col("doc_id").alias(id_col)).dropDuplicates(),
@@ -1046,51 +747,8 @@ class WinnowDedupIndex:
             # rather than clobbering it with the empty recompute
             if not fp_new.isEmpty() or not os.path.exists(dest):
                 pairs.hint("rebalance").write.mode("overwrite").parquet(dest)
-        self._commit_append(fp_new)
+        self._commit_batch({"fingerprints": fp_new})
         return pairs
-
-    def _commit_append(self, fp_new: DataFrame) -> None:
-        """Stage the batch's fingerprints, then commit with ONE rename.
-
-        Single-file on purpose: a multi-file rename loop has a crash
-        window where only SOME of a doc's fingerprint rows land — the
-        re-ingest anti-join (which keys on stored doc ids) would then
-        skip the doc with an incomplete posting list and silently miss
-        pairs forever. One file = one atomic rename = a batch is either
-        fully in or fully out. Cost: the staged write is one task — fine
-        for an incremental micro-batch append (~10-20 fp rows/doc reading
-        cached blocks); the bulk path is the one-shot batch operator."""
-        import shutil
-        import uuid
-
-        with _lease(self.path, "add_batch"):
-            stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
-            stage_fp = os.path.join(stage, "fingerprints")
-            try:
-                fp_new.coalesce(1).write.mode("overwrite").parquet(stage_fp)
-                parts = [
-                    f for f in os.listdir(stage_fp) if f.endswith(".parquet")
-                ]
-                if len(parts) != 1:
-                    # Explicit raise, not assert: under ``python -O`` an
-                    # assert vanishes, and renaming only parts[0] while the
-                    # finally rmtree deletes the rest would be permanent
-                    # fingerprint loss. coalesce(1) guarantees one file;
-                    # anything else means the invariant broke and the
-                    # commit must abort.
-                    raise RuntimeError(
-                        f"single-file commit invariant broken: staged {parts}"
-                    )
-                os.makedirs(self._fp_path, exist_ok=True)
-                os.rename(
-                    os.path.join(stage_fp, parts[0]),
-                    os.path.join(
-                        self._fp_path,
-                        f"{self._next_seq():08d}_{uuid.uuid4().hex}.parquet",
-                    ),
-                )
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
 
 
 class SemDedupIndex(_BatchDirIndex):
@@ -1218,7 +876,6 @@ class SemDedupIndex(_BatchDirIndex):
             assign_nearest_centroid,
         )
 
-        _gc_staging(self.path)
         cents = self._load_centroids()
         if cents is None:
             proto = IvfIndex.build_balanced(
