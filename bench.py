@@ -470,9 +470,8 @@ def main() -> None:
     def _():
         from whatsapp_vectordb_spark.operators.ann import portable_lsh_topk
 
-        # numpy signature impl + registry-provided dim: the at-scale form
-        # (bit-identical buckets to the expr form the oracle checks)
-        portable_lsh_topk(emb, query_id=0, k=10, round_to=6, impl="numpy", dim=64).collect()
+        # registry-provided dim: no scan-first-row job before the probe
+        portable_lsh_topk(emb, query_id=0, k=10, round_to=6, dim=64).collect()
 
     # --- 1536-dim fidelity (the reference's one hard constant: dimension
     # 1536, reference main.go:27) — a deterministic 24× tiling of the
@@ -528,7 +527,6 @@ def main() -> None:
             threshold=0.9,
             n_planes=32,
             bands=4,
-            impl="numpy",
             dim=64,
         ).count()
 

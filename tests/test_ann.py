@@ -5,25 +5,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from whatsapp_vectordb_spark.operators.ann import IvfIndex, cosine_lsh_join
+from whatsapp_vectordb_spark.operators.ann import IvfIndex
 from whatsapp_vectordb_spark.operators.search import topk
-
-
-def test_lsh_join_finds_near_duplicates(spark, embeddings):
-    emb = embeddings.limit(200)
-    dupes = emb.where(F.col("vec_id") % 50 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"), "embedding", "label"
-    )
-    corpus = emb.unionByName(dupes)
-    a = corpus.select(F.col("vec_id").alias("id_a"), "embedding")
-    b = corpus.select(F.col("vec_id").alias("id_b"), "embedding")
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_lsh_join(a, b, threshold=0.99).collect()
-    }
-    expected = {(i, i + 1000000) for i in range(0, 200, 50)}
-    # identical vectors share every band bucket -> all must be found
-    assert expected <= got
 
 
 def test_ivf_recall_vs_exact(spark, embeddings):
@@ -98,14 +81,6 @@ def test_ivf_save_load_prunes_partitions(spark, embeddings, tmp_path):
     ]
 
 
-def test_portable_lsh_numpy_impl_identical_buckets(spark, embeddings):
-    from whatsapp_vectordb_spark.operators.ann import portable_lsh_topk
-
-    a = portable_lsh_topk(embeddings, query_id=0, k=10, round_to=6, impl="expr").collect()
-    b = portable_lsh_topk(embeddings, query_id=0, k=10, round_to=6, impl="numpy").collect()
-    assert [(r["vec_id"], r["score"]) for r in a] == [(r["vec_id"], r["score"]) for r in b]
-
-
 def test_multiprobe_candidates_superset_and_recall(spark, embeddings):
     from whatsapp_vectordb_spark.operators.ann import (
         portable_lsh_topk,
@@ -139,7 +114,7 @@ def test_portable_lsh_join_subset_of_allpairs_and_full_dup_recall(spark, embeddi
     corpus = emb.unionByName(dupes)
     lsh = {
         (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in portable_lsh_join(corpus, threshold=0.99, impl="numpy").collect()
+        for r in portable_lsh_join(corpus, threshold=0.99).collect()
     }
     exact = {
         (r["id_a"], r["id_b"], r["cos_sim"])
@@ -152,13 +127,54 @@ def test_portable_lsh_join_subset_of_allpairs_and_full_dup_recall(spark, embeddi
     assert planted <= lsh
 
 
-def test_portable_lsh_join_expr_numpy_identical(spark, embeddings):
-    from whatsapp_vectordb_spark.operators.ann import portable_lsh_join
+def _with_null_vector(spark):
+    """vec_id 0..3 where row 2's vector is NULL — what the embedder emits
+    for empty or tokenless text."""
+    return spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.5, 0.2]),
+            (1, [1.0, 0.0, 0.5, 0.2]),
+            (2, None),
+            (3, [0.9, 0.1, 0.5, 0.2]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
 
-    emb = embeddings.limit(100).select("vec_id", "embedding")
-    a = {tuple(r) for r in portable_lsh_join(emb, threshold=0.8, impl="expr").collect()}
-    b = {tuple(r) for r in portable_lsh_join(emb, threshold=0.8, impl="numpy").collect()}
-    assert a == b
+
+def test_portable_lsh_topk_skips_null_vectors(spark):
+    """A NULL vector is never a candidate: single-probe, multi-probe and
+    batched top-k all rank the three real vectors only."""
+    from whatsapp_vectordb_spark.operators.ann import (
+        portable_lsh_topk,
+        portable_lsh_topk_batched,
+        portable_lsh_topk_multiprobe,
+    )
+
+    df = _with_null_vector(spark)
+    expected = [(0, 1.0), (1, 1.0), (3, 0.994468)]
+    for op in (portable_lsh_topk, portable_lsh_topk_multiprobe):
+        got = op(df, query_id=0, k=3, dim=4).collect()
+        assert [(r["vec_id"], r["score"]) for r in got] == expected, op.__name__
+    batched = (
+        portable_lsh_topk_batched(df, query_ids=[0, 2], k=3, dim=4)
+        .orderBy("query_id", "rank")
+        .collect()
+    )
+    assert [(r["query_id"], r["vec_id"], r["score"]) for r in batched] == [
+        (0, i, s) for i, s in expected
+    ]
+
+
+def test_portable_lsh_join_skips_null_vectors(spark):
+    """A NULL vector never pairs — in the near-dup join, or in the kNN
+    graph built from it."""
+    from whatsapp_vectordb_spark.operators.ann import knn_graph_lsh, portable_lsh_join
+
+    df = _with_null_vector(spark)
+    got = {tuple(r) for r in portable_lsh_join(df, threshold=0.9, dim=4).collect()}
+    assert got == {(0, 1, 1.0), (0, 3, 0.994468), (1, 3, 0.994468)}
+    graph = knn_graph_lsh(df, k=3, n_planes=16, bands=4, dim=4).collect()
+    assert {r["src"] for r in graph} | {r["nbr"] for r in graph} == {0, 1, 3}
 
 
 def test_missing_query_id_raises_clear_error(spark, embeddings):
@@ -736,29 +752,49 @@ def test_sq8_euclidean_numpy_impl_matches_expr_impl(spark, embeddings):
     assert expr_rows == np_rows and len(expr_rows) == 10
 
 
+def _sq8_reference(df, vec_col: str = "embedding"):
+    """The SQ8 scaler from a plain Spark aggregate over the collected
+    dimensions: per-dimension ``F.min``/``F.max`` over a posexplode
+    (Spark's NaN ordering), delta=(max-min)/255, constant or NaN dims
+    delta=1.0."""
+    rows = (
+        df.select(F.posexplode(F.col(vec_col)).alias("d", "x"))
+        .groupBy("d")
+        .agg(
+            F.min(F.col("x").cast("double")).alias("mn"),
+            F.max(F.col("x").cast("double")).alias("mx"),
+        )
+        .orderBy("d")
+        .collect()
+    )
+    mins = [r["mn"] for r in rows]
+    deltas = [(r["mx"] - r["mn"]) / 255.0 if r["mx"] > r["mn"] else 1.0 for r in rows]
+    return mins, deltas
+
+
 def test_sq8_train_numpy_impl_is_bit_identical(spark, embeddings):
-    """The Arrow train path must produce the SAME mins/deltas as the
-    posexplode aggregate — min/max are exact under any association, so
+    """The Arrow train pass must produce the SAME mins/deltas as a Spark
+    min/max aggregate — min/max are exact under any association, so
     this is equality, not tolerance. Includes a constant dim."""
     from whatsapp_vectordb_spark.operators.ann import sq8_train
 
     emb = embeddings.select("vec_id", "embedding")
-    assert sq8_train(emb, impl="numpy") == sq8_train(emb, impl="expr")
+    assert sq8_train(emb) == _sq8_reference(emb)
 
     df = spark.createDataFrame(
         [(1, [1.0, 5.0]), (2, [1.0, 7.0]), (3, [1.0, 6.0])],
         "vec_id long, embedding array<float>",
     ).repartition(3)
-    assert sq8_train(df, impl="numpy") == sq8_train(df, impl="expr")
+    assert sq8_train(df) == _sq8_reference(df) == ([1.0, 5.0], [1.0, 2.0 / 255.0])
 
 
 def test_sq8_train_numpy_matches_spark_nan_semantics(spark):
     """ADVICE r12: Spark orders NaN ABOVE every double, so F.min skips a
     NaN (returns the smallest real value) while F.max returns NaN when
     one is present; plain numpy min/max would propagate NaN to both
-    sides. Parity must hold on dirty vectors too — dim 0 has one NaN
-    (min real, max NaN → delta falls back to 1.0), dim 1 is clean, dim 2
-    is all-NaN (both sides NaN)."""
+    sides. The Arrow pass must match the Spark aggregate on dirty
+    vectors too — dim 0 has one NaN (min real, max NaN → delta falls
+    back to 1.0), dim 1 is clean, dim 2 is all-NaN (both sides NaN)."""
     import math
 
     from whatsapp_vectordb_spark.operators.ann import sq8_train
@@ -772,15 +808,30 @@ def test_sq8_train_numpy_matches_spark_nan_semantics(spark):
     def norm(t):  # NaN != NaN, so compare via a token
         return [["NaN" if isinstance(v, float) and math.isnan(v) else v for v in side] for side in t]
 
-    got_expr = sq8_train(df, impl="expr")
-    got_np = sq8_train(df, impl="numpy")
-    assert norm(got_np) == norm(got_expr)
-    assert norm(got_expr) == [[2.0, 10.0, "NaN"], [1.0, 20.0 / 255.0, 1.0]]
+    got = sq8_train(df)
+    assert norm(got) == norm(_sq8_reference(df))
+    assert norm(got) == [[2.0, 10.0, "NaN"], [1.0, 20.0 / 255.0, 1.0]]
+
+
+def test_sq8_train_skips_null_vectors(spark):
+    """The embedder emits NULL for empty or tokenless text: the train
+    pass — and the build's fused train + cell-count pass it shares —
+    skips such rows, as the Spark aggregate does."""
+    from whatsapp_vectordb_spark.operators.ann import _sq8_train_cell_counts, sq8_train
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [0.5, 2.0])],
+        "vec_id long, embedding array<double>",
+    ).repartition(2)
+    expected = ([0.5, 0.0], [0.5 / 255.0, 2.0 / 255.0])
+    assert sq8_train(df) == _sq8_reference(df) == expected
+    cells = df.withColumn("centroid", F.col("vec_id").cast("int"))
+    assert _sq8_train_cell_counts(cells, "embedding", 3) == (*expected, [1, 0, 1])
 
 
 def test_sq8_train_numpy_empty_and_ivf_sq8_no_cells_guard(spark, embeddings):
-    """Edge contracts: the Arrow train path returns ([], []) on an empty
-    frame exactly like the expr path; an empty probe-cell list raises
+    """Edge contracts: the Arrow train pass returns ([], []) on an empty
+    frame, as the Spark aggregate does; an empty probe-cell list raises
     instead of silently returning zero rows."""
     import pytest as _pt
 
@@ -792,8 +843,7 @@ def test_sq8_train_numpy_empty_and_ivf_sq8_no_cells_guard(spark, embeddings):
 
     emb = embeddings.select("vec_id", "embedding")
     empty = emb.where("vec_id < 0")
-    assert sq8_train(empty, impl="numpy") == ([], [])
-    assert sq8_train(empty, impl="expr") == ([], [])
+    assert sq8_train(empty) == _sq8_reference(empty) == ([], [])
 
     mins, deltas = sq8_train(emb)
     codes = sq8_encode(emb, mins, deltas).withColumn("centroid", F.lit(0))
@@ -3356,8 +3406,9 @@ def test_verify_layout_deep_catches_codes_vectors_divergence(
 
 def test_fused_sq8_train_cell_counts_matches_train_and_tripwire(spark, embeddings):
     """r18: IvfSq8Index.build's fused measurement pass must produce a
-    scaler BIT-IDENTICAL to sq8_train (both impls) and a tripwire
-    decision identical to the old cell_stats-over-MLlib route."""
+    scaler BIT-IDENTICAL to sq8_train and to a Spark min/max aggregate,
+    and a tripwire decision identical to the old cell_stats-over-MLlib
+    route."""
     from whatsapp_vectordb_spark.operators.ann import (
         IvfIndex,
         _sq8_train_cell_counts,
@@ -3369,9 +3420,7 @@ def test_fused_sq8_train_cell_counts_matches_train_and_tripwire(spark, embedding
     idx = IvfIndex.build(emb, n_centroids=8)
     assigned = assign_nearest_centroid(emb, idx.centroids, "embedding")
     mins_f, deltas_f, counts = _sq8_train_cell_counts(assigned, "embedding", 8)
-    for impl in ("expr", "numpy"):
-        m, d = sq8_train(emb, impl=impl)
-        assert mins_f == m and deltas_f == d, impl
+    assert (mins_f, deltas_f) == sq8_train(emb) == _sq8_reference(emb)
     total = sum(counts)
     assert total == emb.count()
     old_share = idx.cell_stats()["max_share"]

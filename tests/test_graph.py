@@ -157,7 +157,7 @@ def test_graph_beam_is_deterministic_and_visited_bounded(spark, embeddings):
 
     emb = embeddings.select("vec_id", "embedding")
     qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
-    edges = knn_graph_lsh(emb, k=3, n_planes=32, bands=4, impl="numpy", dim=64)
+    edges = knn_graph_lsh(emb, k=3, n_planes=32, bands=4, dim=64)
     a = graph_beam_topk(emb, edges, qvec, k=10, beam_width=4, iters=2).collect()
     b = graph_beam_topk(emb, edges, qvec, k=10, beam_width=4, iters=2).collect()
     assert a == b
@@ -197,7 +197,7 @@ def test_graph_beam_bucketed_path_equals_dataframe_path(
 
     emb = embeddings.select("vec_id", "embedding")
     qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
-    raw = knn_graph_lsh(emb, k=3, n_planes=32, bands=4, impl="numpy", dim=64)
+    raw = knn_graph_lsh(emb, k=3, n_planes=32, bands=4, dim=64)
     bucketed = save_knn_graph(raw, str(tmp_path / "beam_edges"), n_buckets=8)
 
     a = [
@@ -238,7 +238,7 @@ def test_graph_beam_batched_equals_single_calls(spark, embeddings, tmp_path):
 
     emb = embeddings.select("vec_id", "embedding")
     edges = save_knn_graph(
-        knn_graph_lsh(emb, k=3, n_planes=32, bands=4, impl="numpy", dim=64),
+        knn_graph_lsh(emb, k=3, n_planes=32, bands=4, dim=64),
         str(tmp_path / "beam_edges_b"),
         n_buckets=8,
     )
@@ -281,7 +281,7 @@ def test_graph_beam_filtered_collects_only_allowed_both_paths(
     allowed = emb3.where(F.col("label") == lbl).select("vec_id")
     allowed_ids = {r["vec_id"] for r in allowed.collect()}
 
-    raw = knn_graph_lsh(emb, k=5, n_planes=32, bands=8, impl="numpy", dim=64)
+    raw = knn_graph_lsh(emb, k=5, n_planes=32, bands=8, dim=64)
     bucketed = save_knn_graph(raw, str(tmp_path / "beam_edges_f"), n_buckets=8)
     kw = dict(k=5, beam_width=8, iters=3, n_entry=8)
 
@@ -324,7 +324,7 @@ def test_graph_index_any_split_equals_one_shot(spark, embeddings, tmp_path):
     one = sorted(
         (r["src"], r["nbr"], r["cos_sim"], r["rank"])
         for r in knn_graph_lsh(
-            emb, k=5, n_planes=32, bands=4, impl="numpy", dim=64
+            emb, k=5, n_planes=32, bands=4, dim=64
         ).collect()
     )
     # a THREE-way uneven split, folded mid-ingest — still bit-identical
@@ -368,7 +368,7 @@ def test_graph_index_time_travel_replays_first_batch(
     expect = sorted(
         (r["src"], r["nbr"], r["cos_sim"], r["rank"])
         for r in knn_graph_lsh(
-            b1, k=5, n_planes=32, bands=4, impl="numpy", dim=64
+            b1, k=5, n_planes=32, bands=4, dim=64
         ).collect()
     )
     assert old == expect

@@ -78,10 +78,41 @@ def test_pca_projection_centers_data(spark, embeddings):
         assert abs(float(np.mean(coords))) < 0.02, cid
 
 
-def test_jl_numpy_and_expr_impls_are_bit_identical(spark, embeddings):
-    from whatsapp_vectordb_spark.operators.projection import jl_project
+def _jl_reference(rows, in_dim: int, out_dim: int, seed: int) -> dict:
+    """JL projections from plain Python integers over collected rows:
+    quantize with round-half-away (Spark/DuckDB ``round``), then exact
+    ±1 sums."""
+    import math
 
+    signs = [[_jl_sign(seed, i, j) for i in range(in_dim)] for j in range(out_dim)]
+    out = {}
+    for r in rows:
+        q = [int(math.copysign(math.floor(abs(x) * 1_000_000 + 0.5), x)) for x in r["embedding"]]
+        out[r["vec_id"]] = [sum(s * v for s, v in zip(signs[j], q)) for j in range(out_dim)]
+    return out
+
+
+def test_jl_numpy_and_expr_impls_are_bit_identical(spark, embeddings):
+    """The Arrow kernel's int64 matmul must equal an exact Python-integer
+    reference over the collected rows, bit for bit."""
     emb = embeddings.select("vec_id", "embedding")
-    a = {r["vec_id"]: list(r["proj"]) for r in jl_project(emb, 64, 8, seed=3, impl="numpy").collect()}
-    b = {r["vec_id"]: list(r["proj"]) for r in jl_project(emb, 64, 8, seed=3, impl="expr").collect()}
-    assert a == b
+    got = {r["vec_id"]: list(r["proj"]) for r in jl_project(emb, 64, 8, seed=3).collect()}
+    assert got == _jl_reference(emb.collect(), 64, 8, seed=3)
+
+
+def test_jl_project_null_vector_gives_null_proj(spark):
+    """NULL in, NULL out: a NULL vector keeps its row with a NULL
+    projection; the other rows are projected as without it."""
+    df = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.5, 0.2]),
+            (1, [1.0, 0.0, 0.5, 0.2]),
+            (2, None),
+            (3, [0.9, 0.1, 0.5, 0.2]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    got = {r["vec_id"]: r["proj"] for r in jl_project(df, 4, 3).collect()}
+    assert set(got) == {0, 1, 2, 3} and got.pop(2) is None
+    real = df.where(F.col("embedding").isNotNull()).collect()
+    assert {i: list(p) for i, p in got.items()} == _jl_reference(real, 4, 3, seed=7)

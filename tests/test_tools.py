@@ -162,3 +162,76 @@ def test_schema_field_names_ddl_edge_forms():
     assert _schema_field_names("`weird col` string, b int") == ["weird col", "b"]
     assert _schema_field_names("a: int, b: string") == ["a", "b"]
     assert _schema_field_names("`x, y` int, z map<string,int>") == ["x, y", "z"]
+
+
+def _package_keyword_uses(path: str):
+    """Yield ``(line, callee, keyword, signature)`` for every keyword passed
+    in a call of a name imported from ``whatsapp_vectordb_spark`` in the
+    script at ``path`` — imports inside functions included — and in calls
+    of an attribute of such a name (``IvfSq8Index.build(...)``). Callees
+    that take ``**kwargs`` are skipped: any keyword is valid there."""
+    import ast
+    import importlib
+    import inspect
+
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    names = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+            "whatsapp_vectordb_spark"
+        ):
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                if hasattr(mod, a.name):
+                    names[a.asname or a.name] = getattr(mod, a.name)
+                else:  # a submodule
+                    names[a.asname or a.name] = importlib.import_module(
+                        f"{node.module}.{a.name}"
+                    )
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        fn = node.func
+        if isinstance(fn, ast.Name) and fn.id in names:
+            callee, label = names[fn.id], fn.id
+        elif (
+            isinstance(fn, ast.Attribute)
+            and isinstance(fn.value, ast.Name)
+            and fn.value.id in names
+            and hasattr(names[fn.value.id], fn.attr)
+        ):
+            callee = getattr(names[fn.value.id], fn.attr)
+            label = f"{fn.value.id}.{fn.attr}"
+        else:
+            continue
+        if not callable(callee):
+            continue
+        try:
+            sig = inspect.signature(callee)
+        except (TypeError, ValueError):  # builtins without a signature
+            continue
+        if any(p.kind is p.VAR_KEYWORD for p in sig.parameters.values()):
+            continue
+        for kw in node.keywords:
+            if kw.arg is not None:  # ``**opts`` expansions are unknowable
+                yield node.lineno, label, kw.arg, sig
+
+
+def test_tools_and_bench_call_package_apis_with_live_keywords():
+    """Stale-keyword lint: ``tools/*.py`` and ``bench.py`` mostly import the
+    package inside ``main()``/closures, so an API that loses a parameter
+    breaks them only when someone next runs them. Every keyword they pass
+    to a package callable must still be in its signature."""
+    import glob
+
+    scripts = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    scripts.append(os.path.join(REPO, "bench.py"))
+    stale, checked = [], 0
+    for path in scripts:
+        for line, callee, kw, sig in _package_keyword_uses(path):
+            checked += 1
+            if kw not in sig.parameters:
+                stale.append(f"{os.path.relpath(path, REPO)}:{line} {callee}(..., {kw}=)")
+    assert not stale, "keywords the callee no longer takes:\n" + "\n".join(stale)
+    assert checked > 100, checked  # the walk really reaches the calls

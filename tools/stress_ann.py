@@ -72,7 +72,7 @@ def main() -> None:
     approx = [
         r["vec_id"]
         for r in portable_lsh_topk(
-            index, query_id=0, k=10, n_planes=32, bands=4, round_to=6, impl="numpy"
+            index, query_id=0, k=10, n_planes=32, bands=4, round_to=6
         ).collect()
     ]
     out["lsh_topk_s"] = round(time.perf_counter() - t0, 3)

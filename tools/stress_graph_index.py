@@ -82,9 +82,7 @@ def main() -> None:
         out["edges_derive_s"] = round(time.time() - t0, 1)
 
         t0 = time.time()
-        one_shot = knn_graph_lsh(
-            corpus, impl="numpy", **{k: v for k, v in geometry.items()}
-        )
+        one_shot = knn_graph_lsh(corpus, **geometry)
         fp_one = fingerprint(one_shot)
         out["one_shot_rebuild_s"] = round(time.time() - t0, 1)
 

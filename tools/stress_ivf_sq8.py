@@ -127,7 +127,7 @@ def main() -> None:
 
     # --- SQ8 train (Arrow path) + encode + partitioned persist
     t0 = time.perf_counter()
-    mins, deltas = sq8_train(index, impl="numpy")
+    mins, deltas = sq8_train(index)
     out["sq8_train_s"] = round(time.perf_counter() - t0, 1)
 
     t0 = time.perf_counter()

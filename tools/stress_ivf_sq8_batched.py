@@ -102,7 +102,7 @@ def main() -> None:
     index = spark.read.parquet(corpus_path)
 
     t0 = time.perf_counter()
-    mins, deltas = sq8_train(index, impl="numpy")
+    mins, deltas = sq8_train(index)
     sample = index.sample(fraction=min(1.0, 50_000 / n), seed=1)
     proto = IvfIndex.build_portable(sample, n_centroids=N_CENTROIDS, iters=5)
     assigned = proto.assign(index).select("vec_id", "centroid")

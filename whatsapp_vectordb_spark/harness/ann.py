@@ -160,12 +160,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whatsapp_vectordb_spark.operators.ann import portable_lsh_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    # numpy impl computes bit-identical integer signatures (one int64
-    # matmul per batch); dim comes from the fixture registry, not a
-    # scan-first-row driver job
+    # dim comes from the fixture registry, not a scan-first-row driver job
     return portable_lsh_topk(
         emb, query_id=0, k=10, n_planes=16, bands=4, seed=0, round_to=ROUND_SCORE,
-        impl="numpy", dim=64,
+        dim=64,
     )
 
 
@@ -221,7 +219,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return portable_lsh_topk_multiprobe(
         emb, query_id=0, k=10, n_planes=16, bands=4, seed=0, round_to=ROUND_SCORE,
-        impl="numpy", dim=64,
+        dim=64,
     )
 
 
@@ -643,7 +641,7 @@ def ann_lsh_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return portable_lsh_topk_batched(
         emb, query_ids=[0, 1, 2], k=5, n_planes=16, bands=4, seed=0, round_to=ROUND_SCORE,
-        impl="numpy", dim=64,
+        dim=64,
     )
 
 
@@ -829,7 +827,7 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whatsapp_vectordb_spark.operators.ann import knn_graph_lsh
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return knn_graph_lsh(emb, k=5, n_planes=32, bands=4, impl="numpy", dim=64)
+    return knn_graph_lsh(emb, k=5, n_planes=32, bands=4, dim=64)
 
 
 # ==========================================================================
@@ -2044,7 +2042,7 @@ def ann_lsh_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     lsh10 = portable_lsh_topk(
         emb, query_id=0, k=10, n_planes=16, bands=4, seed=0,
-        round_to=ROUND_SCORE, impl="numpy", dim=64,
+        round_to=ROUND_SCORE, dim=64,
     ).select("vec_id")
     qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
     exact = topk(
@@ -4608,7 +4606,7 @@ def ann_graph_beam_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
     edges = save_knn_graph(
-        knn_graph_lsh(emb, k=5, n_planes=32, bands=4, impl="numpy", dim=64),
+        knn_graph_lsh(emb, k=5, n_planes=32, bands=4, dim=64),
         os.path.join(_GRAPH_BEAM_DIR, "edges"),
         n_buckets=16,
     )
@@ -4672,7 +4670,7 @@ def ann_graph_beam_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
     edges = save_knn_graph(
-        knn_graph_lsh(emb, k=10, n_planes=32, bands=8, impl="numpy", dim=64),
+        knn_graph_lsh(emb, k=10, n_planes=32, bands=8, dim=64),
         os.path.join(_GRAPH_BEAM_GATE_DIR, "edges"),
         n_buckets=16,
     )
@@ -4784,7 +4782,7 @@ def ann_graph_beam_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     edges = save_knn_graph(
-        knn_graph_lsh(emb, k=5, n_planes=32, bands=4, impl="numpy", dim=64),
+        knn_graph_lsh(emb, k=5, n_planes=32, bands=4, dim=64),
         os.path.join(_GRAPH_BEAM_BATCH_DIR, "edges"),
         n_buckets=16,
     )
@@ -4843,7 +4841,7 @@ def ann_graph_beam_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lbl = emb3.where(F.col("vec_id") == 7).head()["label"]
     allowed = emb3.where(F.col("label") == lbl).select("vec_id")
     edges = save_knn_graph(
-        knn_graph_lsh(emb, k=10, n_planes=32, bands=8, impl="numpy", dim=64),
+        knn_graph_lsh(emb, k=10, n_planes=32, bands=8, dim=64),
         os.path.join(_GRAPH_BEAM_FILTER_DIR, "edges"),
         n_buckets=16,
     )

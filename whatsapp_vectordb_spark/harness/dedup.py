@@ -294,7 +294,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=4,
         seed=0,
         round_to=ROUND_SCORE,
-        impl="numpy",
         dim=64,
     )
 
@@ -380,7 +379,6 @@ def dedup_components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=4,
         seed=0,
         round_to=ROUND_SCORE,
-        impl="numpy",
         dim=64,
     )
     return canonicalize_duplicates(pairs)

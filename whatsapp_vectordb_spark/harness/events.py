@@ -497,7 +497,7 @@ def graph_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whatsapp_vectordb_spark.operators.graph import pagerank
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    edges = knn_graph_lsh(emb, k=5, n_planes=32, bands=4, impl="numpy", dim=64).select(
+    edges = knn_graph_lsh(emb, k=5, n_planes=32, bands=4, dim=64).select(
         "src", F.col("nbr").alias("dst")
     )
     return pagerank(edges, iters=3, scale=1_000_000, damping_num=85, damping_den=100)
@@ -824,7 +824,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whatsapp_vectordb_spark.operators.graph import triangle_count
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    edges = knn_graph_lsh(emb, k=5, n_planes=32, bands=4, impl="numpy", dim=64).select(
+    edges = knn_graph_lsh(emb, k=5, n_planes=32, bands=4, dim=64).select(
         F.col("src").cast("long").alias("src"), F.col("nbr").cast("long").alias("dst")
     )
     path = os.path.join(_TRI_DIR, "edges")

@@ -4,12 +4,12 @@ Exact brute force (operators/search.py) is a full scan per query batch;
 fine up to ~10^8 vectors × small query counts, wrong at 100 TB. Two
 ANN strategies, both pure DataFrame-to-DataFrame (no custom Catalyst):
 
-- **Random-hyperplane LSH** (``cosine_lsh_*``): sign-bit signatures under
-  ``n_planes`` fixed random hyperplanes → vectors bucketed by signature
+- **Random-hyperplane LSH** (``portable_lsh_*``): sign-bit signatures
+  under ``n_planes`` fixed ±1 hyperplanes → vectors bucketed by signature
   band; a query probes only matching buckets. Collision probability for
   angle θ is (1 - θ/π)^bits — band/rows tuning identical to MinHash.
-  Implemented with HOF expressions (JVM-side); the plane matrix is a
-  broadcast literal.
+  Signatures are one Arrow-batched int64 matmul per partition over
+  integer-quantized vectors, so a SQL oracle reproduces every bucket.
 - **IVF (inverted-file) partitioning** (``IvfIndex``): k-means coarse
   centroids (MLlib); each vector is assigned to its nearest centroid and
   the table is *written partitioned by centroid id*. A query scores the
@@ -75,11 +75,6 @@ def _run_writes(thunks) -> None:
             f.result()
 
 
-def _random_planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim))
-
-
 def _resolve_dim(index_df: DataFrame, vec_col: str, dim: int | None) -> int:
     """Vector dimension, preferably caller-provided (from the index
     registry, ``types.INDEX_REGISTRY_SCHEMA.dimension``). The ``head()``
@@ -107,90 +102,12 @@ def _stored_query_vec(index_df: DataFrame, id_col: str, vec_col: str, query_id):
     return row[0]
 
 
-def _signature_col(vec_col, planes: np.ndarray):
-    """Bit-signature as a string of sign bits — computed with zip_with/
-    aggregate HOFs per plane, whole-stage codegen'd."""
-    bits = []
-    for row in planes:
-        plane = array_lit(row, "double")
-        dot = F.aggregate(
-            F.zip_with(vec_col, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
-def cosine_lsh_bucketize(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    bands: int = 4,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Attach ``band``/``bucket`` columns: the signature is split into
-    ``bands`` chunks; each (band, chunk) pair is a bucket key. Output has
-    one row per input row per band (multi-probe)."""
-    dim = _resolve_dim(df, vec_col, dim)
-    planes = _random_planes(dim, n_planes, seed)
-    sig = _signature_col(F.col(vec_col), planes).alias("_sig")
-    with_sig = df.withColumn("_sig", sig)
-    rows_per_band = n_planes // bands
-    out = None
-    for b in range(bands):
-        part = with_sig.select(
-            "*",
-            F.lit(b).alias("band"),
-            F.substring("_sig", b * rows_per_band + 1, rows_per_band).alias("bucket"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out.drop("_sig")
-
-
-def cosine_lsh_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str = "id_a",
-    right_id: str = "id_b",
-    vec_col: str = "embedding",
-    threshold: float = 0.8,
-    n_planes: int = 16,
-    bands: int = 4,
-    seed: int = 42,
-    round_to: int = 6,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate similarity join: candidate pairs share an LSH bucket in
-    ≥1 band, then exact cosine verification ≥ threshold. The join is on
-    (band, bucket) — shuffle proportional to collisions, never |L|×|R|."""
-    dim = _resolve_dim(left, vec_col, dim)
-    lb = cosine_lsh_bucketize(left, vec_col, n_planes, bands, seed, dim=dim).select(
-        F.col(left_id), F.col(vec_col).alias("_va"), "band", "bucket"
-    )
-    rb = cosine_lsh_bucketize(right, vec_col, n_planes, bands, seed, dim=dim).select(
-        F.col(right_id), F.col(vec_col).alias("_vb"), "band", "bucket"
-    )
-    cand = (
-        lb.join(rb, ["band", "bucket"])
-        .where(F.col(left_id) < F.col(right_id))
-        .select(left_id, right_id, "_va", "_vb")
-        .dropDuplicates([left_id, right_id])
-    )
-    return cand.select(
-        left_id,
-        right_id,
-        F.round(cosine_similarity("_va", "_vb"), round_to).alias("cos_sim"),
-    ).where(F.col("cos_sim") >= threshold)
-
-
 # ---------------------------------------------------------------------------
-# Portable LSH: same sign-random-projection idea as cosine_lsh_*, but every
-# arithmetic step is exact-integer so a SQL oracle reproduces buckets
-# bit-for-bit: components quantized to round(x·10^6) BIGINT, hyperplanes are
-# ±1 vectors derived from md5 nibbles. Integer sums are order-independent, so
-# Spark's fold and DuckDB's vectorized sum agree exactly — no float-sign
+# Portable LSH: sign-random-projection where every arithmetic step is
+# exact-integer so a SQL oracle reproduces buckets bit-for-bit: components
+# quantized to round(x·10^6) BIGINT, hyperplanes are ±1 vectors derived from
+# md5 nibbles. Integer sums are order-independent, so the Arrow kernel's
+# int64 matmul and DuckDB's vectorized sum agree exactly — no float-sign
 # flakiness at the bucket boundary.
 # ---------------------------------------------------------------------------
 
@@ -212,30 +129,11 @@ def portable_planes(dim: int, n_planes: int, seed: int = 0) -> list[list[int]]:
     ]
 
 
-def portable_signature(vec_col, planes: list[list[int]]):
-    """Bit-string signature over quantized integer dot products (exact)."""
-    vec_col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    q = F.transform(
-        vec_col, lambda x: F.round(x.cast("double") * PORTABLE_QUANT).cast("long")
-    )
-    bits = []
-    for row in planes:
-        plane = array_lit(row, "int")
-        dot = F.aggregate(
-            F.zip_with(q, plane, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def portable_signature_numpy(df: DataFrame, planes, id_col: str, vec_col: str) -> DataFrame:
-    """The same integer-exact signature as ``portable_signature``, computed
-    as one Arrow-batched int64 matmul per partition instead of ``n_planes``
-    interpreted HOF folds per row. Bit-for-bit identical buckets (quantize →
-    integer dot → sign); use at scale, keep the expression form for the SQL
-    oracle's sake at verification scale."""
+    """``(id, _sig)``: each vector's portable signature — quantize → int64
+    dot with every ±1 plane → sign bit — as one Arrow-batched matmul per
+    partition. Rows with a NULL vector get no signature: they can never
+    verify against anything, so they never become a candidate."""
     import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
@@ -250,6 +148,9 @@ def portable_signature_numpy(df: DataFrame, planes, id_col: str, vec_col: str) -
 
     def sign_bits(batches):
         for pdf in batches:
+            # the embedder emits NULL for empty or tokenless text; asarray
+            # would raise on such a row
+            pdf = pdf[pdf[vec_col].notna()]
             if pdf.empty:
                 continue
             v = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
@@ -269,6 +170,56 @@ def _query_signature(query_vec, planes) -> str:
     return "".join("1" if b else "0" for b in (pl @ q) >= 0)
 
 
+def _portable_bands(
+    df: DataFrame, planes, bands: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """``(id, band, chunk)``: each signature split into ``bands`` chunks of
+    ``len(planes) // bands`` bits — the band keys every portable-LSH
+    operator and ``KnnGraphIndex`` join on, so stored and one-shot keys are
+    bit-compatible by construction. Only the id rides through the explode;
+    candidates re-acquire vectors by id afterwards."""
+    rows_per_band = len(planes) // bands
+    sig = portable_signature_numpy(df, planes, id_col, vec_col)
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.substring("_sig", b * rows_per_band + 1, rows_per_band).alias("chunk"),
+        )
+        for b in range(bands)
+    ]
+    return sig.select(id_col, F.explode(F.array(*band_structs)).alias("bk")).select(
+        id_col, F.col("bk.band").alias("band"), F.col("bk.chunk").alias("chunk")
+    )
+
+
+def _query_bands(query_vec, planes, bands: int) -> list[tuple[int, str]]:
+    """The query's ``(band, chunk)`` keys, driver-side — the same split
+    ``_portable_bands`` applies to the index."""
+    rows_per_band = len(planes) // bands
+    qsig = _query_signature(query_vec, planes)
+    return [
+        (b, qsig[b * rows_per_band : (b + 1) * rows_per_band]) for b in range(bands)
+    ]
+
+
+def _bucket_candidates(
+    index_df: DataFrame, planes, bands: int, probes, id_col: str, vec_col: str
+) -> DataFrame:
+    """``(id, vec)`` of the index rows sharing ≥1 probe ``(band, chunk)``
+    key, the probe keys broadcast against the banded index. Callers build
+    the probes driver-side from the query vector (a point lookup + a (P,)
+    matvec), never by a second signature scan of the index to read the
+    query's row."""
+    qb = index_df.sparkSession.createDataFrame(probes, "band int, chunk string")
+    cand_ids = (
+        _portable_bands(index_df, planes, bands, id_col, vec_col)
+        .join(F.broadcast(qb), ["band", "chunk"])
+        .select(id_col)
+        .dropDuplicates([id_col])
+    )
+    return index_df.join(cand_ids, id_col).select(id_col, vec_col)
+
+
 def portable_lsh_topk(
     index_df: DataFrame,
     query_id,
@@ -279,66 +230,27 @@ def portable_lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    impl: str = "expr",
     dim: int | None = None,
 ) -> DataFrame:
     """ANN top-k for a stored query vector (`query_id` row): candidates are
     vectors sharing ≥1 LSH band bucket with the query, then exact cosine
     top-k over candidates only.
 
-    Plan shape: one signature map over the index, a broadcast join against
-    the query's ``bands`` bucket keys, then the TakeOrderedAndProject top-k
-    — the full-scan cosine of ``topk`` is replaced by a bucket-pruned scan;
-    recall and candidate volume are governed by (planes, bands): each band
-    chunk has ``n_planes/bands`` bits, so a random non-neighbor collides
-    w.p. ≈ bands · 2^-(n_planes/bands) — size chunks ≥ 8 bits at scale.
-
-    ``impl='expr'`` builds signatures with integer HOF expressions (exactly
-    reproducible in the SQL oracle); ``impl='numpy'`` computes the SAME
-    bits via an Arrow-batched int64 matmul (~n_planes× fewer per-row ops —
-    the form to run on a big index).
+    Plan shape: one Arrow signature map over the index, a broadcast join
+    against the query's ``bands`` bucket keys (computed driver-side), then
+    the TakeOrderedAndProject top-k — the full-scan cosine of ``topk`` is
+    replaced by a bucket-pruned scan; recall and candidate volume are
+    governed by (planes, bands): each band chunk has ``n_planes/bands``
+    bits, so a random non-neighbor collides w.p. ≈ bands ·
+    2^-(n_planes/bands) — size chunks ≥ 8 bits at scale. NULL vectors are
+    never candidates.
     """
-    rows_per_band = n_planes // bands
     dim = _resolve_dim(index_df, vec_col, dim)
     planes = portable_planes(dim, n_planes, seed)
-    if impl == "numpy":
-        sig = portable_signature_numpy(index_df, planes, id_col, vec_col)
-    else:
-        sig = index_df.select(
-            F.col(id_col), portable_signature(vec_col, planes).alias("_sig")
-        )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.substring("_sig", b * rows_per_band + 1, rows_per_band).alias("chunk"),
-        )
-        for b in range(bands)
-    ]
-    # band only (id, band, chunk) — never drag the wide vector through the
-    # explode + join; candidates re-acquire vectors by id afterwards
-    banded = sig.select(id_col, F.explode(F.array(*band_structs)).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.chunk").alias("chunk")
-    )
     qvec = _stored_query_vec(index_df, id_col, vec_col, query_id)
-    if impl == "numpy":
-        # the query's band keys DRIVER-SIDE (same quantize → int64 dot →
-        # sign rule as the distributed numpy scan, so buckets agree
-        # bit-for-bit): a point lookup + a (P,) matvec replaces a second
-        # full signature scan of the index just to read one row
-        qsig = _query_signature(qvec, planes)
-        qb_local = index_df.sparkSession.createDataFrame(
-            [(b, qsig[b * rows_per_band : (b + 1) * rows_per_band]) for b in range(bands)],
-            "band int, chunk string",
-        )
-        qb = qb_local.select(F.col("band"), F.col("chunk"))
-    else:
-        qb = banded.where(F.col(id_col) == query_id).select("band", "chunk")
-    cand_ids = (
-        banded.join(F.broadcast(qb), ["band", "chunk"])
-        .select(id_col)
-        .dropDuplicates([id_col])
+    cand = _bucket_candidates(
+        index_df, planes, bands, _query_bands(qvec, planes, bands), id_col, vec_col
     )
-    cand = index_df.join(cand_ids, id_col).select(id_col, vec_col)
     return topk(cand, qvec, k=k, id_col=id_col, vec_col=vec_col, round_to=round_to)
 
 
@@ -352,7 +264,6 @@ def portable_lsh_topk_multiprobe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    impl: str = "expr",
     dim: int | None = None,
 ) -> DataFrame:
     """Multi-probe ANN top-k: in each band, probe the query's own bucket
@@ -363,54 +274,23 @@ def portable_lsh_topk_multiprobe(
     extra index state (Lv et al., VLDB'07, applied to sign-LSH).
 
     Scale shape is unchanged from ``portable_lsh_topk``: one signature map
-    over the index, probe keys built on the tiny query side (bands ×
-    (1+rows_per_band) rows) and broadcast; candidate volume grows ~5× for
-    4-bit chunks but the index is still scanned once and never |probes|×N.
+    over the index, probe keys built driver-side (bands × (1+rows_per_band)
+    rows) and broadcast; candidate volume grows ~5× for 4-bit chunks but
+    the index is still scanned once and never |probes|×N.
     """
-    rows_per_band = n_planes // bands
     dim = _resolve_dim(index_df, vec_col, dim)
     planes = portable_planes(dim, n_planes, seed)
-    if impl == "numpy":
-        sig = portable_signature_numpy(index_df, planes, id_col, vec_col)
-    else:
-        sig = index_df.select(
-            F.col(id_col), portable_signature(vec_col, planes).alias("_sig")
-        )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.substring("_sig", b * rows_per_band + 1, rows_per_band).alias("chunk"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(id_col, F.explode(F.array(*band_structs)).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.chunk").alias("chunk")
-    )
-    # probe keys: the query's chunk plus each 1-bit flip of it, per band
-    qchunks = banded.where(F.col(id_col) == query_id).select(
-        "band", F.col("chunk").alias("_chunk_src")
-    )
-    variants = [F.col("_chunk_src")] + [
-        F.concat(
-            F.substring("_chunk_src", 1, j),
-            F.when(F.substring("_chunk_src", j + 1, 1) == "1", F.lit("0")).otherwise(
-                F.lit("1")
-            ),
-            F.substring("_chunk_src", j + 2, rows_per_band),
-        )
-        for j in range(rows_per_band)
-    ]
-    qb = (
-        qchunks.select("band", F.explode(F.array(*variants)).alias("chunk"))
-        .dropDuplicates(["band", "chunk"])
-    )
-    cand_ids = (
-        banded.join(F.broadcast(qb), ["band", "chunk"])
-        .select(id_col)
-        .dropDuplicates([id_col])
-    )
-    cand = index_df.join(cand_ids, id_col).select(id_col, vec_col)
     qvec = _stored_query_vec(index_df, id_col, vec_col, query_id)
+    # probe keys: the query's chunk plus each 1-bit flip of it, per band
+    qbands = _query_bands(qvec, planes, bands)
+    flips = [
+        (b, c[:j] + "10"[int(c[j])] + c[j + 1 :])
+        for b, c in qbands
+        for j in range(len(c))
+    ]
+    cand = _bucket_candidates(
+        index_df, planes, bands, sorted(set(qbands + flips)), id_col, vec_col
+    )
     return topk(cand, qvec, k=k, id_col=id_col, vec_col=vec_col, round_to=round_to)
 
 
@@ -423,7 +303,6 @@ def portable_lsh_join(
     bands: int = 4,
     seed: int = 0,
     round_to: int = 6,
-    impl: str = "expr",
     dim: int | None = None,
 ) -> DataFrame:
     """Scale-safe embedding near-duplicate SELF-join: candidate pairs
@@ -438,6 +317,7 @@ def portable_lsh_join(
     candidate set bit-reproducible in a SQL oracle. Recall follows the
     band S-curve: a true cos≈τ pair lands together w.p.
     1-(1-p^r)^b with p = 1 - θ/π; exact duplicates always collide.
+    NULL vectors never pair.
 
     Sizing: the defaults (16 planes / 4 bands = 4-bit chunks, 16 buckets
     per band) are gate-scale; at n ≥ ~2k random collisions flood the band
@@ -447,30 +327,13 @@ def portable_lsh_join(
     budget by raising n_planes. Oracle-pinned queries pass these
     explicitly, so the defaults stay stable.
     """
-    rows_per_band = n_planes // bands
     dim = _resolve_dim(df, vec_col, dim)
     planes = portable_planes(dim, n_planes, seed)
-    if impl == "numpy":
-        sig = portable_signature_numpy(df, planes, id_col, vec_col)
-    else:
-        sig = df.select(
-            F.col(id_col), portable_signature(vec_col, planes).alias("_sig")
-        )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.substring("_sig", b * rows_per_band + 1, rows_per_band).alias("chunk"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(id_col, F.explode(F.array(*band_structs)).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.chunk").alias("chunk")
-    )
     # cache the tiny banded frame (ids × bands): the self-join otherwise
     # evaluates the whole signature pass once PER SIDE — the broadcast
     # build job materializes the cache, the probe side reuses it (r18;
     # same discipline as minhash_near_duplicates' banded cache)
-    banded = banded.cache()
+    banded = _portable_bands(df, planes, bands, id_col, vec_col).cache()
     a, b_ = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -1672,7 +1535,6 @@ def portable_lsh_topk_batched(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    impl: str = "expr",
     dim: int | None = None,
 ) -> DataFrame:
     """Batched ANN: many stored query vectors probed in ONE pass. The
@@ -1683,25 +1545,9 @@ def portable_lsh_topk_batched(
     once regardless of |Q| (vs |Q| passes for repeated single probes);
     shuffle is candidates only, never |Q|×N.
     """
-    rows_per_band = n_planes // bands
     dim = _resolve_dim(index_df, vec_col, dim)
     planes = portable_planes(dim, n_planes, seed)
-    if impl == "numpy":
-        sig = portable_signature_numpy(index_df, planes, id_col, vec_col)
-    else:
-        sig = index_df.select(
-            F.col(id_col), portable_signature(vec_col, planes).alias("_sig")
-        )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.substring("_sig", b * rows_per_band + 1, rows_per_band).alias("chunk"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(id_col, F.explode(F.array(*band_structs)).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.chunk").alias("chunk")
-    )
+    banded = _portable_bands(index_df, planes, bands, id_col, vec_col)
     qb = banded.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), "band", "chunk"
     )
@@ -1742,7 +1588,6 @@ def knn_graph_lsh(
     bands: int = 4,
     seed: int = 0,
     round_to: int = 6,
-    impl: str = "numpy",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate kNN GRAPH over the whole corpus — for every vector, its
@@ -1769,7 +1614,6 @@ def knn_graph_lsh(
         bands=bands,
         seed=seed,
         round_to=round_to,
-        impl=impl,
         dim=dim,
     )
     # symmetrize with ONE explode instead of a self-union (r18, guide
@@ -2557,42 +2401,29 @@ def binary_hamming_topk(
 def _sq8_spark_min_fold(m: "np.ndarray") -> "np.ndarray":
     """Columnwise min under Spark's ordering: NaN ranks above +inf, so it
     never wins a min unless the whole column is NaN (the F.min-skips-NaN
-    parity rule the numpy train paths share — ADVICE r12)."""
+    parity rule of the SQ8 train — ADVICE r12)."""
     isnan = np.isnan(m)
     out = np.where(isnan, np.inf, m).min(axis=0)
     return np.where(isnan.all(axis=0), np.nan, out)
 
 
-def _sq8_scaler_from_minmax(mn, mx) -> tuple[list[float], list[float]]:
-    """The shared driver-side scaler post-processing: delta=(max-min)/255,
-    constant dims delta=1 — identical across the expr, numpy and fused
-    train paths (min/max are exact in any association, so all three are
-    bit-identical by construction)."""
-    mins = [float(v) for v in mn]
-    deltas = [
-        ((float(b) - float(a)) / 255.0) if b > a else 1.0
-        for a, b in zip(mn, mx)
-    ]
-    return mins, deltas
-
-
 def _sq8_train_cell_counts(
     assigned: DataFrame, vec_col: str, n_cells: int
 ) -> tuple[list[float], list[float], list[int]]:
-    """FUSED scaler train + layout tripwire input (r18, guide §1.2): ONE
-    Arrow pass over the house-assigned frame computes the per-dimension
-    (min, max) — bit-identical to ``sq8_train`` in either impl — AND the
-    per-centroid occupancy counts the degenerate-layout tripwire
-    thresholds. Replaces two separate jobs per build (the MLlib
-    ``model.transform`` + aggregate behind ``cell_stats`` and the
-    ``sq8_train`` aggregate). Empty input returns ([], [], zeros) —
-    matching ``sq8_train``'s ([], []) on empty."""
+    """ONE Arrow pass over a cell-assigned frame: the per-dimension SQ8
+    scaler (``sq8_train``'s contract) AND the per-centroid occupancy
+    counts the degenerate-layout tripwire thresholds. Each partition
+    folds its batches to one (min, max, counts) row; the driver folds
+    those rows. min/max are exact under any association, so the result
+    does not depend on the partitioning. Rows with a NULL vector are
+    skipped. Empty input returns ([], [], zeros)."""
     def part_stats(batches):
         import pandas as pd
 
         mn = mx = None
         cnt = np.zeros(n_cells, dtype=np.int64)
         for pdf in batches:
+            pdf = pdf[pdf[vec_col].notna()]  # F.min/F.max skip NULL rows too
             if len(pdf) == 0:
                 continue
             m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
@@ -2621,80 +2452,39 @@ def _sq8_train_cell_counts(
     mn = _sq8_spark_min_fold(np.array([r["mn"] for r in parts], dtype=np.float64))
     mx = np.max(np.array([r["mx"] for r in parts], dtype=np.float64), axis=0)
     counts = np.sum([r["cnt"] for r in parts], axis=0, dtype=np.int64)
-    mins, deltas = _sq8_scaler_from_minmax(mn, mx)
+    mins = [float(v) for v in mn]
+    deltas = [
+        ((float(b) - float(a)) / 255.0) if b > a else 1.0
+        for a, b in zip(mn, mx)
+    ]
     return mins, deltas, [int(c) for c in counts]
 
 
 def sq8_train(
-    df: DataFrame, vec_col: str = "embedding", impl: str = "expr"
+    df: DataFrame, vec_col: str = "embedding"
 ) -> tuple[list[float], list[float]]:
     """Per-dimension (min, delta) for 8-bit scalar quantization (the
     FAISS ``SQ8`` tier): delta = (max-min)/255, constant dims get
-    delta=1 so their code is exactly 0. Training is ONE aggregate —
-    fully analytic, no RNG, no iteration — which is what lets the whole
-    SQ8 tier (train + encode + score) be replayed end-to-end by a SQL
-    oracle, unlike the k-means-built tiers whose build is opaque. The
-    collect is dim-bounded (one row per dimension).
-
-    ``impl="expr"`` (default, oracle-parity form) aggregates over a
-    posexplode — N·dim rows through a dim-keyed partial aggregate; fine
-    at gate scale, but at 1M×1536 that is 1.5B exploded rows.
-    ``impl="numpy"`` computes per-PARTITION min/max vectors in one Arrow
-    pass (``mapInPandas`` emitting one 2×dim row per partition) and
-    folds them driver-side — bit-identical output (min/max are exact in
-    any association) with the explode and the shuffle gone; the at-scale
-    train for the same reason the scoring paths have numpy twins.
+    delta=1 so their code is exactly 0. Training is ONE pass — fully
+    analytic, no RNG, no iteration — which is what lets the whole SQ8
+    tier (train + encode + score) be replayed end-to-end by a SQL oracle
+    (``min``/``max`` per dimension), unlike the k-means-built tiers whose
+    build is opaque. It is the Arrow min/max pass ``IvfSq8Index.build``
+    runs (``_sq8_train_cell_counts`` over one constant cell): one 2×dim
+    row per partition, folded driver-side — no explode, no shuffle.
+    NULL vectors are skipped; empty input gives ([], []).
 
     NaN parity (ADVICE r12): Spark orders NaN GREATER than every other
     double, so ``F.min`` skips NaN (returns the smallest real value;
     NaN only if the whole column is NaN) while ``F.max`` returns NaN
     whenever one is present. numpy's plain min/max propagate NaN to
-    BOTH sides, which would silently break the expr/numpy parity
-    contract on dirty vectors — so the numpy fold reduces min under
-    the same NaN-as-greater-than-all ordering (``_spark_min_fold``;
-    plain max already matches Spark's propagate-on-max)."""
-    if impl == "numpy":
-        _spark_min_fold = _sq8_spark_min_fold
-
-        def part_minmax(batches):
-            import pandas as pd
-
-            mn = mx = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                pmn, pmx = _spark_min_fold(m), m.max(axis=0)
-                mn = pmn if mn is None else _spark_min_fold(np.vstack([mn, pmn]))
-                mx = pmx if mx is None else np.maximum(mx, pmx)
-            if mn is not None:
-                yield pd.DataFrame({"mn": [mn.tolist()], "mx": [mx.tolist()]})
-
-        parts = (
-            df.select(vec_col)
-            .mapInPandas(
-                part_minmax, schema="mn array<double>, mx array<double>"
-            )
-            .collect()
-        )
-        if not parts:
-            return [], []  # empty input: match the expr path's ([], [])
-        # collect() surfaces a NaN array element as None — cast back to
-        # float64 (None -> NaN) before folding
-        mn = _spark_min_fold(np.array([r["mn"] for r in parts], dtype=np.float64))
-        mx = np.max(np.array([r["mx"] for r in parts], dtype=np.float64), axis=0)
-        return _sq8_scaler_from_minmax(mn, mx)
-    rows = (
-        df.select(F.posexplode(F.col(vec_col)).alias("d", "x"))
-        .groupBy("d")
-        .agg(
-            F.min(F.col("x").cast("double")).alias("mn"),
-            F.max(F.col("x").cast("double")).alias("mx"),
-        )
-        .orderBy("d")
-        .collect()
+    BOTH sides, so the fold reduces min under the same
+    NaN-as-greater-than-all ordering (``_sq8_spark_min_fold``; plain
+    max already matches Spark's propagate-on-max)."""
+    mins, deltas, _ = _sq8_train_cell_counts(
+        df.select(vec_col, F.lit(0).alias("centroid")), vec_col, 1
     )
-    return _sq8_scaler_from_minmax([r["mn"] for r in rows], [r["mx"] for r in rows])
+    return mins, deltas
 
 
 def sq8_encode(
@@ -4413,11 +4203,10 @@ class IvfSq8Index:
         FUSED measurement pass (r18, guide §1.2/§2.3): the scaler train
         and the tripwire's occupancy counts ride ONE Arrow pass over the
         house nearest-centroid assignment (``_sq8_train_cell_counts``)
-        instead of two jobs — the ``sq8_train`` aggregate (whose expr
-        form posexplodes N·dim rows through a shuffle) and the MLlib
-        ``model.transform`` + aggregate behind ``cell_stats``. The
-        scaler is bit-identical to ``sq8_train`` in either impl (min/max
-        are exact in any association). The degenerate-layout tripwire now
+        instead of two jobs — a separate ``sq8_train`` pass and the
+        MLlib ``model.transform`` + aggregate behind ``cell_stats``. The
+        scaler is bit-identical to ``sq8_train``, which runs the same
+        pass over one constant cell. The degenerate-layout tripwire now
         thresholds ``max_share`` of the house nearest-centroid
         assignment of the FULL corpus — the layout actually being
         persisted — not MLlib's assignment of the fit sample. Same

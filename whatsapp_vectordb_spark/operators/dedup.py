@@ -395,7 +395,7 @@ def embedding_near_duplicates(
 ) -> DataFrame:
     """Exact cosine near-dup pairs ``(id_a, id_b, cos_sim)`` with
     cos ≥ threshold. All-pairs — correct at verification scale; at 100 TB
-    use ``ann.cosine_lsh_join`` to generate candidates first and this
+    use ``ann.portable_lsh_join`` to generate candidates first and this
     verify on the survivors."""
     a = emb_df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = emb_df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))

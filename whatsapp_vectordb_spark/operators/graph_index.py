@@ -84,34 +84,19 @@ class KnnGraphIndex(_BatchDirIndex):
         self.vec_col = vec_col
 
     def _banded(self, df: DataFrame) -> DataFrame:
-        """Portable banded signatures of one batch — the identical
-        quantize → ±1 md5 planes → sign → band-substring pipeline the
-        one-shot join uses (``portable_lsh_join``), so stored keys are
-        bit-compatible with any engine replay."""
+        """Portable banded signatures of one batch — the band keys
+        ``portable_lsh_join`` joins on (``ann._portable_bands``), so
+        stored keys are bit-compatible with the one-shot join and any
+        engine replay."""
         from whatsapp_vectordb_spark.operators.ann import (
+            _portable_bands,
             _resolve_dim,
             portable_planes,
-            portable_signature_numpy,
         )
 
         dim = _resolve_dim(df, self.vec_col, self.dim)
         planes = portable_planes(dim, self.n_planes, self.seed)
-        sig = portable_signature_numpy(df, planes, self.id_col, self.vec_col)
-        rows = self.n_planes // self.bands
-        band_structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.substring("_sig", b * rows + 1, rows).alias("chunk"),
-            )
-            for b in range(self.bands)
-        ]
-        return sig.select(
-            self.id_col, F.explode(F.array(*band_structs)).alias("bk")
-        ).select(
-            self.id_col,
-            F.col("bk.band").alias("band"),
-            F.col("bk.chunk").alias("chunk"),
-        )
+        return _portable_bands(df, planes, self.bands, self.id_col, self.vec_col)
 
     def add_batch(self, df: DataFrame) -> int:
         """Fold one vector batch in: band the batch, find candidate

@@ -14,8 +14,8 @@ Two standard tiers in front of ANN / near-dup search:
   broadcast back as literals; projection is one map-only pass.
 
 Scale shape: both projections are map-only (no shuffle); JL's sign matrix
-never materializes (out_dim × in_dim CASE expressions fold into codegen),
-PCA's components are a (c × dim) broadcast literal. At 100 TB both run at
+is an (out_dim × in_dim) int64 constant of the Arrow kernel, PCA's
+components are a (c × dim) broadcast literal. At 100 TB both run at
 scan speed and cut every downstream ANN/dedup shuffle by dim_out/dim_in.
 """
 
@@ -45,65 +45,43 @@ def jl_project(
     seed: int = 7,
     vec_col: str = "embedding",
     out_col: str = "proj",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Append ``out_col``: ``ARRAY<BIGINT>`` of length ``out_dim`` where
     ``proj[j] = Σ_i sign(seed,i,j) · round(vec[i]·10⁶)`` — an exact
     integer JL projection (the 1/√out_dim scale is a no-op for cosine/
     rank purposes and is left to the caller).
 
-    The per-coordinate sums are integers, so results are identical across
-    engines, partitionings, AND implementations — which is why two impls
-    can coexist: ``"numpy"`` (default) does one int64 matmul per Arrow
-    batch (the hot path; out_dim HOF folds are JVM-interpreted and ~3×
-    slower), ``"expr"`` stays pure-Catalyst for plan-audit/debug use.
-    Both produce bit-identical output; tests assert it.
+    One int64 matmul per Arrow batch. The per-coordinate sums are
+    integers, so results are identical across engines and partitionings
+    (the SQL oracle replays them with ``jl_sign_sql``). A NULL vector
+    gives a NULL ``out_col``.
     """
-    signs = [
-        [_jl_sign(seed, i, j) for i in range(in_dim)] for j in range(out_dim)
-    ]
-    if impl == "numpy":
-        import pandas as pd
-        from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-        smat = np.asarray(signs, dtype=np.int64)  # (out_dim, in_dim)
-        out_schema = StructType(
-            list(df.schema.fields) + [StructField(out_col, ArrayType(LongType()), False)]
-        )
-
-        def project(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                # np.rint = round-half-even differs from Spark/DuckDB
-                # round-half-away at exact .5 — use floor(|x|+0.5) sign-fixed
-                q = (np.sign(x) * np.floor(np.abs(x) * QUANT + 0.5)).astype(np.int64)
-                proj = q @ smat.T  # exact int64
-                out = pdf.copy()
-                out[out_col] = list(proj)
-                yield out
-
-        return df.mapInPandas(project, schema=out_schema)
-    q = F.transform(
-        F.col(vec_col), lambda x: F.round(x.cast("double") * QUANT).cast("long")
+    smat = np.asarray(
+        [[_jl_sign(seed, i, j) for i in range(in_dim)] for j in range(out_dim)],
+        dtype=np.int64,
+    )  # (out_dim, in_dim)
+    out_schema = StructType(
+        list(df.schema.fields) + [StructField(out_col, ArrayType(LongType()), True)]
     )
-    with_q = df.withColumn("_q", q)
-    coords = [
-        F.aggregate(
-            F.zip_with(
-                F.col("_q"),
-                F.lit(signs[j]).cast("array<long>"),
-                lambda x, s: x * s,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias(f"_c{j}")
-        for j in range(out_dim)
-    ]
-    return with_q.withColumn(out_col, F.array(*coords)).drop(
-        "_q", *[f"_c{j}" for j in range(out_dim)]
-    )
+
+    def project(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ok = pdf[vec_col].notna().to_numpy()
+            x = np.asarray(pdf[vec_col][ok].tolist(), dtype=np.float64)
+            x = x.reshape(int(ok.sum()), in_dim)  # also when no row is left
+            # np.rint = round-half-even differs from Spark/DuckDB
+            # round-half-away at exact .5 — use floor(|x|+0.5) sign-fixed
+            q = (np.sign(x) * np.floor(np.abs(x) * QUANT + 0.5)).astype(np.int64)
+            proj = iter(q @ smat.T)  # exact int64
+            out = pdf.copy()
+            out[out_col] = [next(proj) if k else None for k in ok]
+            yield out
+
+    return df.mapInPandas(project, schema=out_schema)
 
 
 def jl_sign_sql(seed: int, i_expr: str, j_expr: str) -> str:
