@@ -3404,6 +3404,159 @@ def test_verify_layout_deep_catches_codes_vectors_divergence(
     )
 
 
+def _jobs_run(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted under a job
+    group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ivf_sq8_load_of_mutated_tip_runs_no_job(spark, embeddings, tmp_path):
+    """Opening a tip with upsert and delete commits reads every layout
+    root under the schemas meta.json records: no footer-inference job.
+    Its first search runs 3 jobs: the one tombstone broadcast (reused by
+    every codes and vectors branch), the shortlist broadcast, the
+    result."""
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    path = _fsck_layout(spark, embeddings, tmp_path, "jobfree_load")
+    qvec = embeddings.where(F.col("vec_id") == 0).head()["embedding"]
+    idx, load_jobs = _jobs_run(spark, lambda: IvfSq8Index.load(spark, path))
+    assert load_jobs == 0
+    rows, search_jobs = _jobs_run(
+        spark, lambda: idx.search(query_vec=qvec, k=10).collect()
+    )
+    assert search_jobs == 3
+    assert len(rows) == 10
+
+
+def test_ivf_sq8_layout_without_recorded_schemas_serves_same_rows(
+    spark, embeddings, tmp_path
+):
+    """A meta.json with no ``schemas`` (a layout saved before they were
+    recorded) falls back to inferring from the first root's footer and
+    serves exactly the rows the recorded-schema read serves."""
+    import json
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    path = _fsck_layout(spark, embeddings, tmp_path, "legacy_meta")
+    qvec = embeddings.where(F.col("vec_id") == 0).head()["embedding"]
+
+    def served():
+        idx = IvfSq8Index.load(spark, path)
+        return (
+            sorted(map(tuple, idx.codes.select("vec_id", "centroid").collect())),
+            idx.search(query_vec=qvec, k=10).collect(),
+        )
+
+    recorded = served()
+    meta_path = os.path.join(path, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert set(meta["schemas"]) == {"codes", "vectors", "deletes"}
+    del meta["schemas"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    assert served() == recorded
+
+
+def test_ivf_sq8_int_typed_delete_on_long_ids_masks_after_reload(
+    spark, embeddings, tmp_path
+):
+    """Tombstones are written in the index's id type: a delete through an
+    int-typed id frame on a long-id index still matches the recorded
+    ``deletes`` schema, and the reloaded tip masks the ids."""
+    import glob
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index, verify_layout
+
+    emb = embeddings.select("vec_id", "embedding")
+    assert emb.schema["vec_id"].dataType.simpleString() == "bigint"
+    path = str(tmp_path / "int_delete")
+    IvfSq8Index.build(emb, n_centroids=4).save(path, store_vectors=True)
+    ids = spark.createDataFrame([(7,), (11,)], "vec_id int")
+    IvfSq8Index.load(spark, path).delete(ids, path=path)
+
+    (part,) = glob.glob(os.path.join(path, "batches", "*", "deletes", "*.parquet"))
+    assert spark.read.parquet(part).schema["vec_id"].dataType.simpleString() == "bigint"
+    tip = IvfSq8Index.load(spark, path)
+    assert tip.codes.where(F.col("vec_id").isin(7, 11)).count() == 0
+    assert tip.vectors.where(F.col("vec_id").isin(7, 11)).count() == 0
+    assert tip.codes.count() == emb.count() - 2
+    assert verify_layout(path, spark=spark)["ok"]
+
+
+def test_ivf_sq8_add_batch_repeated_id_commits_one_code_per_float(
+    spark, embeddings, tmp_path
+):
+    """A plain ``add_batch`` derives codes and floats from ONE assignment
+    frame: two rows with one id commit 2 code rows and 2 float rows, and
+    the tip serves both."""
+    import glob
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index, verify_layout
+
+    emb = embeddings.select("vec_id", "embedding")
+    path = str(tmp_path / "repeat_id")
+    IvfSq8Index.build(emb, n_centroids=4).save(path, store_vectors=True)
+    v0, v1 = [r["embedding"] for r in emb.where(F.col("vec_id") < 2).collect()]
+    batch = spark.createDataFrame(
+        [(1000, v0), (1000, v1)], emb.schema
+    )
+    IvfSq8Index.load(spark, path).add_batch(batch, path=path)
+
+    (commit,) = glob.glob(os.path.join(path, "batches", "*"))
+    assert spark.read.parquet(os.path.join(commit, "codes")).count() == 2
+    assert spark.read.parquet(os.path.join(commit, "vectors")).count() == 2
+    rep = verify_layout(path, spark=spark)
+    assert rep["ok"], rep
+    tip = IvfSq8Index.load(spark, path)
+    assert tip.codes.where(F.col("vec_id") == 1000).count() == 2
+
+
+def test_verify_layout_deep_flags_root_disagreeing_with_recorded_schema(
+    spark, embeddings, tmp_path
+):
+    """Readers trust the schemas meta.json records, so the deep check
+    compares every root's footer with them: a hand-written commit whose
+    codes hold the id under another type and whose vectors lack the
+    float column is reported, column by column."""
+    from whatsapp_vectordb_spark.operators.ann import verify_layout
+
+    path = _fsck_layout(spark, embeddings, tmp_path, "fsck_schema")
+    assert verify_layout(path, spark=spark)["ok"]
+    commit = os.path.join(path, "batches", f"{3:08d}_{'e' * 32}")
+    rows = spark.createDataFrame(
+        [("x1", [1, 2], 0, 3)],
+        "vec_id string, sq8_codes array<smallint>, centroid int, _seq long",
+    )
+    rows.write.partitionBy("centroid").parquet(os.path.join(commit, "codes"))
+    spark.createDataFrame(
+        [(1, 0, 3)], "vec_id long, centroid int, _seq long"
+    ).write.partitionBy("centroid").parquet(os.path.join(commit, "vectors"))
+
+    assert verify_layout(path)["ok"]  # the metadata walk reads no footer
+    deep = verify_layout(path, spark=spark)
+    assert not deep["ok"]
+    errs = deep["errors"]
+    assert any(
+        "codes root at seq 3" in e and "'vec_id' is string" in e for e in errs
+    ), errs
+    assert any(
+        "vectors root at seq 3" in e and "'embedding'" in e and "missing" in e
+        for e in errs
+    ), errs
+
+
 def test_fused_sq8_train_cell_counts_matches_train_and_tripwire(spark, embeddings):
     """r18: IvfSq8Index.build's fused measurement pass must produce a
     scaler BIT-IDENTICAL to sq8_train and to a Spark min/max aggregate,

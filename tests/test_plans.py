@@ -929,9 +929,46 @@ def test_ivf_sq8_index_delete_mask_keeps_pruning_and_broadcasts(
     assert len(pruned_scans) == 2, p
     for ln in pruned_scans:
         assert all(str(c) in ln for c in cells), ln
-    # the mask is a broadcast hash anti-join, never a shuffle of codes
+    # the mask is a broadcast hash anti-join, never a shuffle of codes —
+    # and the tombstones themselves are not folded per id: the raw rows
+    # broadcast, no groupBy, so nothing shuffles anywhere
     assert "BroadcastHashJoin LeftAnti BuildRight" in p, p
     assert "SortMergeJoin" not in p, p
+    assert "Exchange hashpartitioning" not in p, p
+    assert "HashAggregate" not in p, p
+
+
+def test_ivf_sq8_search_rerank_scan_carries_no_score_filter(
+    spark, embeddings, tmp_path
+):
+    """The exact re-rank scores only the shortlisted rows: the NULL-score
+    filter is never pushed below the shortlist join into the float scans
+    (where it would score every float row of the probed cells, and
+    score each row twice)."""
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    emb = embeddings.select("vec_id", "embedding")
+    path = str(tmp_path / "rerank_plan")
+    IvfSq8Index.build(emb, n_centroids=4).save(path, store_vectors=True)
+    qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
+    repl = emb.where(F.col("vec_id") % 25 == 0).select(
+        "vec_id", F.lit(qvec).cast("array<float>").alias("embedding")
+    )
+    IvfSq8Index.load(spark, path).upsert(repl, path=path)
+    loaded = IvfSq8Index.load(spark, path)
+    res = loaded.search(query_vec=qvec, k=5)
+    res.collect()
+    p = res._jdf.queryExecution().executedPlan().toString()
+    # the float scans of the final plan (the string goes on to print the
+    # initial plan): the ones whose read schema holds the embedding
+    final = p.split("== Initial Plan ==")[0]
+    scans = [
+        ln for ln in final.splitlines() if "FileScan" in ln and "embedding:" in ln
+    ]
+    # one float scan per vectors root: the base and the upsert's commit
+    assert len(scans) == 2, p
+    for ln in scans:
+        assert "aggregate(" not in ln, ln
 
 
 def test_ivf_sq8_index_filtered_probe_keeps_pruning_and_broadcasts(

@@ -39,6 +39,55 @@ def test_topk_euclidean_orders_ascending(embeddings, qvec):
     assert scores == sorted(scores)
 
 
+def test_topk_scores_each_row_once(embeddings, qvec):
+    """The NULL-score filter is never pushed onto the scoring: the
+    executed plan over a parquet scan holds the score's HOF once, not
+    again in a Filter and in the scan's DataFilters — and the top-k is
+    still the root TakeOrderedAndProject."""
+    df = topk(embeddings, qvec, k=5, metric="dotproduct", round_to=6)
+    df.collect()
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("aggregate(") == 1, p
+    assert p.startswith("TakeOrderedAndProject"), p
+
+
+@pytest.mark.parametrize("metric", ["dotproduct", "euclidean", "cosine"])
+def test_topk_never_returns_null_scores(spark, metric):
+    """NULL scores never return: a k past the scorable rows returns only
+    those rows, in order, in both ranking directions."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0]), (3, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    rows = topk(df, [1.0, 0.5], k=3, metric=metric, round_to=6).collect()
+    assert all(r["score"] is not None for r in rows)
+    want = {"dotproduct": [0, 2, 3], "euclidean": [0, 2, 3], "cosine": [0, 2]}
+    assert [r["vec_id"] for r in rows] == want[metric]
+
+
+def test_batched_exact_rerank_never_returns_null_scores(spark):
+    """The batched re-rank tail's window ranks NULL scores last and drops
+    them after the rank: per query, only scorable candidates return."""
+    from whatsapp_vectordb_spark.operators.ann import batched_exact_rerank
+
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    short = spark.createDataFrame(
+        [(q, i) for q in (7, 8) for i in (0, 1, 2)], "query_id long, vec_id long"
+    )
+    for metric in ("dotproduct", "euclidean"):
+        rows = batched_exact_rerank(
+            vecs, short, [(7, [1.0, 0.0]), (8, [0.0, 1.0])], k=3, metric=metric
+        ).collect()
+        got = {}
+        for r in rows:
+            assert r["score"] is not None
+            got.setdefault(r["query_id"], []).append(r["vec_id"])
+        assert {q: sorted(v) for q, v in got.items()} == {7: [0, 2], 8: [0, 2]}
+
+
 def test_batched_matches_single(spark, embeddings):
     queries = (
         embeddings.where(F.col("vec_id") < 3)

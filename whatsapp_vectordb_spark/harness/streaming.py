@@ -1139,19 +1139,10 @@ def streaming_ivf_sq8_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     for g in groups:
         g.coalesce(1).write.mode("append").parquet(src)
 
-    # Trigger-scoped handle reuse (r18, guide §7.3 driver round trips):
-    # the verbs keep the in-memory handle an exact mirror of the
-    # committed layout (seq rule applied in memory, seqs allocated from
-    # disk at commit time), and no OTHER writer touches the layout
-    # during this stream, so re-LOADING per trigger only repeated the
-    # meta read + dir listings + mask rebuild for an identical handle.
-    # The final serve still re-loads from disk, so the declared result
-    # derives from the committed bytes alone — which are verb-for-verb
-    # identical either way. A layout with an interleaved compactor
-    # (streaming_ivf_sq8_cdc_with_tick) keeps the per-trigger load: a
-    # fold invalidates any cached handle by design.
-    cached: dict = {}
-
+    # Each trigger loads the committed tip: with the layout schemas
+    # recorded in meta.json a load runs no Spark job, and a fresh handle
+    # keeps the plan one trigger deep instead of growing with every
+    # trigger's in-memory unions.
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         # Intra-batch ordering (ADVICE r15): deletes apply before
         # upserts WITHIN a microbatch, which is correct here only
@@ -1166,7 +1157,7 @@ def streaming_ivf_sq8_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # without that guarantee — use apply_cdc_events.
         if batch_df.isEmpty():
             return
-        idx = cached.get("idx") or IvfSq8Index.load(spark, _SQ8_CDC_DIR)
+        idx = IvfSq8Index.load(spark, _SQ8_CDC_DIR)
         # the verbs pin their input and no-op on empty themselves, so
         # pre-checking emptiness here paid a redundant job per op per
         # trigger (r17)
@@ -1176,7 +1167,6 @@ def streaming_ivf_sq8_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.where(F.col("op") == "u").select("vec_id", "embedding"),
             path=_SQ8_CDC_DIR,
         )
-        cached["idx"] = idx
 
     schema = "vec_id long, embedding array<float>, op string"
     stream = (
@@ -1277,15 +1267,13 @@ def streaming_ivfpq_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     for g in groups:
         g.coalesce(1).write.mode("append").parquet(src)
 
-    # trigger-scoped handle reuse — see the SQ8 twin's note (r18)
-    cached: dict = {}
-
+    # a fresh tip handle per trigger — see the SQ8 twin's note
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         # deletes before upserts per trigger — safe because the groups
         # above are id-disjoint (see streaming_ivf_sq8_cdc's note)
         if batch_df.isEmpty():
             return
-        idx = cached.get("idx") or IvfPqIndex.load(spark, _IVFPQ_CDC_DIR)
+        idx = IvfPqIndex.load(spark, _IVFPQ_CDC_DIR)
         # verbs no-op on empty input themselves — see the SQ8 twin (r17)
         idx.delete(batch_df.where(F.col("op") == "d").select("vec_id"),
                    path=_IVFPQ_CDC_DIR)
@@ -1293,7 +1281,6 @@ def streaming_ivfpq_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.where(F.col("op") == "u").select("vec_id", "embedding"),
             path=_IVFPQ_CDC_DIR,
         )
-        cached["idx"] = idx
 
     schema = "vec_id long, embedding array<float>, op string"
     stream = (
@@ -1393,16 +1380,12 @@ def streaming_ivf_sq8_cdc_ordered(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     feed.coalesce(1).write.mode("overwrite").parquet(src)
 
-    # trigger-scoped handle reuse — see streaming_ivf_sq8_cdc's note
-    # (r18; apply_cdc_events drives the same mirror-maintaining verbs)
-    cached: dict = {}
-
+    # a fresh tip handle per trigger — see streaming_ivf_sq8_cdc's note
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        idx = cached.get("idx") or IvfSq8Index.load(spark, _SQ8_CDC_ORD_DIR)
+        idx = IvfSq8Index.load(spark, _SQ8_CDC_ORD_DIR)
         apply_cdc_events(idx, batch_df, _SQ8_CDC_ORD_DIR)
-        cached["idx"] = idx
 
     schema = "vec_id long, embedding array<float>, op string, seq long"
     stream = (

@@ -2505,6 +2505,13 @@ def sq8_encode(
     bit-packed/RLE encoding of the ≤8-bit values lands at ~1 B/dim on
     disk, the ~4× cut vs float32 that makes the codes table the thing
     you scan."""
+    return df.select(F.col(id_col), _sq8_codes(vec_col, mins, deltas))
+
+
+def _sq8_codes(vec_col: str, mins: list[float], deltas: list[float]):
+    """The ``sq8_codes`` column of ``sq8_encode`` as one expression, so a
+    frame that already carries its cell (``assign_nearest_centroid``)
+    encodes in the same projection instead of joining codes back on id."""
     mn = array_lit(mins, "double")
     dl = array_lit(deltas, "double")
     centered = F.zip_with(
@@ -2518,9 +2525,7 @@ def sq8_encode(
             F.greatest(F.lit(0).cast("long"), F.floor(d / s + F.lit(0.5))),
         ),
     )
-    return df.select(
-        F.col(id_col), codes.cast("array<smallint>").alias("sq8_codes")
-    )
+    return codes.cast("array<smallint>").alias("sq8_codes")
 
 
 def sq8_topk(
@@ -2919,7 +2924,9 @@ def batched_exact_rerank(
     against its own query's float vector, and a query_id-keyed window
     keeps the top ``k``. Final scores are the EXACT metric, so cell
     pruning and quantization can only cost recall (per query), never
-    corrupt a score."""
+    corrupt a score. NULL scores rank last and drop after the window:
+    a filter before it would be pushed into the join condition and
+    score every candidate twice."""
     from pyspark.sql import Window
 
     from whatsapp_vectordb_spark.functions.vector import (
@@ -2939,15 +2946,16 @@ def batched_exact_rerank(
         vectors_df.join(F.broadcast(short), id_col)
         .join(F.broadcast(qdf), "query_id")
         .select("query_id", F.col(id_col), score.alias("score"))
-        .where(F.col("score").isNotNull())
     )
     order = (
-        F.col("score").asc() if metric_ascending(metric) else F.col("score").desc()
+        F.col("score").asc_nulls_last()
+        if metric_ascending(metric)
+        else F.col("score").desc()
     )
     w = Window.partitionBy("query_id").orderBy(order, F.col(id_col).asc())
     return (
         scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
+        .where((F.col("_rk") <= k) & F.col("score").isNotNull())
         .drop("_rk")
     )
 
@@ -2985,6 +2993,12 @@ def _layout_epoch(path: str) -> int:
     epoch never does, so an ``(epoch, seq)`` pair is a STABLE snapshot
     identifier across folds (the Delta/Iceberg monotonic-version rule —
     ADVICE r16). Pre-epoch layouts read as epoch 0."""
+    return int(_layout_meta(path).get("fold_epoch", 0))
+
+
+def _layout_meta(path: str) -> dict:
+    """The ``meta.json`` in ``path``: a layout's tip, or one retained
+    fold dir (``_retained/<F>`` keeps epoch F-1's own meta)."""
     import json as _json
 
     meta_path = os.path.join(path, "meta.json")
@@ -2993,7 +3007,102 @@ def _layout_epoch(path: str) -> int:
             f"no saved layout at {path!r} (missing meta.json)"
         )
     with open(meta_path) as f:
-        return int(_json.load(f).get("fold_epoch", 0))
+        return _json.load(f)
+
+
+def _as_nullable(dt):
+    """``dt`` with every field and array element nullable — the shape a
+    parquet footer reads back as (Spark writes every column nullable),
+    so a recorded schema compares equal to an inferred one."""
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    return dt
+
+
+def _layout_schemas(idx, code_col: str, store_vectors: bool) -> dict:
+    """The ``schemas`` entry of a layout's ``meta.json``: the columns each
+    table's roots hold — ``codes`` and ``vectors`` with their partition
+    column ``centroid``, ``deletes`` as the tombstone id — without the
+    per-commit ``_seq``. ``save`` and the fold record it in the staged
+    meta (so the last-rename publish covers it), and every reader of a
+    layout root passes it to ``spark.read.schema``: no root pays a
+    footer-inference job. Reading ``.schema`` is analysis only."""
+    from pyspark.sql.types import StructType
+
+    codes = _as_nullable(
+        idx.codes.select(idx.id_col, code_col, "centroid").schema
+    )
+    out = {
+        "codes": codes.jsonValue(),
+        "deletes": StructType([codes[idx.id_col]]).jsonValue(),
+    }
+    if store_vectors:
+        out["vectors"] = _as_nullable(
+            idx.vectors.select(idx.id_col, idx.vec_col, "centroid").schema
+        ).jsonValue()
+    return out
+
+
+def _recorded_schema(meta: dict, sub: str):
+    """One table's recorded schema (``_layout_schemas``), or None for a
+    layout saved before schemas were recorded: its readers infer from
+    the first root's footer instead — the one fallback."""
+    from pyspark.sql.types import StructType
+
+    rec = meta.get("schemas", {}).get(sub)
+    return None if rec is None else StructType.fromJson(rec)
+
+
+def _read_table(spark: SparkSession, root: str, schema) -> DataFrame:
+    """One parquet root under ``schema`` (no inference job), or with its
+    footer inferred when there is none."""
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(
+        root
+    )
+
+
+def _seq_schema(spark: SparkSession, schema, first_root: str):
+    """The schema every root of one layout table reads under: the
+    recorded one (or, without it, ``first_root``'s footer minus
+    ``_seq``, inferred once) plus a nullable ``_seq``."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    if schema is None:
+        schema = StructType(
+            [f for f in spark.read.parquet(first_root).schema if f.name != "_seq"]
+        )
+    return StructType(
+        list(schema.fields) + [StructField("_seq", LongType(), True)]
+    )
+
+
+def _read_seq_root(
+    spark: SparkSession, root: str, seq: int, with_seq
+) -> DataFrame:
+    """One layout root under ``with_seq`` (``_seq_schema``), each row
+    carrying its commit ``_seq``. Files without a ``_seq`` column (the
+    base layout; a numbered root from an older build) read it as NULL
+    and fall back to the dir-name seq — base = 0 — through the same
+    ``coalesce``, so every union branch has ONE shape whatever its seq.
+    That matters to the tombstone mask: a literal ``_seq = 0`` on the
+    base branch would be folded into that branch's build side, and the
+    broadcast could no longer be reused across branches."""
+    return spark.read.schema(with_seq).parquet(root).withColumn(
+        "_seq", F.coalesce(F.col("_seq"), F.lit(seq).cast("long"))
+    )
+
+
+def _mark_cols(marks: DataFrame, id_col: str) -> DataFrame:
+    """Raw tombstone rows ``(_del_id, _del_seq)`` for ``_mask_deleted``."""
+    return marks.select(
+        F.col(id_col).alias("_del_id"), F.col("_seq").alias("_del_seq")
+    )
 
 
 def _retained_root(path: str) -> str:
@@ -3181,6 +3290,7 @@ def _snapshot_table(
     epoch: int,
     seq: int,
     sources: dict[int, tuple[str, int]],
+    meta: dict,
 ) -> DataFrame | None:
     """One layout table (``codes``/``vectors``/``deletes``) as it stood
     at snapshot ``(epoch, seq)`` of an OLDER epoch — the retention read
@@ -3191,7 +3301,9 @@ def _snapshot_table(
     number of folds consulted, not the cell count); epoch-e mutation
     commits read from the retained ``batches/`` the fold at e+1
     consumed, bounded to ``seq`` exactly like a live time-travel read.
-    Rows carry ``_seq`` for the caller's strictly-older mask."""
+    Rows carry ``_seq`` for the caller's strictly-older mask. Every root
+    reads under the schema recorded in ``meta`` — that epoch's own
+    ``meta.json`` — like a tip read (``IvfSq8Index._read_layout``)."""
     from functools import reduce
 
     def has_parquet(root: str) -> bool:
@@ -3200,7 +3312,8 @@ def _snapshot_table(
                 return True
         return False
 
-    parts: list[DataFrame] = []
+    # (seq, root, cells the root serves — None: all of them)
+    specs: list[tuple[int, str, list[int] | None]] = []
     if sub != "deletes":
         groups: dict[tuple[str, int], list[int]] = {}
         for c, src in sources.items():
@@ -3219,25 +3332,23 @@ def _snapshot_table(
                     f"{sub} root {root!r} is missing — interrupted "
                     "retention; vacuum the broken fold"
                 )
-            parts.append(
-                spark.read.parquet(root)
-                .where(F.col("centroid").isin(sorted(cells)))
-                .withColumn("_seq", F.lit(0).cast("long"))
-            )
+            specs.append((0, root, sorted(cells)))
     bdir = _epoch_batch_dir(path, epoch, _layout_epoch(path))
     for b in _batch_names_checked(bdir, f"epoch {epoch} of {path!r}"):
         if _parse_seq(b) > seq:
             continue
         root = os.path.join(bdir, b, sub)
         if os.path.isdir(root) and has_parquet(root):
-            df = spark.read.parquet(root)
-            if "_seq" not in df.columns:
-                df = df.withColumn(
-                    "_seq", F.lit(_parse_seq(b)).cast("long")
-                )
-            parts.append(df)
-    if not parts:
+            specs.append((_parse_seq(b), root, None))
+    if not specs:
         return None
+    with_seq = _seq_schema(spark, _recorded_schema(meta, sub), specs[0][1])
+    parts = []
+    for root_seq, root, cells in specs:
+        df = _read_seq_root(spark, root, root_seq, with_seq)
+        if cells is not None:
+            df = df.where(F.col("centroid").isin(cells))
+        parts.append(df)
     return reduce(lambda a, b2: a.unionByName(b2), parts)
 
 
@@ -3295,7 +3406,11 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
     lease: a fold racing the walk can at worst produce a transient
     false positive, never corruption). Pass ``spark`` to ADD the deep
     data check: per-root codes↔vectors row-count parity (a commit whose
-    co-located float store lost rows re-ranks incorrectly).
+    co-located float store lost rows re-ranks incorrectly), and every
+    root's footer schema against the schema ``meta.json`` records for
+    its table — readers trust the recorded schema instead of inferring,
+    so a root missing a recorded column or holding it under another type
+    is an error.
 
     Returns ``{"ok": bool, "errors": [...], "warnings": [...],
     "info": {...}}``; ``ok`` means zero errors (warnings allowed).
@@ -3395,6 +3510,28 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
                     f"co-located vectors has {n_vecs} — re-rank would "
                     "score a different row set than the code scan"
                 )
+        for sub in ("codes", "vectors", "deletes"):
+            rec = _recorded_schema(meta, sub)
+            if rec is None:
+                continue  # layout saved before schemas were recorded
+            for seq, root in IvfSq8Index._layout_roots(path, sub):
+                found = {
+                    f.name: _as_nullable(f.dataType)
+                    for f in spark.read.parquet(root).schema
+                }
+                for f in rec:
+                    want = _as_nullable(f.dataType)
+                    if f.name not in found:
+                        errors.append(
+                            f"{sub} root at seq {seq}: column {f.name!r} "
+                            "recorded in meta.json is missing from its files"
+                        )
+                    elif found[f.name] != want:
+                        errors.append(
+                            f"{sub} root at seq {seq}: column {f.name!r} is "
+                            f"{found[f.name].simpleString()} in its files but "
+                            f"{want.simpleString()} in meta.json"
+                        )
         info["deep_checked"] = True
 
     return {"ok": not errors, "errors": errors, "warnings": warnings,
@@ -3413,35 +3550,25 @@ def _load_layout_frames(spark, path: str, as_of, meta: dict):
     — r16 verdict #2), including that epoch's OWN ``meta.json`` from
     the retained dir: a rebuild retrains the quantizers, so a pre-
     rebuild snapshot must score with the pre-rebuild scaler/codebooks,
-    never the tip's."""
-    import json as _json
-
+    never the tip's — and reads under that meta's recorded schemas.
+    Building the frames runs no Spark job when the schemas are recorded
+    (``_layout_schemas``)."""
     norm = _check_as_of(path, as_of)
     current = int(meta.get("fold_epoch", 0))
     if norm is not None and norm[0] < current:
         e, s = norm
-        with open(
-            os.path.join(_retained_dir(path, e + 1), "meta.json")
-        ) as f:
-            meta = _json.load(f)
+        meta = _layout_meta(_retained_dir(path, e + 1))
         sources = _snapshot_cell_sources(path, e)
-        codes = _snapshot_table(spark, path, "codes", e, s, sources)
-        marks_raw = _snapshot_table(spark, path, "deletes", e, s, sources)
-        marks = (
-            marks_raw.groupBy(F.col(meta["id_col"]).alias("_del_id")).agg(
-                F.max("_seq").alias("_del_seq")
-            )
-            if marks_raw is not None
-            else None
-        )
-        vecs = _snapshot_table(spark, path, "vectors", e, s, sources)
+        codes = _snapshot_table(spark, path, "codes", e, s, sources, meta)
+        marks = _snapshot_table(spark, path, "deletes", e, s, sources, meta)
+        if marks is not None:
+            marks = _mark_cols(marks, meta["id_col"])
+        vecs = _snapshot_table(spark, path, "vectors", e, s, sources, meta)
     else:
         seq_bound = None if norm is None else norm[1]
-        codes = IvfSq8Index._read_layout(spark, path, "codes", seq_bound)
-        marks = IvfSq8Index._read_delete_marks(
-            spark, path, meta["id_col"], seq_bound
-        )
-        vecs = IvfSq8Index._read_layout(spark, path, "vectors", seq_bound)
+        codes = IvfSq8Index._read_layout(spark, path, "codes", meta, seq_bound)
+        marks = IvfSq8Index._read_delete_marks(spark, path, meta, seq_bound)
+        vecs = IvfSq8Index._read_layout(spark, path, "vectors", meta, seq_bound)
     return meta, codes, vecs, marks, norm
 
 
@@ -3547,12 +3674,15 @@ def rebuild_layout(idx_cls, spark: SparkSession, path: str, **build_kwargs):
         return fresh.save(path, store_vectors=True)
 
 
-def _write_deletes(ids: DataFrame, stage: str, seq: int) -> None:
-    """A commit's tombstone table: the ids stamped with the commit seq,
-    one small file (the set is broadcast on every read until folded)."""
-    ids.withColumn("_seq", F.lit(seq).cast("long")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "deletes"))
+def _write_deletes(idx, ids: DataFrame, stage: str, seq: int) -> None:
+    """A commit's tombstone table: the ids, cast to the index's id type
+    (so every ``deletes`` root matches the recorded schema even when the
+    caller's id frame is int-typed), stamped with the commit seq, one
+    small file (the set is broadcast on every read until folded)."""
+    ids.select(
+        F.col(idx.id_col).cast(idx.codes.schema[idx.id_col].dataType),
+        F.lit(seq).cast("long").alias("_seq"),
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "deletes"))
 
 
 def _index_delete(idx, ids, path: str | None) -> None:
@@ -3579,7 +3709,7 @@ def _index_delete(idx, ids, path: str | None) -> None:
         _commit(
             path,
             "delete",
-            lambda stage, seq: _write_deletes(ids, stage, seq),
+            lambda stage, seq: _write_deletes(idx, ids, stage, seq),
             lambda: _committed_batches(path),
         )
     idx.codes = idx.codes.join(F.broadcast(ids), idx.id_col, "left_anti")
@@ -3646,7 +3776,9 @@ def _index_add(
                 )
             if replace:
                 writes.append(
-                    lambda: _write_deletes(batch.select(idx.id_col), stage, seq)
+                    lambda: _write_deletes(
+                        idx, batch.select(idx.id_col), stage, seq
+                    )
                 )
             _run_writes(writes)
 
@@ -3731,12 +3863,14 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
                 if d.startswith("centroid="):
                     touched.add(int(d.split("=", 1)[1]))
     # (b) base partitions holding tombstoned ids — one pruned scan of
-    # (id, centroid); codes bytes and floats never load
-    marks = IvfSq8Index._read_delete_marks(spark, path, idx.id_col)
+    # (id, centroid); codes bytes and floats never load. Every read of
+    # the layout uses the schemas the tip's meta.json records.
+    old_meta = _layout_meta(path)
+    marks = IvfSq8Index._read_delete_marks(spark, path, old_meta)
     base_codes = os.path.join(path, "codes")
     if marks is not None and os.path.isdir(base_codes):
         hit = (
-            spark.read.parquet(base_codes)
+            _read_table(spark, base_codes, _recorded_schema(old_meta, "codes"))
             .select(idx.id_col, "centroid")
             .join(
                 F.broadcast(marks.select(F.col("_del_id").alias(idx.id_col))),
@@ -3756,7 +3890,7 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
         if touched:
             vals = sorted(touched)
             folded = _mask_deleted(
-                IvfSq8Index._read_layout(spark, path, "codes").where(
+                IvfSq8Index._read_layout(spark, path, "codes", old_meta).where(
                     F.col("centroid").isin(vals)
                 ),
                 marks,
@@ -3772,7 +3906,9 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
             ]
             if store_vectors:
                 fv = _mask_deleted(
-                    IvfSq8Index._read_layout(spark, path, "vectors").where(
+                    IvfSq8Index._read_layout(
+                        spark, path, "vectors", old_meta
+                    ).where(
                         F.col("centroid").isin(vals)
                     ),
                     marks,
@@ -3789,6 +3925,7 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
             _run_writes(writes)
         meta = idx._meta_dict()
         meta["fold_epoch"] = new_epoch
+        meta["schemas"] = _layout_schemas(idx, code_col, store_vectors)
         with open(os.path.join(stage, "meta.json"), "w") as f:
             _json.dump(meta, f)
     except BaseException:
@@ -3827,12 +3964,7 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
         _json.dump({"full": False, "created": sorted(created)}, f)
     os.rename(os.path.join(stage, "meta.json"), meta_path)  # loud window closes
     shutil.rmtree(stage, ignore_errors=True)
-    idx.codes = spark.read.parquet(os.path.join(path, "codes"))
-    idx.vectors = (
-        spark.read.parquet(os.path.join(path, "vectors")) if store_vectors else None
-    )
-    idx._mirror_path = path
-    return
+    _repoint(idx, spark, path, meta, store_vectors)
 
 
 def _save_layout(idx, path: str, store_vectors: bool | None, code_col: str):
@@ -3921,6 +4053,7 @@ def _save_layout_locked(idx, path, store_vectors, code_col):
         _run_writes(writes)
         meta = idx._meta_dict()
         meta["fold_epoch"] = new_epoch
+        meta["schemas"] = _layout_schemas(idx, code_col, store_vectors)
         with open(os.path.join(stage, "meta.json"), "w") as f:
             _json.dump(meta, f)
     except BaseException:
@@ -3957,13 +4090,24 @@ def _save_layout_locked(idx, path, store_vectors, code_col):
     # without store_vectors on such an index drops its float store — any
     # later co-located re-rank fails loudly on the missing dir, never
     # reads stale floats — ADVICE r14)
-    spark = idx.codes.sparkSession
-    idx.codes = spark.read.parquet(os.path.join(path, "codes"))
+    _repoint(idx, idx.codes.sparkSession, path, meta, store_vectors)
+    return idx
+
+
+def _repoint(idx, spark: SparkSession, path: str, meta: dict, store_vectors: bool):
+    """Point ``idx``'s lazy plans at the base layout just published with
+    ``meta``, read under its recorded schemas (no inference job)."""
+    idx.codes = _read_table(
+        spark, os.path.join(path, "codes"), _recorded_schema(meta, "codes")
+    )
     idx.vectors = (
-        spark.read.parquet(os.path.join(path, "vectors")) if store_vectors else None
+        _read_table(
+            spark, os.path.join(path, "vectors"), _recorded_schema(meta, "vectors")
+        )
+        if store_vectors
+        else None
     )
     idx._mirror_path = path
-    return idx
 
 
 def apply_cdc_events(
@@ -4099,13 +4243,17 @@ def layout_mutation_stats(path: str) -> dict:
 def _mask_deleted(df: DataFrame | None, marks: DataFrame | None, id_col: str):
     """Apply delete tombstones to a seq-carrying layout union: a row is
     visible iff NO tombstone for its id was committed strictly AFTER the
-    row was written (``row._seq < tombstone max seq`` ⇒ masked). The
-    tombstone set is the ids explicitly deleted/replaced since the last
-    fold — small by maintenance contract — so the mask is ONE broadcast
-    hash anti-join (equi key = id, the seq comparison rides along as the
-    join condition): no shuffle, and the centroid partition pruning on
-    every union branch below it is untouched. ``save`` folds tombstones
-    away physically, so the mask never grows without bound."""
+    row was written (``row._seq < some tombstone's seq`` ⇒ masked — the
+    raw tombstone rows, no per-id max). The tombstone set is the ids
+    explicitly deleted/replaced since the last fold — small by
+    maintenance contract — so the mask is a broadcast hash anti-join
+    (equi key = id, the seq comparison rides along as the join
+    condition): no shuffle, and the centroid partition pruning on every
+    union branch below it is untouched. The anti-join is pushed into
+    every branch; since every branch has one shape (``_read_seq_root``),
+    their build sides are identical and AQE runs ONE broadcast for all
+    of them. ``save`` folds tombstones away physically, so the mask never
+    grows without bound."""
     if df is None:
         return None
     if marks is None:
@@ -4325,92 +4473,52 @@ class IvfSq8Index:
         return roots
 
     @staticmethod
-    def _read_seq_roots(spark: SparkSession, roots) -> DataFrame:
-        """One frame per committed root, unioned by name, each row
-        carrying its commit ``_seq``. The FIRST root's schema is
-        inferred from its footer; every later root that allocated a
-        real commit seq (name parsed ``>= 1`` — written by the house
-        verbs, which always stamp ``_seq`` and the same columns)
-        reuses that schema EXPLICITLY, skipping a per-root driver
-        footer-read round trip (r17: a mutation composite's 8 loads ×
-        3 tables × N commits each paid one). Base and legacy
-        unnumbered roots (seq 0) keep inferring — only they may lack
-        the ``_seq`` column."""
-        from functools import reduce
-
-        first_seq, first_root = roots[0]
-        first = spark.read.parquet(first_root)
-        if "_seq" not in first.columns:
-            base_fields = list(first.schema.fields)
-            first = first.withColumn("_seq", F.lit(first_seq).cast("long"))
-        else:
-            base_fields = [f for f in first.schema.fields if f.name != "_seq"]
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        with_seq = StructType(
-            base_fields + [StructField("_seq", LongType(), True)]
-        )
-
-        def read_one(seq: int, root: str) -> DataFrame:
-            if seq >= 1:
-                # explicit-schema read, with the dir-name seq as the
-                # fallback: a numbered root whose files physically lack
-                # the _seq column (older build, external tooling) reads
-                # as all-NULL _seq under the explicit schema, which
-                # would silently break last-writer-wins masking and
-                # time-travel bounds (ADVICE r17) — coalesce restores
-                # the old stamped-from-dir-name behavior at zero cost
-                # (house-written roots always carry a non-null _seq).
-                df = spark.read.schema(with_seq).parquet(root)
-                return df.withColumn(
-                    "_seq", F.coalesce(F.col("_seq"), F.lit(seq).cast("long"))
-                )
-            df = spark.read.parquet(root)
-            if "_seq" not in df.columns:
-                df = df.withColumn("_seq", F.lit(seq).cast("long"))
-            return df
-
-        return reduce(
-            lambda a, b: a.unionByName(b),
-            [first] + [read_one(seq, r) for seq, r in roots[1:]],
-        )
-
-    @staticmethod
     def _read_layout(
-        spark: SparkSession, path: str, sub: str, as_of: int | None = None
+        spark: SparkSession,
+        path: str,
+        sub: str,
+        meta: dict,
+        as_of: int | None = None,
     ) -> DataFrame | None:
-        """Base ``<sub>/`` layout unioned with every committed
+        """Base ``<sub>/`` layout unioned by name with every committed
         ``batches/<seq>_<uuid>/<sub>`` append, each row carrying its
-        commit ``_seq`` (base = 0; rows written before the mutation
-        verbs existed fall back to their dir-name seq, i.e. 0). Each
-        root is read separately (partition discovery stays per-root, so
+        commit ``_seq`` (base = 0). Every root reads under ONE explicit
+        schema: the one ``meta`` records for the table, or — a layout
+        saved before schemas were recorded — the first root's footer,
+        inferred once. No root pays its own footer-read job, and every
+        branch has the same shape (``_read_seq_root``). Each root is read
+        separately (partition discovery stays per-root, so
         ``centroid=N`` file pruning pushes into every branch of the
         union). Callers apply ``_mask_deleted`` (which drops ``_seq``)
         before serving rows. ``as_of`` bounds the union to commits
         ``<= as_of`` (time travel — see ``_layout_roots``)."""
+        from functools import reduce
+
         roots = IvfSq8Index._layout_roots(path, sub, as_of)
         if not roots:
             return None
-        return IvfSq8Index._read_seq_roots(spark, roots)
+        with_seq = _seq_schema(spark, _recorded_schema(meta, sub), roots[0][1])
+        return reduce(
+            lambda a, b: a.unionByName(b),
+            [_read_seq_root(spark, root, seq, with_seq) for seq, root in roots],
+        )
 
     @staticmethod
     def _read_delete_marks(
-        spark: SparkSession, path: str, id_col: str, as_of: int | None = None
+        spark: SparkSession, path: str, meta: dict, as_of: int | None = None
     ) -> DataFrame | None:
-        """The layout's tombstone set, folded to one row per id:
-        ``(_del_id, _del_seq = max commit seq)``. Tombstones live inside
-        the same atomic batch dirs as the data they accompany
-        (``batches/<seq>_<uuid>/deletes``) — a pure delete commits a
-        dir holding only ``deletes``, an upsert commits codes + vectors
-        + its own ids' tombstones under ONE rename. ``as_of`` bounds
-        the fold to tombstones committed ``<= as_of`` (time travel)."""
-        roots = IvfSq8Index._layout_roots(path, "deletes", as_of)
-        if not roots:
-            return None
-        marks = IvfSq8Index._read_seq_roots(spark, roots)
-        return marks.groupBy(F.col(id_col).alias("_del_id")).agg(
-            F.max("_seq").alias("_del_seq")
-        )
+        """The layout's tombstone rows ``(_del_id, _del_seq)``, one per
+        tombstone — NOT folded to one row per id: ``_mask_deleted``'s
+        anti-join drops a row iff SOME tombstone for its id is newer,
+        which is the same predicate as comparing against the max, and
+        without a ``groupBy`` the mask costs no shuffle. Tombstones live
+        inside the same atomic batch dirs as the data they accompany
+        (``batches/<seq>_<uuid>/deletes``) — a pure delete commits a dir
+        holding only ``deletes``, an upsert commits codes + vectors + its
+        own ids' tombstones under ONE rename. ``as_of`` bounds the set to
+        tombstones committed ``<= as_of`` (time travel)."""
+        marks = IvfSq8Index._read_layout(spark, path, "deletes", meta, as_of)
+        return None if marks is None else _mark_cols(marks, meta["id_col"])
 
     @classmethod
     def load(
@@ -4666,11 +4774,14 @@ class IvfSq8Index:
         with ``IvfPqIndex.add_batch`` (``_index_add``)."""
 
         def encode(batch):
+            # codes and floats both project the ONE assignment frame: a
+            # join of the codes back to it on id would cost a broadcast
+            # job per commit and multiply a repeated id's rows
             assigned = assign_nearest_centroid(batch, self.centroids, self.vec_col)
-            enc = sq8_encode(
-                batch, self.mins, self.deltas, id_col=self.id_col,
-                vec_col=self.vec_col,
-            ).join(assigned.select(self.id_col, "centroid"), self.id_col)
+            enc = assigned.select(
+                self.id_col, _sq8_codes(self.vec_col, self.mins, self.deltas),
+                "centroid",
+            )
             return enc, assigned.select(self.id_col, self.vec_col, "centroid")
 
         return _index_add(self, batch, path, replace, "sq8_codes", encode)

@@ -88,6 +88,15 @@ def topk(
     summation order; rounded ties could in principle differ — keep
     ``expr`` where bit-parity with the SQL oracle is asserted. NULL and
     wrong-length vectors drop out, as they do (via NULL scores) expr-side.
+
+    Expr-side, the score comes out of a one-element ``explode`` rather
+    than a projection, so the HOF runs once per row: Catalyst pushes a
+    filter on a projected alias back below the projection (and below any
+    join feeding ``index_df``, down to the scan), evaluating the score
+    twice, but never pushes one on a generator's output. The NULL-score
+    filter stays under the sort, so the top-k is still the root
+    ``TakeOrderedAndProject`` (a filter above the limit would finish it
+    with an extra single-partition shuffle).
     """
     if impl == "numpy":
         if payload_cols:
@@ -98,7 +107,9 @@ def topk(
     if round_to is not None:
         score = F.round(score, round_to)
     out = index_df.select(
-        F.col(id_col), score.alias("score"), *[F.col(c) for c in payload_cols]
+        F.col(id_col),
+        F.explode(F.array(score)).alias("score"),
+        *[F.col(c) for c in payload_cols],
     ).where(F.col("score").isNotNull())
     return out.orderBy(*_order(F.col("score"), F.col(id_col), metric)).limit(k)
 
