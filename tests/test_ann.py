@@ -2191,13 +2191,14 @@ def test_save_fold_rewrites_only_touched_cells(spark, embeddings, tmp_path):
     IvfSq8Index.load(spark, path).upsert(clones, path=path)
     IvfSq8Index.load(spark, path).delete([29], path=path)
 
-    # touched = batch partitions (dir listing) + deleted ids' home cells
+    # touched = the delta codes' centroid column + deleted ids' home cells
     bdir = os.path.join(path, "batches")
     touched = set()
     for b in os.listdir(bdir):
         croot = os.path.join(bdir, b, "codes")
         if os.path.isdir(croot):
-            touched |= {d for d in os.listdir(croot) if d.startswith("centroid=")}
+            cells = spark.read.parquet(croot).select("centroid").distinct()
+            touched |= {f"centroid={r['centroid']}" for r in cells.collect()}
     pre = IvfSq8Index.load(spark, path)
     home29 = {
         f"centroid={r['centroid']}"
@@ -3390,7 +3391,9 @@ def test_verify_layout_deep_catches_codes_vectors_divergence(
     # tear the co-located float store of the upsert commit
     bdir = os.path.join(path, "batches")
     upsert_dir = sorted(os.listdir(bdir))[0]
-    parts = glob.glob(os.path.join(bdir, upsert_dir, "vectors", "*", "*.parquet"))
+    parts = glob.glob(
+        os.path.join(bdir, upsert_dir, "vectors", "**", "*.parquet"), recursive=True
+    )
     assert parts
     os.remove(parts[0])
 
@@ -3436,6 +3439,176 @@ def test_ivf_sq8_load_of_mutated_tip_runs_no_job(spark, embeddings, tmp_path):
     )
     assert search_jobs == 3
     assert len(rows) == 10
+
+
+def test_commit_writes_count_under_the_callers_job_group(
+    spark, embeddings, tmp_path
+):
+    """A commit's independent writes run from a small thread pool; each
+    carries the caller's job group into its thread, so no commit job is
+    left ungrouped and a job-group tracer (perfbench's) charges the
+    verb exactly what its group counts."""
+    import importlib.util
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_spans",
+        os.path.join(os.path.dirname(__file__), "..", "perfbench", "spans.py"),
+    )
+    spans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(spans)
+
+    path = _fsck_layout(spark, embeddings, tmp_path, "job_groups")
+    batch = embeddings.where(F.col("vec_id") % 10 == 5).select(
+        (F.col("vec_id") + 90000).alias("vec_id"), "embedding"
+    )
+    idx = IvfSq8Index.load(spark, path)
+    sc = spark.sparkContext
+
+    def ungrouped():
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = ungrouped()
+    _, grouped = _jobs_run(spark, lambda: idx.upsert(batch, path=path))
+    assert ungrouped() == before
+    tracer = spans.Tracer(sc, True)
+    with tracer.span("ann.IvfSq8Index.upsert"):
+        idx.upsert(batch, path=path)
+    tracer.attribute_jobs()
+    assert ungrouped() == before
+    assert tracer.spans[0]["jobs"] == grouped > 0
+
+
+def test_delete_of_driver_ids_runs_one_job(spark, embeddings, tmp_path):
+    """Ids given as a Python iterable are driver data — deterministic and
+    known non-empty — so a committed delete runs only its tombstone
+    write: no pin, no emptiness job."""
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    path = _fsck_layout(spark, embeddings, tmp_path, "delete_one_job")
+    idx = IvfSq8Index.load(spark, path)
+    _, jobs = _jobs_run(spark, lambda: idx.delete([3, 23], path=path))
+    assert jobs == 1
+    assert idx.codes.where(F.col("vec_id").isin([3, 23])).count() == 0
+    reloaded = IvfSq8Index.load(spark, path)
+    assert reloaded.codes.where(F.col("vec_id").isin([3, 23])).count() == 0
+    assert reloaded.vectors.where(F.col("vec_id").isin([3, 23])).count() == 0
+
+
+def test_ivf_sq8_upsert_commit_is_one_sorted_file_per_table(
+    spark, embeddings, tmp_path
+):
+    """A delta commit is written flat: one file per pinned-batch
+    partition, sorted by ``centroid``, which stays a data column — a
+    single-partition upsert spanning several cells commits exactly one
+    parquet file per table and no ``centroid=N`` dirs."""
+    import glob
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    emb = embeddings.select("vec_id", "embedding")
+    path = str(tmp_path / "flat_delta")
+    IvfSq8Index.build(emb, n_centroids=4).save(path, store_vectors=True)
+    batch = emb.where(F.col("vec_id") % 10 == 5).select(
+        (F.col("vec_id") + 90000).alias("vec_id"), "embedding"
+    ).coalesce(1)
+    IvfSq8Index.load(spark, path).upsert(batch, path=path)
+    (commit,) = os.listdir(os.path.join(path, "batches"))
+    for sub in ("codes", "vectors"):
+        root = os.path.join(path, "batches", commit, sub)
+        files = glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+        assert len(files) == 1, files
+        assert os.path.dirname(files[0]) == root, files
+        cells = [
+            r["centroid"]
+            for r in spark.read.parquet(files[0]).select("centroid").collect()
+        ]
+        assert len(set(cells)) >= 2, "the batch must span several cells"
+        assert cells == sorted(cells)
+
+
+def test_ivf_sq8_mixed_delta_layouts_load_serve_and_fold(
+    spark, embeddings, tmp_path
+):
+    """A tip whose first commit holds ``centroid=N`` partitioned delta
+    tables (the layout deltas were written in before they were flat)
+    and whose second is a flat upsert: it loads with no job, serves the
+    rows an all-flat twin serves, verifies clean, and its fold lays out
+    the cells of both commits."""
+    import shutil
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index, verify_layout
+
+    emb = embeddings.select("vec_id", "embedding")
+    qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
+    first = emb.where(F.col("vec_id") % 10 == 3).select(
+        "vec_id", F.lit(qvec).cast("array<float>").alias("embedding")
+    )
+    second = emb.where(F.col("vec_id") % 25 == 7).select(
+        (F.col("vec_id") + 90000).alias("vec_id"), "embedding"
+    )
+    built = IvfSq8Index.build(emb, n_centroids=4)
+    paths = {}
+    for name in ("mixed", "flat"):
+        paths[name] = path = str(tmp_path / name)
+        built.save(path, store_vectors=True)
+        IvfSq8Index.load(spark, path).upsert(first, path=path)
+        if name == "mixed":
+            # rewrite the first commit's tables as the partitioned layout
+            (commit,) = os.listdir(os.path.join(path, "batches"))
+            for sub in ("codes", "vectors"):
+                root = os.path.join(path, "batches", commit, sub)
+                spark.read.parquet(root).write.partitionBy("centroid").parquet(
+                    root + "_part"
+                )
+                shutil.rmtree(root)
+                os.rename(root + "_part", root)
+            assert any(
+                d.startswith("centroid=")
+                for d in os.listdir(os.path.join(path, "batches", commit, "codes"))
+            )
+        IvfSq8Index.load(spark, path).upsert(second, path=path)
+
+    def served(path):
+        idx = IvfSq8Index.load(spark, path)
+        return sorted(
+            tuple(r)
+            for r in idx.search(query_vec=qvec, k=20, nprobe=4).collect()
+        )
+
+    mixed = paths["mixed"]
+    assert verify_layout(mixed, spark=spark)["ok"]
+    _, load_jobs = _jobs_run(spark, lambda: IvfSq8Index.load(spark, mixed))
+    assert load_jobs == 0
+    assert served(mixed) == served(paths["flat"])
+
+    cells = {
+        r["centroid"]
+        for b in os.listdir(os.path.join(mixed, "batches"))
+        for r in spark.read.parquet(os.path.join(mixed, "batches", b, "codes"))
+        .select("centroid")
+        .distinct()
+        .collect()
+    }
+    before = {
+        d: os.path.getmtime(os.path.join(mixed, "codes", d))
+        for d in os.listdir(os.path.join(mixed, "codes"))
+        if d.startswith("centroid=")
+    }
+    for path in paths.values():
+        IvfSq8Index.load(spark, path).save(path)  # the fold
+    assert not os.path.isdir(os.path.join(mixed, "batches"))
+    for c in cells:
+        d = os.path.join(mixed, "codes", f"centroid={c}")
+        assert os.path.getmtime(d) != before.get(f"centroid={c}"), d
+    assert verify_layout(mixed, spark=spark)["ok"]
+    base = {
+        r["vec_id"]
+        for r in spark.read.parquet(os.path.join(mixed, "codes")).collect()
+    }
+    assert base >= {r["vec_id"] for r in first.union(second).collect()}
+    assert served(mixed) == served(paths["flat"])
 
 
 def test_ivf_sq8_layout_without_recorded_schemas_serves_same_rows(

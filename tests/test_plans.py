@@ -21,6 +21,18 @@ def plan(df, mode: str = "formatted") -> str:
     return df._jdf.queryExecution().explainString(em)
 
 
+def cell_pruned_scans(p: str) -> tuple[list[str], list[str]]:
+    """A formatted plan's cell-pruned layout scans, by how they prune:
+    roots laid out ``partitionBy(centroid)`` (the base, the fold) carry
+    the probe as ``PartitionFilters``; flat centroid-sorted delta roots
+    carry it as ``PushedFilters: [In(centroid, ...)]`` (row-group
+    min/max skipping)."""
+    lines = p.splitlines()
+    part = [ln for ln in lines if "PartitionFilters" in ln and "centroid" in ln]
+    pushed = [ln for ln in lines if "PushedFilters" in ln and "In(centroid," in ln]
+    return part, pushed
+
+
 def test_point_fetch_pushes_filter_to_parquet(embeddings):
     p = plan(embeddings.where(F.col("vec_id").isin(5, 10, 15)).select("vec_id", "label"))
     assert "PushedFilters: [In(vec_id" in p
@@ -801,12 +813,11 @@ def test_ivf_sq8_index_ingest_prunes_both_code_layouts(spark, embeddings, tmp_pa
     qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
     cells = loaded.probe_centroid_ids(qvec, nprobe=2)
     p = plan(loaded.probe(qvec, k=5, nprobe=2))
-    pruned_scans = [
-        ln for ln in p.splitlines() if "PartitionFilters" in ln and "centroid" in ln
-    ]
-    # one pruned scan per layout root: base codes + one committed batch
-    assert len(pruned_scans) == 2, p
-    for ln in pruned_scans:
+    part, pushed = cell_pruned_scans(p)
+    # one pruned scan per layout root: the base codes by dir, the one
+    # committed batch by its pushed centroid filter
+    assert len(part) == 1 and len(pushed) == 1, p
+    for ln in part + pushed:
         assert all(str(c) in ln for c in cells), ln
 
 
@@ -888,12 +899,11 @@ def test_ivfpq_index_ingest_prunes_both_code_layouts(spark, embeddings, tmp_path
     qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
     cells = loaded.probe_cells(qvec, nprobe=2)
     p = plan(loaded.probe(qvec, k=5, nprobe=2))
-    pruned_scans = [
-        ln for ln in p.splitlines() if "PartitionFilters" in ln and "centroid" in ln
-    ]
-    # one pruned scan per layout root: base codes + one committed batch
-    assert len(pruned_scans) == 2, p
-    for ln in pruned_scans:
+    part, pushed = cell_pruned_scans(p)
+    # one pruned scan per layout root: the base codes by dir, the one
+    # committed batch by its pushed centroid filter
+    assert len(part) == 1 and len(pushed) == 1, p
+    for ln in part + pushed:
         assert all(str(c) in ln for c in cells), ln
     assert "embedding" not in p  # codes-only probe
 
@@ -920,14 +930,13 @@ def test_ivf_sq8_index_delete_mask_keeps_pruning_and_broadcasts(
     loaded = IvfSq8Index.load(spark, path)
     cells = loaded.probe_centroid_ids(qvec, nprobe=2)
     p = plan(loaded.probe(qvec, k=5, nprobe=2))
-    pruned_scans = [
-        ln for ln in p.splitlines() if "PartitionFilters" in ln and "centroid" in ln
-    ]
-    # one pruned scan per CODES root: base + the upsert's batch dir (the
-    # delete-only dir holds no codes); the tombstone scans are unpruned
-    # kilobyte reads and must not appear with partition filters
-    assert len(pruned_scans) == 2, p
-    for ln in pruned_scans:
+    part, pushed = cell_pruned_scans(p)
+    # one pruned scan per CODES root: the base by dir, the upsert's batch
+    # dir by its pushed centroid filter (the delete-only dir holds no
+    # codes); the tombstone scans are unpruned kilobyte reads and must
+    # not appear with centroid filters
+    assert len(part) == 1 and len(pushed) == 1, p
+    for ln in part + pushed:
         assert all(str(c) in ln for c in cells), ln
     # the mask is a broadcast hash anti-join, never a shuffle of codes —
     # and the tombstones themselves are not folded per id: the raw rows
@@ -1062,28 +1071,30 @@ def test_retained_snapshot_plan_prunes_and_tip_ignores_retention(
     def scans(p):
         return [ln for ln in p.splitlines() if "Scan parquet" in ln]
 
-    def pruned_scans(p):
-        return [
-            ln
-            for ln in p.splitlines()
-            if "PartitionFilters" in ln and "centroid" in ln
-        ]
-
     # (a) tip read: folded base + the one live commit — retention free
     # (match the layout's retained ROOT, not the bare "_retained"
     # substring: this test's own pytest tmp dir name contains it)
     ret_root = os.path.join(path, "_retained")
-    p_tip = plan(IvfSq8Index.load(spark, path).probe(qvec, k=5, nprobe=2))
+    tip = IvfSq8Index.load(spark, path)
+    cells = tip.probe_centroid_ids(qvec, nprobe=2)
+    p_tip = plan(tip.probe(qvec, k=5, nprobe=2))
     assert ret_root not in p_tip, p_tip
-    assert len(pruned_scans(p_tip)) == 2, p_tip
+    part, pushed = cell_pruned_scans(p_tip)
+    assert len(part) == 1 and len(pushed) == 1, p_tip
+    for ln in part + pushed:
+        assert all(str(c) in ln for c in cells), ln
 
     # (b) retained snapshot at (0, 2)
     snap = IvfSq8Index.load(spark, path, as_of=(0, 2))
     groups = len(set(_snapshot_cell_sources(path, 0).values()))
     p_snap = plan(snap.probe(qvec, k=5, nprobe=2))
-    # source groups + the (0,1) batch codes root; the epoch-1 live
-    # commit contributes NO scan
-    assert len(pruned_scans(p_snap)) == groups + 1, p_snap
+    # source groups (by dir) + the (0,1) batch codes root (by pushed
+    # filter); the epoch-1 live commit contributes NO scan
+    part, pushed = cell_pruned_scans(p_snap)
+    assert len(part) == groups and len(pushed) == 1, p_snap
+    cells = snap.probe_centroid_ids(qvec, nprobe=2)
+    for ln in part + pushed:
+        assert all(str(c) in ln for c in cells), ln
     live_batches = sorted(os.listdir(os.path.join(path, "batches")))
     assert live_batches and all(b not in p_snap for b in live_batches), (
         p_snap
@@ -1117,22 +1128,17 @@ def test_time_travel_snapshot_drops_newer_roots_keeps_pruning(
         repl.where(F.col("vec_id") % 50 == 0), path=path
     )
 
-    def pruned_scans(p):
-        return [
-            ln
-            for ln in p.splitlines()
-            if "PartitionFilters" in ln and "centroid" in ln
-        ]
-
     snap = IvfSq8Index.load(spark, path, as_of=2)
     cells = snap.probe_centroid_ids(qvec, nprobe=2)
     p_snap = plan(snap.probe(qvec, k=5, nprobe=2))
     # base + the seq1 batch dir only — the seq3 dir is NOT in the plan
-    assert len(pruned_scans(p_snap)) == 2, p_snap
-    for ln in pruned_scans(p_snap):
+    part, pushed = cell_pruned_scans(p_snap)
+    assert len(part) == 1 and len(pushed) == 1, p_snap
+    for ln in part + pushed:
         assert all(str(c) in ln for c in cells), ln
     assert "BroadcastHashJoin LeftAnti BuildRight" in p_snap, p_snap
     assert "SortMergeJoin" not in p_snap, p_snap
 
     p_tip = plan(IvfSq8Index.load(spark, path).probe(qvec, k=5, nprobe=2))
-    assert len(pruned_scans(p_tip)) == 3, p_tip
+    part, pushed = cell_pruned_scans(p_tip)
+    assert len(part) == 1 and len(pushed) == 2, p_tip

@@ -227,7 +227,11 @@ def main() -> None:
         croot = os.path.join(bdir, b, "codes")
         if os.path.isdir(croot):
             touched |= {
-                c for c in os.listdir(croot) if c.startswith("centroid=")
+                f"centroid={r['centroid']}"
+                for r in spark.read.parquet(croot)
+                .select("centroid")
+                .distinct()
+                .collect()
             }
     touched.add(f"centroid={target_cell}")
 

@@ -3182,7 +3182,7 @@ WITH codes AS (
   FROM read_parquet('{_IVF_SQ8_INGEST_DIR}/codes/*/*.parquet', hive_partitioning = 1)
   UNION ALL
   SELECT vec_id, sq8_codes, centroid
-  FROM read_parquet('{_IVF_SQ8_INGEST_DIR}/batches/*/codes/*/*.parquet', hive_partitioning = 1)
+  FROM read_parquet('{_IVF_SQ8_INGEST_DIR}/batches/*/codes/*.parquet')
 ),
 aug AS (
   SELECT vec_id, embedding FROM embeddings
@@ -3291,7 +3291,7 @@ WITH codes AS (
   FROM read_parquet('{d}/codes/*/*.parquet', hive_partitioning = 1)
   UNION ALL
   SELECT vec_id, codes, centroid
-  FROM read_parquet('{d}/batches/*/codes/*/*.parquet', hive_partitioning = 1)
+  FROM read_parquet('{d}/batches/*/codes/*.parquet')
 ),
 probes AS (SELECT centroid FROM read_parquet('{d}/probe/*.parquet')),
 lut AS (SELECT * FROM read_parquet('{d}/lut/*.parquet')),
@@ -3426,7 +3426,7 @@ codes_all AS (
   FROM read_parquet('{d}/codes/*/*.parquet', hive_partitioning = 1)
   UNION ALL
   SELECT vec_id, {codes_col}, centroid, _seq
-  FROM read_parquet('{d}/batches/*/codes/*/*.parquet', hive_partitioning = 1)
+  FROM read_parquet('{d}/batches/*/codes/*.parquet')
  {bound}
 ),
 dels AS (
@@ -3446,7 +3446,7 @@ vecs_all AS (
   FROM read_parquet('{d}/vectors/*/*.parquet', hive_partitioning = 1)
   UNION ALL
   SELECT vec_id, embedding, _seq
-  FROM read_parquet('{d}/batches/*/vectors/*/*.parquet', hive_partitioning = 1)
+  FROM read_parquet('{d}/batches/*/vectors/*.parquet')
  {bound}
 ),
 vecs AS (
@@ -4031,7 +4031,7 @@ codes_all AS (
   SELECT vec_id, {codes_col}, centroid, 0 AS _seq FROM base0_codes
   UNION ALL
   SELECT vec_id, {codes_col}, centroid, _seq
-  FROM read_parquet('{r}/batches/*/codes/*/*.parquet', hive_partitioning = 1)
+  FROM read_parquet('{r}/batches/*/codes/*.parquet')
   WHERE _seq <= {as_of}
 ),
 dels AS (
@@ -4050,7 +4050,7 @@ vecs_all AS (
   SELECT vec_id, embedding, 0 AS _seq FROM base0_vecs
   UNION ALL
   SELECT vec_id, embedding, _seq
-  FROM read_parquet('{r}/batches/*/vectors/*/*.parquet', hive_partitioning = 1)
+  FROM read_parquet('{r}/batches/*/vectors/*.parquet')
   WHERE _seq <= {as_of}
 ),
 vecs AS (

@@ -69,8 +69,15 @@ def _run_writes(thunks) -> None:
         return
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    # each thunk carries the caller's Spark local properties (job group,
+    # description) and job tags into its pool thread, so the writes'
+    # jobs count under the verb that runs them
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         for f in futures:
             f.result()
 
@@ -3695,16 +3702,19 @@ def _index_delete(idx, ids, path: str | None) -> None:
 
     spark = idx.codes.sparkSession
     if not isinstance(ids, DataFrame):
+        # driver data: deterministic and known non-empty, so no pin and
+        # no emptiness job — the commit write is the one job
         rows = [(i,) for i in ids]
         if not rows:
             return
-        ids = local_df(spark, rows, [idx.id_col])
-    # pin: the disk write and the in-memory anti-joins are separate
-    # jobs — a nondeterministic ids plan could tombstone one set on
-    # disk and mask another in memory
-    ids = ids.select(idx.id_col).localCheckpoint(eager=True)
-    if ids.isEmpty():
-        return
+        ids = local_df(spark, rows, [idx.id_col]).select(idx.id_col)
+    else:
+        # pin: the disk write and the in-memory anti-joins are separate
+        # jobs — a nondeterministic ids plan could tombstone one set on
+        # disk and mask another in memory
+        ids = ids.select(idx.id_col).localCheckpoint(eager=True)
+        if ids.isEmpty():
+            return
     if path is not None:
         _commit(
             path,
@@ -3721,6 +3731,18 @@ def _index_delete(idx, ids, path: str | None) -> None:
     idx._mirror_path = (
         path if getattr(idx, "_mirror_path", None) == path else None
     )
+
+
+def _write_delta(df: DataFrame, root: str) -> None:
+    """One delta commit table: a file per pinned-batch partition (one
+    file at the upsert sizes the serving tier sees), each sorted by
+    ``centroid``, which stays a data column — no shuffle and no
+    ``centroid=N`` dirs. A reader's ``centroid IN (...)`` probe pushes
+    into the scan and skips row groups by their min/max; only the base
+    layout and the fold are laid out by cell (the Delta/Iceberg shape:
+    small delta files, compaction clusters). Layouts whose deltas were
+    written partitioned read through the same recorded schema."""
+    df.sortWithinPartitions("centroid").write.mode("overwrite").parquet(root)
 
 
 def _index_add(
@@ -3745,12 +3767,11 @@ def _index_add(
         batch = batch.dropDuplicates([idx.id_col])
     batch = batch.select(idx.id_col, idx.vec_col).localCheckpoint(eager=True)
     if batch.isEmpty():
-        # nothing to ingest — and an EMPTY partitioned batch dir on disk
-        # would hold no partition subdirs, making every later load()'s
-        # per-root parquet read fail schema inference (bricking the
-        # index). Decided on the PINNED batch: the encode is a map-only
-        # 1:1 derivation, so its output is empty iff the batch is, and
-        # checking it would pay an extra encode job per commit.
+        # nothing to ingest — an empty commit would only add a root
+        # every later read lists and opens for no rows. Decided on the
+        # PINNED batch: the encode is a map-only 1:1 derivation, so its
+        # output is empty iff the batch is, and checking it would pay an
+        # extra encode job per commit.
         return idx
     enc, vecs = encode(batch)
     if path is not None:
@@ -3758,21 +3779,19 @@ def _index_add(
         def write(stage: str, seq: int) -> None:
             stamp = F.lit(seq).cast("long")
             writes = [
-                lambda: _cluster_for_write(
+                lambda: _write_delta(
                     enc.select(idx.id_col, code_col, "centroid").withColumn(
                         "_seq", stamp
-                    )
+                    ),
+                    os.path.join(stage, "codes"),
                 )
-                .write.partitionBy("centroid")
-                .mode("overwrite")
-                .parquet(os.path.join(stage, "codes"))
             ]
             if os.path.isdir(os.path.join(path, "vectors")):
                 writes.append(
-                    lambda: _cluster_for_write(vecs.withColumn("_seq", stamp))
-                    .write.partitionBy("centroid")
-                    .mode("overwrite")
-                    .parquet(os.path.join(stage, "vectors"))
+                    lambda: _write_delta(
+                        vecs.withColumn("_seq", stamp),
+                        os.path.join(stage, "vectors"),
+                    )
                 )
             if replace:
                 writes.append(
@@ -3815,12 +3834,14 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
     Same pattern as the bounded bucket rewrite in ``VectorIndex.delete``
     (index.py:282-303).
 
-    Touched set = (a) every ``centroid=N`` partition present under any
-    committed ``batches/<seq>_<uuid>/codes`` dir (dir listing, no Spark
-    job) ∪ (b) every base partition holding a tombstoned id — found with
-    ONE column-pruned scan of base ``(id, centroid)`` semi-joined against
-    the broadcast tombstone set (a superset of the strictly-older mask is
-    fine: it only widens the rewrite, never the visible rows).
+    Touched set = (a) every ``centroid`` value in any committed
+    ``batches/<seq>_<uuid>/codes`` root (a column of the flat delta
+    files; a partition column of deltas written partitioned) ∪ (b) every
+    base partition holding a tombstoned id — a column-pruned scan of
+    base ``(id, centroid)`` semi-joined against the broadcast tombstone
+    set (a superset of the strictly-older mask is fine: it only widens
+    the rewrite, never the visible rows). Both sides are one
+    ``distinct().collect()``.
 
     Eligibility is the caller's job: ``idx`` must MIRROR the committed
     layout at ``path`` (``_mirror_path``) — the fold reads committed
@@ -3854,23 +3875,25 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
         # corpus cost
         return
 
-    # (a) partitions carried by data commits — pure dir listing
-    touched: set[int] = set()
-    for b in commits:
-        croot = os.path.join(bdir, b, "codes")
-        if os.path.isdir(croot):
-            for d in os.listdir(croot):
-                if d.startswith("centroid="):
-                    touched.add(int(d.split("=", 1)[1]))
-    # (b) base partitions holding tombstoned ids — one pruned scan of
-    # (id, centroid); codes bytes and floats never load. Every read of
-    # the layout uses the schemas the tip's meta.json records.
+    # touched cells, in ONE job: (a) the centroid column of every data
+    # commit's codes ∪ (b) base cells holding a tombstoned id — a pruned
+    # scan of base (id, centroid) semi-joined to the broadcast marks.
+    # Codes bytes and floats never load. Every read of the layout uses
+    # the schemas the tip's meta.json records.
+    from functools import reduce
+
     old_meta = _layout_meta(path)
+    rec_codes = _recorded_schema(old_meta, "codes")
+    cells = [
+        _read_table(spark, root, rec_codes).select("centroid")
+        for seq, root in IvfSq8Index._layout_roots(path, "codes")
+        if seq > 0
+    ]
     marks = IvfSq8Index._read_delete_marks(spark, path, old_meta)
     base_codes = os.path.join(path, "codes")
     if marks is not None and os.path.isdir(base_codes):
-        hit = (
-            _read_table(spark, base_codes, _recorded_schema(old_meta, "codes"))
+        cells.append(
+            _read_table(spark, base_codes, rec_codes)
             .select(idx.id_col, "centroid")
             .join(
                 F.broadcast(marks.select(F.col("_del_id").alias(idx.id_col))),
@@ -3878,9 +3901,10 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
                 "left_semi",
             )
             .select("centroid")
-            .distinct()
-            .collect()
         )
+    touched: set[int] = set()
+    if cells:
+        hit = reduce(lambda a, b: a.unionByName(b), cells).distinct().collect()
         touched.update(int(r["centroid"]) for r in hit)
 
     new_epoch = _layout_epoch(path) + 1
@@ -4487,11 +4511,13 @@ class IvfSq8Index:
         saved before schemas were recorded — the first root's footer,
         inferred once. No root pays its own footer-read job, and every
         branch has the same shape (``_read_seq_root``). Each root is read
-        separately (partition discovery stays per-root, so
-        ``centroid=N`` file pruning pushes into every branch of the
-        union). Callers apply ``_mask_deleted`` (which drops ``_seq``)
-        before serving rows. ``as_of`` bounds the union to commits
-        ``<= as_of`` (time travel — see ``_layout_roots``)."""
+        separately, so a ``centroid`` probe prunes every branch of the
+        union: ``centroid=N`` dirs on the base (and on deltas written
+        partitioned), row-group min/max on the centroid-sorted flat
+        delta files (``_write_delta``). Callers apply ``_mask_deleted``
+        (which drops ``_seq``) before serving rows. ``as_of`` bounds the
+        union to commits ``<= as_of`` (time travel — see
+        ``_layout_roots``)."""
         from functools import reduce
 
         roots = IvfSq8Index._layout_roots(path, sub, as_of)
