@@ -1975,6 +1975,93 @@ def test_ivfpq_index_search_batched_equals_per_query(spark, embeddings):
         assert got[qid] == single, qid
 
 
+def test_ivfpq_index_search_chooses_probe_cells_once_per_query(
+    spark, embeddings, monkeypatch
+):
+    """IvfPqIndex.search and search_batched pick each query's probe cells
+    once: the ADC shortlist and the co-located re-rank's cell prune
+    share one probe map (the IvfSq8Index.search_batched shape), so
+    |Q| queries cost |Q| centroid-distance passes, not 2|Q|."""
+    from whatsapp_vectordb_spark.operators.ann import (
+        IvfPqIndex,
+        IvfPqResidualIndex,
+    )
+
+    emb = embeddings.select("vec_id", "embedding")
+    idx = IvfPqIndex.build(emb, n_centroids=4, m=8, ksub=16, sample_rows=300)
+    qrows = emb.where(F.col("vec_id").isin(0, 1, 2)).collect()
+    queries = [(r["vec_id"], r["embedding"]) for r in qrows]
+    calls = []
+    probe_cells = IvfPqResidualIndex.probe_cells
+
+    def counted(self, query_vec, nprobe):
+        calls.append(nprobe)
+        return probe_cells(self, query_vec, nprobe)
+
+    monkeypatch.setattr(IvfPqResidualIndex, "probe_cells", counted)
+    idx.search_batched(queries=queries, k=5, nprobe=2)
+    assert len(calls) == len(queries)
+    calls.clear()
+    idx.search(query_vec=queries[0][1], k=5, nprobe=2)
+    assert len(calls) == 1
+
+
+def test_empty_base_layouts_load_and_serve_their_commits(
+    spark, embeddings, tmp_path
+):
+    """Two layouts whose base holds no rows: an empty save, and a base
+    whose every row was tombstoned and then folded away. Once a commit
+    lands, each loads and serves exactly the committed rows (the
+    current epoch reads its base root whole, and a root with no part
+    files adds no branch), and the folded layout's pre-fold snapshots
+    still read the whole retained base."""
+    from whatsapp_vectordb_spark.operators.ann import (
+        IvfPqIndex,
+        IvfSq8Index,
+        verify_layout,
+    )
+
+    emb = embeddings.select("vec_id", "embedding")
+    batch = emb.where(F.col("vec_id") % 40 == 0)
+    want = sorted(r["vec_id"] for r in batch.collect())
+    n = emb.count()
+
+    def ids(df):
+        return sorted(r[0] for r in df.select("vec_id").collect())
+
+    for cls, kw in (
+        (IvfSq8Index, dict(n_centroids=4)),
+        (IvfPqIndex, dict(n_centroids=4, m=8, ksub=16, sample_rows=300)),
+    ):
+        name = cls.__name__
+        # an empty save: no centroid= dirs, no part files
+        empty = cls.build(emb, **kw)
+        empty.codes = empty.codes.limit(0)
+        empty.vectors = empty.vectors.limit(0)
+        p1 = str(tmp_path / f"{name}_empty")
+        empty.save(p1, store_vectors=True)
+        empty.add_batch(batch, path=p1)
+        got = cls.load(spark, p1)
+        assert ids(got.codes) == want and ids(got.vectors) == want, name
+        hits = ids(got.search(query_vec=batch.head()["embedding"], k=3))
+        assert hits and set(hits) <= set(want), name
+
+        # every row tombstoned, then folded: the base holds no rows
+        p2 = str(tmp_path / f"{name}_tombstoned")
+        cls.build(emb, **kw).save(p2, store_vectors=True)
+        cls.load(spark, p2).delete(emb.select("vec_id"), path=p2)
+        folded = cls.load(spark, p2).save(p2)
+        assert folded.codes.count() == 0, name
+        folded.add_batch(batch, path=p2)
+        got = cls.load(spark, p2)
+        assert ids(got.codes) == want and ids(got.vectors) == want, name
+        assert cls.load(spark, p2, as_of=(1, 1)).codes.count() == len(want)
+        assert cls.load(spark, p2, as_of=(0, 1)).codes.count() == 0, name
+        pre = cls.load(spark, p2, as_of=(0, 0))
+        assert pre.codes.count() == n and pre.vectors.count() == n, name
+        assert verify_layout(p2, spark)["ok"], name
+
+
 def test_layout_mutation_stats(spark, embeddings, tmp_path):
     """The maintenance-telemetry verb: counts committed mutation dirs by
     kind (driver-side listing only), and resets at fold."""

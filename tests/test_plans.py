@@ -1103,6 +1103,52 @@ def test_retained_snapshot_plan_prunes_and_tip_ignores_retention(
     assert "SortMergeJoin" not in p_snap, p_snap
 
 
+def test_folded_tip_and_current_epoch_bound_read_one_plan(
+    spark, embeddings, tmp_path
+):
+    """After a fold, the tip and the current epoch's tip bound are the
+    same snapshot through the one reader: identical optimized plans
+    (expression ids normalized), and the all-live base reads whole —
+    no ``centroid IN`` filter narrows it to a cell list."""
+    import re
+
+    from whatsapp_vectordb_spark.operators.ann import (
+        IvfSq8Index,
+        layout_snapshots,
+    )
+
+    emb = embeddings.select("vec_id", "embedding")
+    path = str(tmp_path / "fold_bound_plan")
+    IvfSq8Index.build(emb, n_centroids=4).save(path, store_vectors=True)
+    qvec = emb.where(F.col("vec_id") == 0).head()["embedding"]
+    repl = emb.where(F.col("vec_id") % 25 == 0).select(
+        "vec_id", F.lit(qvec).cast("array<float>").alias("embedding")
+    )
+    IvfSq8Index.load(spark, path).upsert(repl, path=path)
+    IvfSq8Index.load(spark, path).save(path)  # FOLD → epoch 1
+    IvfSq8Index.load(spark, path).upsert(  # (1, 1)
+        repl.where(F.col("vec_id") % 50 == 0), path=path
+    )
+    IvfSq8Index.load(spark, path).delete([3, 23], path=path)  # (1, 2)
+    bound = max(layout_snapshots(path))
+    assert bound == (1, 2)
+
+    def optimized(df):
+        # expression ids, and the counters in generated lambda names
+        p = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"(_\d+)?#\d+L?", "#", p)
+
+    tip = IvfSq8Index.load(spark, path)
+    snap = IvfSq8Index.load(spark, path, as_of=bound)
+    for table in ("codes", "vectors"):
+        p_tip = optimized(getattr(tip, table))
+        assert p_tip == optimized(getattr(snap, table)), table
+        assert "centroid# IN" not in p_tip and "INSET" not in p_tip, p_tip
+    assert optimized(tip.search(query_vec=qvec, k=5)) == optimized(
+        snap.search(query_vec=qvec, k=5)
+    )
+
+
 def test_time_travel_snapshot_drops_newer_roots_keeps_pruning(
     spark, embeddings, tmp_path
 ):

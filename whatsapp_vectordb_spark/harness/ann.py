@@ -4372,8 +4372,8 @@ def _ivfpq_semantic_serve_sql(d: str) -> str:
     a deleted id puts it in both shortlists, the engine serves it from
     its (leaked) float store, and the oracle's vis join drops it — hash
     breaks. Row loss on this tier is covered by the SQ8 twins through
-    the shared `_save_layout` / `_fold_touched` / `rebuild_layout`
-    implementations."""
+    the shared `_PersistedIvfIndex.save` / `_fold_touched` /
+    `rebuild_layout` implementations."""
     return f"""
 WITH codes AS (
   SELECT vec_id, codes, centroid

@@ -397,6 +397,29 @@ def assign_nearest_centroid(df: DataFrame, centroids, vec_col: str) -> DataFrame
     return df.mapInPandas(nearest, schema=out_schema)
 
 
+def _cell_stats(assigned: DataFrame, n_cells: int) -> dict:
+    """Layout-balance fingerprint of a frame's ``centroid`` column:
+    {n_cells, nonempty, total, max_share, top5_shares} over its per-cell
+    counts — one groupBy-count, k rows to the driver."""
+    counts = sorted(
+        (
+            r["c"]
+            for r in assigned.groupBy("centroid")
+            .agg(F.count("*").alias("c"))
+            .collect()
+        ),
+        reverse=True,
+    )
+    total = sum(counts)
+    return {
+        "n_cells": n_cells,
+        "nonempty": len(counts),
+        "total": total,
+        "max_share": round(counts[0] / total, 4) if total else 0.0,
+        "top5_shares": [round(c / total, 4) for c in counts[:5]],
+    }
+
+
 class IvfIndex:
     """Inverted-file index: coarse k-means quantizer + centroid-partitioned
     vectors. Build once, probe per query.
@@ -425,21 +448,7 @@ class IvfIndex:
         data. Check ``max_share`` after building: a value near 1.0 means
         the index is a scan in disguise — rebuild with ``build_portable``
         or raise the sample/iteration budget."""
-        counts = [
-            r["c"]
-            for r in self.assigned.groupBy("centroid")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        ]
-        counts.sort(reverse=True)
-        total = sum(counts)
-        return {
-            "n_cells": int(self.centroids.shape[0]),
-            "nonempty": len(counts),
-            "total": total,
-            "max_share": round(counts[0] / total, 4) if total else 0.0,
-            "top5_shares": [round(c / total, 4) for c in counts[:5]],
-        }
+        return _cell_stats(self.assigned, int(self.centroids.shape[0]))
 
     @classmethod
     def build(
@@ -1392,10 +1401,17 @@ class IvfPqResidualIndex:
         """Top-k (ascending integer distance) over the probed cells'
         codes — centroid filter prunes partitions on a saved layout, the
         scan reads codes only, ties break by id."""
+        return self._probe_cells_topk(
+            encoded, query_vec, self.probe_cells(query_vec, nprobe), k
+        )
+
+    def _probe_cells_topk(
+        self, encoded: DataFrame, query_vec, cells: list[int], k: int
+    ) -> DataFrame:
+        """``probe`` over cells the caller already chose."""
         import pandas as pd
         from pyspark.sql.types import LongType, StructField, StructType
 
-        cells = self.probe_cells(query_vec, nprobe)
         luts = self.luts_int(query_vec, cells)
         id_col = self.id_col
         m = self.m
@@ -2977,22 +2993,6 @@ def _committed_batches(path: str) -> list[str]:
     )
 
 
-def _require_writable(idx, verb: str) -> None:
-    """Mutation guard for TIME-TRAVEL handles: an index opened with
-    ``load(as_of=N)`` is a read-only snapshot. Writing through it would
-    be worse than confusing — ``save`` folds ``idx.codes`` (the
-    snapshot's masked view) into the base layout and deletes every
-    batch dir, silently DESTROYING all commits newer than the snapshot;
-    ``upsert``/``delete`` would stamp tombstones computed against a
-    stale view. Every mutating entry point calls this first."""
-    if getattr(idx, "_as_of", None) is not None:
-        raise RuntimeError(
-            f"{verb}: this index is a read-only as_of={idx._as_of} "
-            "snapshot (time-travel load); re-load the layout tip "
-            "(load(path) with no as_of) to mutate it"
-        )
-
-
 def _layout_epoch(path: str) -> int:
     """Current FOLD EPOCH of a saved layout — the monotonically
     increasing counter ``meta.json`` carries (``fold_epoch``), bumped by
@@ -3105,8 +3105,14 @@ def _read_seq_root(
     )
 
 
-def _mark_cols(marks: DataFrame, id_col: str) -> DataFrame:
-    """Raw tombstone rows ``(_del_id, _del_seq)`` for ``_mask_deleted``."""
+def _mark_cols(marks: DataFrame | None, id_col: str) -> DataFrame | None:
+    """Raw tombstone rows ``(_del_id, _del_seq)`` for ``_mask_deleted``,
+    one per tombstone — NOT folded to one row per id: the anti-join
+    drops a row iff SOME tombstone for its id is newer, the same
+    predicate as comparing against the max, and without a ``groupBy``
+    the mask costs no shuffle. None (no tombstones) stays None."""
+    if marks is None:
+        return None
     return marks.select(
         F.col(id_col).alias("_del_id"), F.col("_seq").alias("_del_seq")
     )
@@ -3290,73 +3296,105 @@ def _snapshot_cell_sources(
     return sources
 
 
+def _has_parquet(root: str) -> bool:
+    """Whether ``root`` holds a part file anywhere below it. A layout
+    root without one (a legacy empty commit: just ``_SUCCESS``; a base
+    every row of which was folded away) has no rows and no footer."""
+    return any(
+        f.endswith(".parquet") for _, _, files in os.walk(root) for f in files
+    )
+
+
+def _snapshot_roots(
+    path: str, sub: str, current: int, as_of: tuple[int, int] | None = None
+) -> list[tuple[int, str, list[int] | None]]:
+    """The parquet roots one layout table (``codes``/``vectors``/
+    ``deletes``) reads at a snapshot, as ``(commit seq, root, cells the
+    root serves — None: all of it)`` — the one resolver for every read
+    of a serving layout. ``current`` is the tip's fold epoch; ``as_of``
+    a bound normalized by ``_check_as_of`` (None: the tip).
+
+    Base cells: in the CURRENT epoch every cell is live, so the base
+    root reads whole with no cell filter — whatever ``centroid=`` dirs
+    it holds (an empty save holds none), and is skipped when it holds
+    no parquet. An OLDER epoch resolves its cells against the retained
+    fold chain (``_snapshot_cell_sources``): one root per source group
+    (the live base, or the ``_retained/<f>`` dir that displaced them)
+    under an ``isin`` of the group's cells, so the union width is the
+    number of folds consulted, not the cell count. A resolved root with
+    no parquet is an interrupted retention (raises) — or, for
+    ``vectors``, an epoch saved without a float store (no roots).
+
+    Commits: every root of the epoch's commit log (live, or the retained
+    ``batches/`` the fold at ``epoch+1`` consumed) with seq <= the
+    bound, skipping roots that hold no parquet. A bound only DROPS
+    roots: the same mechanism as Delta/Iceberg ``VERSION AS OF`` — the
+    commit log IS the snapshot structure. Pure metadata, no Spark job."""
+    epoch, seq = (current, None) if as_of is None else as_of
+    roots: list[tuple[int, str, list[int] | None]] = []
+    if sub != "deletes":
+        if epoch == current:
+            base = os.path.join(path, sub)
+            if _has_parquet(base):
+                roots.append((0, base, None))
+        else:
+            groups: dict[tuple[str, int], list[int]] = {}
+            for c, src in _snapshot_cell_sources(path, epoch).items():
+                groups.setdefault(src, []).append(c)
+            for (kind, f), cells in sorted(groups.items()):
+                root = (
+                    os.path.join(path, sub)
+                    if kind == "live"
+                    else os.path.join(_retained_dir(path, f), sub)
+                )
+                if not _has_parquet(root):
+                    if sub == "vectors":
+                        return []  # this epoch's layout had no float store
+                    raise RuntimeError(
+                        f"snapshot (epoch {epoch}) of {path!r}: resolved "
+                        f"{sub} root {root!r} is missing — interrupted "
+                        "retention; vacuum the broken fold"
+                    )
+                roots.append((0, root, sorted(cells)))
+    bdir = _epoch_batch_dir(path, epoch, current)
+    for b in _batch_names_checked(bdir, f"epoch {epoch} of {path!r}"):
+        root = os.path.join(bdir, b, sub)
+        if (seq is None or _parse_seq(b) <= seq) and _has_parquet(root):
+            roots.append((_parse_seq(b), root, None))
+    return roots
+
+
 def _snapshot_table(
     spark: SparkSession,
     path: str,
     sub: str,
-    epoch: int,
-    seq: int,
-    sources: dict[int, tuple[str, int]],
     meta: dict,
+    current: int,
+    as_of: tuple[int, int] | None = None,
 ) -> DataFrame | None:
-    """One layout table (``codes``/``vectors``/``deletes``) as it stood
-    at snapshot ``(epoch, seq)`` of an OLDER epoch — the retention read
-    path (current-epoch snapshots use ``_layout_roots``, identical cost
-    to a tip read). Base cells group by their resolved source dir (one
-    scan of the live base + one per consulted retained fold, each under
-    an ``isin`` partition filter — pruning intact, union width is the
-    number of folds consulted, not the cell count); epoch-e mutation
-    commits read from the retained ``batches/`` the fold at e+1
-    consumed, bounded to ``seq`` exactly like a live time-travel read.
-    Rows carry ``_seq`` for the caller's strictly-older mask. Every root
-    reads under the schema recorded in ``meta`` — that epoch's own
-    ``meta.json`` — like a tip read (``IvfSq8Index._read_layout``)."""
+    """One layout table as it stood at snapshot ``as_of`` (None: the
+    tip): the ``_snapshot_roots`` unioned by name, each row carrying its
+    commit ``_seq`` (base = 0) for the caller's strictly-older mask
+    (``_mask_deleted``, which drops ``_seq``), or None when no root
+    holds rows. Every root reads under ONE explicit schema — the one
+    ``meta`` (the snapshot epoch's own ``meta.json``) records for the
+    table, or, for a layout saved before schemas were recorded, the
+    first root's footer, inferred once — so no root pays a footer job
+    and every branch has one shape (``_read_seq_root``). Each root is
+    read separately, so a ``centroid`` probe prunes every branch:
+    ``centroid=N`` dirs on the base and the retained cells, row-group
+    min/max on the centroid-sorted flat deltas (``_write_delta``)."""
     from functools import reduce
 
-    def has_parquet(root: str) -> bool:
-        for _, _, files in os.walk(root):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    # (seq, root, cells the root serves — None: all of them)
-    specs: list[tuple[int, str, list[int] | None]] = []
-    if sub != "deletes":
-        groups: dict[tuple[str, int], list[int]] = {}
-        for c, src in sources.items():
-            groups.setdefault(src, []).append(c)
-        for (kind, f), cells in sorted(groups.items()):
-            root = (
-                os.path.join(path, sub)
-                if kind == "live"
-                else os.path.join(_retained_dir(path, f), sub)
-            )
-            if not (os.path.isdir(root) and has_parquet(root)):
-                if sub == "vectors":
-                    return None  # this epoch's layout had no float store
-                raise RuntimeError(
-                    f"snapshot (epoch {epoch}) of {path!r}: resolved "
-                    f"{sub} root {root!r} is missing — interrupted "
-                    "retention; vacuum the broken fold"
-                )
-            specs.append((0, root, sorted(cells)))
-    bdir = _epoch_batch_dir(path, epoch, _layout_epoch(path))
-    for b in _batch_names_checked(bdir, f"epoch {epoch} of {path!r}"):
-        if _parse_seq(b) > seq:
-            continue
-        root = os.path.join(bdir, b, sub)
-        if os.path.isdir(root) and has_parquet(root):
-            specs.append((_parse_seq(b), root, None))
-    if not specs:
+    roots = _snapshot_roots(path, sub, current, as_of)
+    if not roots:
         return None
-    with_seq = _seq_schema(spark, _recorded_schema(meta, sub), specs[0][1])
+    with_seq = _seq_schema(spark, _recorded_schema(meta, sub), roots[0][1])
     parts = []
-    for root_seq, root, cells in specs:
-        df = _read_seq_root(spark, root, root_seq, with_seq)
-        if cells is not None:
-            df = df.where(F.col("centroid").isin(cells))
-        parts.append(df)
-    return reduce(lambda a, b2: a.unionByName(b2), parts)
+    for seq, root, cells in roots:
+        df = _read_seq_root(spark, root, seq, with_seq)
+        parts.append(df if cells is None else df.where(F.col("centroid").isin(cells)))
+    return reduce(lambda a, b: a.unionByName(b), parts)
 
 
 def vacuum_layout(path: str, keep_epochs: int = 2) -> dict:
@@ -3450,12 +3488,7 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
     _fsck(path, names, errors, warnings, info)
     seqs = [s for s in map(_parse_seq, names) if s >= 1]
     for b in names:
-        has_parquet = any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(os.path.join(bdir, b))
-            for f in files
-        )
-        if not has_parquet:
+        if not _has_parquet(os.path.join(bdir, b)):
             warnings.append(f"commit dir {b!r} holds no parquet (legacy "
                             "empty commit) — skipped by reads")
     info["commits"] = len(names)
@@ -3491,15 +3524,11 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
         def count_rows(root: str) -> int | None:
             # a store dir holding zero parquet (every part file torn
             # out) cannot even infer a schema — that IS the finding
-            if not any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(root)
-                for f in files
-            ):
+            if not _has_parquet(root):
                 return None
             return spark.read.parquet(root).count()
 
-        for seq, codes_root in IvfSq8Index._layout_roots(path, "codes"):
+        for seq, codes_root, _ in _snapshot_roots(path, "codes", current):
             vec_root = codes_root[: -len("codes")] + "vectors"
             if not os.path.isdir(vec_root):
                 continue
@@ -3521,7 +3550,7 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
             rec = _recorded_schema(meta, sub)
             if rec is None:
                 continue  # layout saved before schemas were recorded
-            for seq, root in IvfSq8Index._layout_roots(path, sub):
+            for seq, root, _ in _snapshot_roots(path, sub, current):
                 found = {
                     f.name: _as_nullable(f.dataType)
                     for f in spark.read.parquet(root).schema
@@ -3543,40 +3572,6 @@ def verify_layout(path: str, spark: SparkSession | None = None) -> dict:
 
     return {"ok": not errors, "errors": errors, "warnings": warnings,
             "info": info}
-
-
-def _load_layout_frames(spark, path: str, as_of, meta: dict):
-    """Shared ``load`` body for both persisted tiers: normalize the
-    time-travel bound and produce the (meta, codes, vectors, tombstone
-    marks, normalized bound) the class constructor masks and wraps.
-    Three read shapes, in cost order: tip (``as_of=None``) and
-    CURRENT-epoch snapshots read the live layout through
-    ``_layout_roots`` (a snapshot only DROPS union branches — 0.96× a
-    tip read, measured r16); an OLDER epoch resolves through the
-    retained fold chain (``_snapshot_cell_sources``/``_snapshot_table``
-    — r16 verdict #2), including that epoch's OWN ``meta.json`` from
-    the retained dir: a rebuild retrains the quantizers, so a pre-
-    rebuild snapshot must score with the pre-rebuild scaler/codebooks,
-    never the tip's — and reads under that meta's recorded schemas.
-    Building the frames runs no Spark job when the schemas are recorded
-    (``_layout_schemas``)."""
-    norm = _check_as_of(path, as_of)
-    current = int(meta.get("fold_epoch", 0))
-    if norm is not None and norm[0] < current:
-        e, s = norm
-        meta = _layout_meta(_retained_dir(path, e + 1))
-        sources = _snapshot_cell_sources(path, e)
-        codes = _snapshot_table(spark, path, "codes", e, s, sources, meta)
-        marks = _snapshot_table(spark, path, "deletes", e, s, sources, meta)
-        if marks is not None:
-            marks = _mark_cols(marks, meta["id_col"])
-        vecs = _snapshot_table(spark, path, "vectors", e, s, sources, meta)
-    else:
-        seq_bound = None if norm is None else norm[1]
-        codes = IvfSq8Index._read_layout(spark, path, "codes", meta, seq_bound)
-        marks = IvfSq8Index._read_delete_marks(spark, path, meta, seq_bound)
-        vecs = IvfSq8Index._read_layout(spark, path, "vectors", meta, seq_bound)
-    return meta, codes, vecs, marks, norm
 
 
 def maintenance_tick(
@@ -3692,47 +3687,6 @@ def _write_deletes(idx, ids: DataFrame, stage: str, seq: int) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "deletes"))
 
 
-def _index_delete(idx, ids, path: str | None) -> None:
-    """Shared delete-by-id implementation for the persisted serving
-    artifacts (IvfSq8Index / IvfPqIndex — one contract, see
-    ``IvfSq8Index.delete``): pin the id set, commit it (with ``path``)
-    as an atomic ``batches/<seq>_<uuid>/deletes`` rename, and mask the
-    in-memory plans with one broadcast anti-join each."""
-    _require_writable(idx, "delete")
-
-    spark = idx.codes.sparkSession
-    if not isinstance(ids, DataFrame):
-        # driver data: deterministic and known non-empty, so no pin and
-        # no emptiness job — the commit write is the one job
-        rows = [(i,) for i in ids]
-        if not rows:
-            return
-        ids = local_df(spark, rows, [idx.id_col]).select(idx.id_col)
-    else:
-        # pin: the disk write and the in-memory anti-joins are separate
-        # jobs — a nondeterministic ids plan could tombstone one set on
-        # disk and mask another in memory
-        ids = ids.select(idx.id_col).localCheckpoint(eager=True)
-        if ids.isEmpty():
-            return
-    if path is not None:
-        _commit(
-            path,
-            "delete",
-            lambda stage, seq: _write_deletes(idx, ids, stage, seq),
-            lambda: _committed_batches(path),
-        )
-    idx.codes = idx.codes.join(F.broadcast(ids), idx.id_col, "left_anti")
-    if idx.vectors is not None:
-        idx.vectors = idx.vectors.join(F.broadcast(ids), idx.id_col, "left_anti")
-    # mirror bookkeeping (see _fold_touched): a committed delete on the
-    # layout this object mirrors keeps the mirror; an in-memory-only or
-    # foreign-path delete breaks it (save() then takes the full rewrite)
-    idx._mirror_path = (
-        path if getattr(idx, "_mirror_path", None) == path else None
-    )
-
-
 def _write_delta(df: DataFrame, root: str) -> None:
     """One delta commit table: a file per pinned-batch partition (one
     file at the upsert sizes the serving tier sees), each sorted by
@@ -3745,85 +3699,7 @@ def _write_delta(df: DataFrame, root: str) -> None:
     df.sortWithinPartitions("centroid").write.mode("overwrite").parquet(root)
 
 
-def _index_add(
-    idx, batch: DataFrame, path: str | None, replace: bool, code_col: str, encode
-):
-    """Shared ``add_batch`` body for the persisted serving artifacts
-    (IvfSq8Index / IvfPqIndex — one contract, see
-    ``IvfSq8Index.add_batch``). ``encode(batch)`` is the class's
-    frozen-quantizer derivation: ``(codes frame with code_col and
-    centroid, (id, vec, centroid) float rows)``.
-
-    The INPUT is pinned once: codes, co-located floats, tombstones and
-    the in-memory unions are separate Spark jobs over ``batch``, so a
-    nondeterministic batch (df.sample, a limit, a source dir changing
-    between jobs) could otherwise commit codes whose floats row never
-    materialized inside the same "atomic" dir. The replace path dedupes
-    by id FIRST: two same-id rows in one upsert would share a commit
-    seq and both survive the strictly-older tombstone mask forever —
-    replace semantics admit exactly one winner per id per commit."""
-    _require_writable(idx, "add_batch")
-    if replace:
-        batch = batch.dropDuplicates([idx.id_col])
-    batch = batch.select(idx.id_col, idx.vec_col).localCheckpoint(eager=True)
-    if batch.isEmpty():
-        # nothing to ingest — an empty commit would only add a root
-        # every later read lists and opens for no rows. Decided on the
-        # PINNED batch: the encode is a map-only 1:1 derivation, so its
-        # output is empty iff the batch is, and checking it would pay an
-        # extra encode job per commit.
-        return idx
-    enc, vecs = encode(batch)
-    if path is not None:
-
-        def write(stage: str, seq: int) -> None:
-            stamp = F.lit(seq).cast("long")
-            writes = [
-                lambda: _write_delta(
-                    enc.select(idx.id_col, code_col, "centroid").withColumn(
-                        "_seq", stamp
-                    ),
-                    os.path.join(stage, "codes"),
-                )
-            ]
-            if os.path.isdir(os.path.join(path, "vectors")):
-                writes.append(
-                    lambda: _write_delta(
-                        vecs.withColumn("_seq", stamp),
-                        os.path.join(stage, "vectors"),
-                    )
-                )
-            if replace:
-                writes.append(
-                    lambda: _write_deletes(
-                        idx, batch.select(idx.id_col), stage, seq
-                    )
-                )
-            _run_writes(writes)
-
-        _commit(path, "add_batch", write, lambda: _committed_batches(path))
-    if replace:
-        # in-memory mirror of the seq rule: older rows with these ids
-        # vanish, then the batch's own rows union in below
-        old_ids = F.broadcast(batch.select(idx.id_col))
-        idx.codes = idx.codes.join(old_ids, idx.id_col, "left_anti")
-        if idx.vectors is not None:
-            idx.vectors = idx.vectors.join(old_ids, idx.id_col, "left_anti")
-    idx.codes = idx.codes.unionByName(
-        enc.select(idx.id_col, code_col, "centroid"), allowMissingColumns=True
-    )
-    if idx.vectors is not None:
-        idx.vectors = idx.vectors.unionByName(vecs, allowMissingColumns=True)
-    # a commit onto the mirrored layout keeps the mirror; an
-    # in-memory-only (or foreign-path) ingest breaks it — save() then
-    # takes the full rewrite instead of the bounded fold
-    idx._mirror_path = (
-        path if getattr(idx, "_mirror_path", None) == path else None
-    )
-    return idx
-
-
-def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
+def _fold_touched(idx, path: str, store_vectors: bool) -> None:
     """BOUNDED compaction (``save``-as-fold, round-16): rewrite ONLY the
     centroid partitions touched by the accumulated mutation commits and
     leave every other partition dir of the base layout physically in
@@ -3882,14 +3758,18 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
     # the schemas the tip's meta.json records.
     from functools import reduce
 
+    code_col = idx._code_col
     old_meta = _layout_meta(path)
+    current = int(old_meta.get("fold_epoch", 0))
     rec_codes = _recorded_schema(old_meta, "codes")
     cells = [
         _read_table(spark, root, rec_codes).select("centroid")
-        for seq, root in IvfSq8Index._layout_roots(path, "codes")
+        for seq, root, _ in _snapshot_roots(path, "codes", current)
         if seq > 0
     ]
-    marks = IvfSq8Index._read_delete_marks(spark, path, old_meta)
+    marks = _mark_cols(
+        _snapshot_table(spark, path, "deletes", old_meta, current), idx.id_col
+    )
     base_codes = os.path.join(path, "codes")
     if marks is not None and os.path.isdir(base_codes):
         cells.append(
@@ -3907,14 +3787,14 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
         hit = reduce(lambda a, b: a.unionByName(b), cells).distinct().collect()
         touched.update(int(r["centroid"]) for r in hit)
 
-    new_epoch = _layout_epoch(path) + 1
+    new_epoch = current + 1
     stage = os.path.join(path, "_staging", uuid.uuid4().hex)
     subs = ["codes"] + (["vectors"] if store_vectors else [])
     try:
         if touched:
             vals = sorted(touched)
             folded = _mask_deleted(
-                IvfSq8Index._read_layout(spark, path, "codes", old_meta).where(
+                _snapshot_table(spark, path, "codes", old_meta, current).where(
                     F.col("centroid").isin(vals)
                 ),
                 marks,
@@ -3930,11 +3810,9 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
             ]
             if store_vectors:
                 fv = _mask_deleted(
-                    IvfSq8Index._read_layout(
-                        spark, path, "vectors", old_meta
-                    ).where(
-                        F.col("centroid").isin(vals)
-                    ),
+                    _snapshot_table(
+                        spark, path, "vectors", old_meta, current
+                    ).where(F.col("centroid").isin(vals)),
                     marks,
                     idx.id_col,
                 )
@@ -3989,133 +3867,6 @@ def _fold_touched(idx, path: str, store_vectors: bool, code_col: str) -> None:
     os.rename(os.path.join(stage, "meta.json"), meta_path)  # loud window closes
     shutil.rmtree(stage, ignore_errors=True)
     _repoint(idx, spark, path, meta, store_vectors)
-
-
-def _save_layout(idx, path: str, store_vectors: bool | None, code_col: str):
-    """ONE save/compaction implementation for both persisted serving
-    artifacts (IvfSq8Index / IvfPqIndex) — the staged-commit
-    choreography was duplicated ~150 lines across the two classes
-    (deferred r15 cleanup), so a commit-protocol fix had to land twice.
-    Everything class-specific flows through ``code_col`` and
-    ``idx._meta_dict()``; the classes keep their own ``save`` docstrings
-    (the user-facing contract).
-
-    Protocol (see IvfSq8Index.save): resolve the float-store shape
-    (``None`` preserves the on-disk layout), try the BOUNDED fold
-    (``_fold_touched``) when ``idx`` mirrors the committed state, else
-    stage codes/vectors/meta under ``_staging/<uuid>`` and commit with
-    the loud order — old meta removed FIRST, staged dirs rename in, new
-    meta renames LAST as the atomic publish. The whole save/fold holds
-    the writer lease (save rewrites state every other verb's seq
-    allocation depends on)."""
-    _require_writable(idx, "save")
-    with _writer_lease(path, "save"):
-        return _save_layout_locked(idx, path, store_vectors, code_col)
-
-
-def _save_layout_locked(idx, path, store_vectors, code_col):
-    """Body of ``_save_layout`` — runs under the writer lease."""
-    import json as _json
-    import shutil
-    import uuid
-
-    _gc_staging(path)
-    disk_has_vectors = os.path.isdir(os.path.join(path, "vectors")) or any(
-        os.path.isdir(os.path.join(path, "batches", b, "vectors"))
-        for b in (
-            os.listdir(os.path.join(path, "batches"))
-            if os.path.isdir(os.path.join(path, "batches"))
-            else []
-        )
-    )
-    if store_vectors is None:
-        # preserve the on-disk layout: a vectors store in the base dir
-        # or in any committed batch dir means the index is serving
-        # co-located re-ranks — keep that working
-        store_vectors = disk_has_vectors
-    if (
-        getattr(idx, "_mirror_path", None) == path
-        and store_vectors == disk_has_vectors
-    ):
-        _fold_touched(idx, path, store_vectors, code_col)
-        return idx
-    # epoch bookkeeping: a rewrite OVER a consistent prior layout is a
-    # fold (epoch bumps, prior state retained — r16 verdict #2 /
-    # ADVICE r16); a fresh save starts at epoch 0. A path holding
-    # retained history but an interrupted tip (meta gone mid-save)
-    # resumes numbering past the retained max so epochs stay monotonic.
-    meta_path = os.path.join(path, "meta.json")
-    prior = os.path.exists(meta_path)
-    retained_max = max(_retained_epochs(path), default=-1)
-    if prior:
-        new_epoch = max(_layout_epoch(path), retained_max) + 1
-    else:
-        new_epoch = retained_max + 1 if retained_max >= 0 else 0
-    stage = os.path.join(path, "_staging", uuid.uuid4().hex)
-    try:
-        if store_vectors and idx.vectors is None:
-            raise ValueError(
-                "store_vectors=True but this index carries no vectors"
-            )
-        writes = [
-            lambda: _cluster_for_write(
-                idx.codes.select(idx.id_col, code_col, "centroid")
-            )
-            .write.partitionBy("centroid")
-            .mode("overwrite")
-            .parquet(os.path.join(stage, "codes"))
-        ]
-        if store_vectors:
-            writes.append(
-                lambda: _cluster_for_write(
-                    idx.vectors.select(idx.id_col, idx.vec_col, "centroid")
-                )
-                .write.partitionBy("centroid")
-                .mode("overwrite")
-                .parquet(os.path.join(stage, "vectors"))
-            )
-        _run_writes(writes)
-        meta = idx._meta_dict()
-        meta["fold_epoch"] = new_epoch
-        meta["schemas"] = _layout_schemas(idx, code_col, store_vectors)
-        with open(os.path.join(stage, "meta.json"), "w") as f:
-            _json.dump(meta, f)
-    except BaseException:
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    # staging fully materialized — now the commit sequence. Unreadable
-    # (loud) between the meta removal and the final rename; never a
-    # readable state whose meta mismatches the codes beside it. A
-    # CONSISTENT prior layout is RETAINED whole (meta + codes + vectors
-    # + commit log rename into `_retained/<new_epoch>/`, `full: true` —
-    # pre-rewrite snapshots stay readable); an interrupted prior (no
-    # meta) is garbage and is deleted as before.
-    ret = _retained_dir(path, new_epoch) if prior else None
-    if ret is not None:
-        os.makedirs(ret, exist_ok=True)
-        os.rename(meta_path, os.path.join(ret, "meta.json"))
-    for sub in ("codes", "vectors", "batches"):
-        old = os.path.join(path, sub)
-        if os.path.exists(old):
-            if ret is not None:
-                os.rename(old, os.path.join(ret, sub))
-            else:
-                shutil.rmtree(old)
-    if ret is not None:
-        with open(os.path.join(ret, "fold.json"), "w") as f:
-            _json.dump({"full": True, "created": []}, f)
-    os.rename(os.path.join(stage, "codes"), os.path.join(path, "codes"))
-    if store_vectors:
-        os.rename(os.path.join(stage, "vectors"), os.path.join(path, "vectors"))
-    os.rename(os.path.join(stage, "meta.json"), meta_path)
-    shutil.rmtree(stage, ignore_errors=True)
-    # re-point the lazy plans at the committed layout: an index loaded
-    # from THIS path had plans over the just-replaced dirs (a re-save
-    # without store_vectors on such an index drops its float store — any
-    # later co-located re-rank fails loudly on the missing dir, never
-    # reads stale floats — ADVICE r14)
-    _repoint(idx, idx.codes.sparkSession, path, meta, store_vectors)
-    return idx
 
 
 def _repoint(idx, spark: SparkSession, path: str, meta: dict, store_vectors: bool):
@@ -4288,7 +4039,465 @@ def _mask_deleted(df: DataFrame | None, marks: DataFrame | None, id_col: str):
     return df.join(F.broadcast(marks), cond, "left_anti").drop("_seq")
 
 
-class IvfSq8Index:
+class _PersistedIvfIndex:
+    """What the two persisted serving tiers (``IvfSq8Index``,
+    ``IvfPqIndex``) share: the layout, its commit log, its one snapshot
+    reader (``_snapshot_table``), and the verbs written over them —
+    ``load``, ``save`` (the fold), ``add_batch``/``upsert``/``delete``,
+    the filtered-codes and co-located re-rank frames — so a commit-
+    protocol or read-path fix lands once for both tiers. A subclass owns
+    its quantizer state, probe/search math, ``build``, ``_meta_dict``
+    and ``_rebuild_defaults``, and supplies:
+
+    - ``_code_col``: the codes column its layout persists;
+    - ``_frozen``: what its codes are scored with (``load``'s error);
+    - ``_from_meta(meta, codes, vectors)``: its constructor call;
+    - ``_encode(batch)``: its frozen-quantizer ingest derivation."""
+
+    _code_col: str
+    _frozen: str
+
+    def __init__(
+        self,
+        codes: DataFrame,
+        centroids,
+        id_col: str,
+        vec_col: str,
+        vectors: DataFrame | None,
+    ):
+        self.codes = codes  # (id_col, _code_col, centroid)
+        self.centroids = np.asarray(centroids, dtype=np.float64)
+        self.id_col = id_col
+        self.vec_col = vec_col
+        # optional CO-LOCATED float store (id, vec, centroid), persisted
+        # partitionBy(centroid) next to the codes: the re-rank shortlist
+        # is a subset of the probed cells by construction, so pruning the
+        # float side to the same cells is lossless — re-rank reads
+        # nprobe/k of the float bytes instead of scanning the whole float
+        # table (measured: BASELINE.md r13, flat ~9 s vs colocated
+        # sub-second at 1M×1536). FAISS keeps raw vectors inside the IVF
+        # lists for exactly this refine step.
+        self.vectors = vectors
+        # set by load(); kept by mutations committed to the same path;
+        # cleared by in-memory-only mutations. When it names `path`,
+        # save(path) may fold boundedly from committed state alone.
+        self._mirror_path: str | None = None
+        # the (epoch, seq) bound of a time-travel load; None at the tip
+        self._as_of: tuple[int, int] | None = None
+
+    def _require_writable(self, verb: str) -> None:
+        """Mutation guard for TIME-TRAVEL handles: an index opened with
+        ``load(as_of=N)`` is a read-only snapshot. Writing through it
+        would be worse than confusing — ``save`` folds ``self.codes``
+        (the snapshot's masked view) into the base layout and deletes
+        every batch dir, silently DESTROYING all commits newer than the
+        snapshot; ``upsert``/``delete`` would stamp tombstones computed
+        against a stale view. Every mutating entry point calls this
+        first."""
+        if self._as_of is not None:
+            raise RuntimeError(
+                f"{verb}: this index is a read-only as_of={self._as_of} "
+                "snapshot (time-travel load); re-load the layout tip "
+                "(load(path) with no as_of) to mutate it"
+            )
+
+    @classmethod
+    def load(
+        cls,
+        spark: SparkSession,
+        path: str,
+        as_of: int | tuple[int, int] | None = None,
+    ):
+        """Open the committed layout — the TIP by default, or (with
+        ``as_of``) a READ-ONLY snapshot. The bound is either a bare
+        commit seq (CURRENT-epoch shorthand) or the stable
+        ``(fold_epoch, seq)`` pair ``layout_snapshots(path)`` returns —
+        the pair form survives folds: seqs reset at every fold but
+        epochs never do, and an older epoch resolves through the
+        retained pre-fold versions (``vacuum_layout`` expires them;
+        ADVICE r16 / r16 verdict #2). Snapshot semantics follow the
+        epoch's commit log exactly: batch dirs with seq > bound are
+        never opened, tombstones fold only over commits <= bound, the
+        strictly-older mask applies within it, and the snapshot scores
+        with ITS epoch's frozen quantizer/scaler — an older epoch reads
+        its OWN ``meta.json`` from the retained dir, since a rebuild
+        retrains them. Snapshot handles refuse every mutating verb
+        (``_require_writable``); current-epoch bound cost over a tip
+        load is zero (the bound only DROPS union branches and mask
+        entries). Every shape reads through one reader
+        (``_snapshot_table``); building the frames runs no Spark job
+        when the layout records its schemas (``_layout_schemas``)."""
+        import json as _json
+
+        meta_path = os.path.join(path, "meta.json")
+        if not os.path.exists(meta_path):
+            if os.path.isdir(os.path.join(path, "codes")):
+                raise RuntimeError(
+                    f"{cls.__name__} at {path!r} has codes but no meta.json — "
+                    "an interrupted save; re-save from the builder (codes "
+                    f"without their {cls._frozen} must never be scored)"
+                )
+            raise FileNotFoundError(meta_path)
+        with open(meta_path) as f:
+            meta = _json.load(f)
+        norm = _check_as_of(path, as_of)
+        current = int(meta.get("fold_epoch", 0))
+        if norm is not None and norm[0] < current:
+            meta = _layout_meta(_retained_dir(path, norm[0] + 1))
+        codes, marks, vecs = (
+            _snapshot_table(spark, path, sub, meta, current, norm)
+            for sub in ("codes", "deletes", "vectors")
+        )
+        if codes is None:
+            raise RuntimeError(f"{cls.__name__} at {path!r} has meta.json but no codes")
+        id_col = meta["id_col"]
+        marks = _mark_cols(marks, id_col)
+        idx = cls._from_meta(
+            meta,
+            _mask_deleted(codes, marks, id_col),
+            _mask_deleted(vecs, marks, id_col),
+        )
+        idx._as_of = norm
+        # plans == committed state, by construction — but only the TIP
+        # may fold (a snapshot's fold would destroy newer commits)
+        idx._mirror_path = path if norm is None else None
+        return idx
+
+    def save(self, path: str, store_vectors: bool | None = None):
+        """Codes ``partitionBy(centroid)`` + one meta json (the frozen
+        quantizer state ``_meta_dict`` names, column names, the fold
+        epoch and the recorded table schemas). ``store_vectors=True``
+        additionally persists the CO-LOCATED float store (``vectors/``,
+        same partitioning) so a loaded index re-ranks against nprobe/k
+        of the float bytes with no external table — the FAISS
+        keep-raw-in-list refine layout. Leave it off when the floats
+        live in a source table that supports its own pruning (then pass
+        ``vectors_df`` to ``search``); a flat external float table costs
+        a full float-column scan per re-rank (measured, BASELINE.md
+        r13). The default ``None`` PRESERVES the existing layout:
+        re-saving (compacting) a path whose layout carries a float store
+        keeps it, a fresh save stays codes-only — so the compaction verb
+        can never silently destroy the float store (``False`` still
+        drops it explicitly).
+
+        CRASH SAFETY (ADVICE r13): everything is staged under
+        ``_staging/<uuid>`` first (codes, vectors, meta.json), then
+        committed in an order with no silently-wrong window: the OLD
+        ``meta.json`` is removed FIRST (an interrupted save leaves the
+        index loudly unreadable — ``load`` raises — never new codes
+        scored with a stale scaler), the staged layouts rename in, and
+        the new meta.json renames into place LAST as the atomic publish.
+        Saving also folds any ``batches/<uuid>`` appends into the base
+        layout (``self.codes`` already carries them after ``load`` +
+        ``add_batch``), so ``save`` doubles as the compaction verb. A
+        rewrite over a consistent prior layout is a fold: the fold epoch
+        bumps and the prior layout is RETAINED whole under
+        ``_retained/<epoch>`` (``fold.json`` ``full: true``), so
+        pre-rewrite snapshots stay readable. The whole save holds the
+        writer lease (it rewrites state every other verb's seq
+        allocation depends on).
+
+        BOUNDED FOLD (round 16): when this object MIRRORS the committed
+        layout at ``path`` (loaded from it, every mutation since
+        committed back to it — ``_mirror_path``) and the float-store
+        shape is unchanged, the fold rewrites ONLY the centroid
+        partitions the accumulated commits touched and leaves every
+        other partition dir physically in place — O(touched cells)
+        maintenance instead of the r15 O(corpus) full rewrite (74.6 s /
+        ~7.5 GB at 1M×1536 for a 2-cell mutation). See
+        ``_fold_touched``. Any in-memory-only mutation, foreign path, or
+        explicit float-store change still takes the full rewrite."""
+        import json as _json
+        import shutil
+        import uuid
+
+        self._require_writable("save")
+        with _writer_lease(path, "save"):
+            _gc_staging(path)
+            bdir = os.path.join(path, "batches")
+            disk_has_vectors = os.path.isdir(os.path.join(path, "vectors")) or any(
+                os.path.isdir(os.path.join(bdir, b, "vectors"))
+                for b in (os.listdir(bdir) if os.path.isdir(bdir) else [])
+            )
+            if store_vectors is None:
+                # preserve the on-disk layout: a vectors store in the base
+                # dir or in any committed batch dir means the index is
+                # serving co-located re-ranks — keep that working
+                store_vectors = disk_has_vectors
+            if self._mirror_path == path and store_vectors == disk_has_vectors:
+                _fold_touched(self, path, store_vectors)
+                return self
+            # epoch bookkeeping: a rewrite OVER a consistent prior layout
+            # is a fold (epoch bumps, prior state retained — r16 verdict
+            # #2 / ADVICE r16); a fresh save starts at epoch 0. A path
+            # holding retained history but an interrupted tip (meta gone
+            # mid-save) resumes numbering past the retained max so epochs
+            # stay monotonic.
+            meta_path = os.path.join(path, "meta.json")
+            prior = os.path.exists(meta_path)
+            retained_max = max(_retained_epochs(path), default=-1)
+            if prior:
+                new_epoch = max(_layout_epoch(path), retained_max) + 1
+            else:
+                new_epoch = retained_max + 1 if retained_max >= 0 else 0
+            stage = os.path.join(path, "_staging", uuid.uuid4().hex)
+            try:
+                if store_vectors and self.vectors is None:
+                    raise ValueError(
+                        "store_vectors=True but this index carries no vectors"
+                    )
+                writes = [
+                    lambda: _cluster_for_write(
+                        self.codes.select(self.id_col, self._code_col, "centroid")
+                    )
+                    .write.partitionBy("centroid")
+                    .mode("overwrite")
+                    .parquet(os.path.join(stage, "codes"))
+                ]
+                if store_vectors:
+                    writes.append(
+                        lambda: _cluster_for_write(
+                            self.vectors.select(self.id_col, self.vec_col, "centroid")
+                        )
+                        .write.partitionBy("centroid")
+                        .mode("overwrite")
+                        .parquet(os.path.join(stage, "vectors"))
+                    )
+                _run_writes(writes)
+                meta = self._meta_dict()
+                meta["fold_epoch"] = new_epoch
+                meta["schemas"] = _layout_schemas(self, self._code_col, store_vectors)
+                with open(os.path.join(stage, "meta.json"), "w") as f:
+                    _json.dump(meta, f)
+            except BaseException:
+                shutil.rmtree(stage, ignore_errors=True)
+                raise
+            # staging fully materialized — now the commit sequence.
+            # Unreadable (loud) between the meta removal and the final
+            # rename; never a readable state whose meta mismatches the
+            # codes beside it. A CONSISTENT prior layout is RETAINED whole
+            # (meta + codes + vectors + commit log rename into
+            # `_retained/<new_epoch>/`, `full: true` — pre-rewrite
+            # snapshots stay readable); an interrupted prior (no meta) is
+            # garbage and is deleted as before.
+            ret = _retained_dir(path, new_epoch) if prior else None
+            if ret is not None:
+                os.makedirs(ret, exist_ok=True)
+                os.rename(meta_path, os.path.join(ret, "meta.json"))
+            for sub in ("codes", "vectors", "batches"):
+                old = os.path.join(path, sub)
+                if os.path.exists(old):
+                    if ret is not None:
+                        os.rename(old, os.path.join(ret, sub))
+                    else:
+                        shutil.rmtree(old)
+            if ret is not None:
+                with open(os.path.join(ret, "fold.json"), "w") as f:
+                    _json.dump({"full": True, "created": []}, f)
+            os.rename(os.path.join(stage, "codes"), os.path.join(path, "codes"))
+            if store_vectors:
+                os.rename(
+                    os.path.join(stage, "vectors"), os.path.join(path, "vectors")
+                )
+            os.rename(os.path.join(stage, "meta.json"), meta_path)
+            shutil.rmtree(stage, ignore_errors=True)
+            # re-point the lazy plans at the committed layout: an index
+            # loaded from THIS path had plans over the just-replaced dirs
+            # (a re-save without store_vectors on such an index drops its
+            # float store — any later co-located re-rank fails loudly on
+            # the missing dir, never reads stale floats — ADVICE r14)
+            _repoint(self, self.codes.sparkSession, path, meta, store_vectors)
+            return self
+
+    def _allowed_codes(self, allowed: DataFrame | None) -> DataFrame:
+        """Metadata-filtered serving (the reference API's query filter —
+        Pinecone restricts a query to ids matching a metadata
+        predicate): the caller evaluates the predicate on its metadata
+        table (that filter pushes down to the metadata parquet scan) and
+        passes the resulting id set; the codes scan takes ONE broadcast
+        semi-join on id ABOVE the partition filter — pruning is
+        untouched, nothing shuffles, and the ADC shortlist is then
+        all-allowed by construction, so ``k`` results are guaranteed to
+        satisfy the filter (PRE-filter semantics — no overfetch
+        heuristics). This is the selective-filter plan; for a permissive
+        filter that keeps most rows, skip ``allowed`` and filter the
+        RESULT of a larger-``k`` search instead (post-filter) — the
+        broadcast id set is the thing that must stay small."""
+        if allowed is None:
+            return self.codes
+        return self.codes.join(
+            F.broadcast(allowed.select(self.id_col)), self.id_col, "left_semi"
+        )
+
+    def _rerank_side(self, vectors_df: DataFrame | None, cells: list[int]) -> DataFrame:
+        """Float frame for the exact re-rank. With a co-located store and
+        no explicit ``vectors_df``, prune it to the probed cells — the
+        shortlist is a subset of those cells by construction, so this is
+        lossless and reads nprobe/k of the float bytes."""
+        if vectors_df is not None:
+            return vectors_df
+        if self.vectors is None:
+            raise ValueError(
+                "no vectors_df given and the index carries no co-located "
+                "float store (save with store_vectors=True, or pass the "
+                "source table)"
+            )
+        return self.vectors.where(F.col("centroid").isin(cells)).select(
+            self.id_col, self.vec_col
+        )
+
+    def add_batch(
+        self, batch: DataFrame, path: str | None = None, replace: bool = False
+    ):
+        """Frozen-quantizer ingest: encode the batch map-only against the
+        frozen quantizer (``_encode`` — each tier's drift signal is
+        documented there; rebuild with ``rebuild_layout`` when it
+        degrades) and append it to the in-memory union and — with
+        ``path`` — to the saved layout.
+
+        ``replace=True`` is the UPSERT verb (the reference's core write,
+        upsert.go:16 — Pinecone replace-by-id): the same commit also
+        tombstones the batch's ids at this commit's seq, masking any
+        OLDER row with the same id while the rows written here (same
+        seq, and the mask is strictly-older-only) stay visible. The
+        replace path dedupes by id FIRST: two same-id rows in one upsert
+        would share a commit seq and both survive the strictly-older
+        mask forever — replace semantics admit exactly one winner per id
+        per commit.
+
+        The INPUT is pinned once: codes, co-located floats, tombstones
+        and the in-memory unions are separate Spark jobs over ``batch``,
+        so a nondeterministic batch (df.sample, a limit, a source dir
+        changing between jobs) could otherwise commit codes whose floats
+        row never materialized inside the same "atomic" dir.
+
+        CRASH SAFETY (ADVICE r13): the on-disk append stages the batch's
+        codes AND (when the saved index carries a float store) its
+        co-located vectors AND (replace) its tombstones under ONE
+        ``_staging/<uuid>`` dir and commits with a SINGLE ``os.rename``
+        into ``batches/<seq>_<uuid>`` — the two previous independent
+        ``mode('append')`` writes had a window where new codes landed
+        without their floats, and the exact re-rank's inner join would
+        then silently DROP those ids from results. One rename = codes,
+        floats, and delete marks visible together or not at all (an
+        upsert can never be observed as its delete half alone).
+        ``save`` folds accumulated batch dirs back into the base
+        layout (compaction), applying tombstones physically."""
+        self._require_writable("add_batch")
+        id_col, code_col = self.id_col, self._code_col
+        if replace:
+            batch = batch.dropDuplicates([id_col])
+        batch = batch.select(id_col, self.vec_col).localCheckpoint(eager=True)
+        if batch.isEmpty():
+            # nothing to ingest — an empty commit would only add a root
+            # every later read lists and opens for no rows. Decided on the
+            # PINNED batch: the encode is a map-only 1:1 derivation, so its
+            # output is empty iff the batch is, and checking it would pay an
+            # extra encode job per commit.
+            return self
+        enc, vecs = self._encode(batch)
+        if path is not None:
+
+            def write(stage: str, seq: int) -> None:
+                stamp = F.lit(seq).cast("long")
+                writes = [
+                    lambda: _write_delta(
+                        enc.select(id_col, code_col, "centroid").withColumn(
+                            "_seq", stamp
+                        ),
+                        os.path.join(stage, "codes"),
+                    )
+                ]
+                if os.path.isdir(os.path.join(path, "vectors")):
+                    writes.append(
+                        lambda: _write_delta(
+                            vecs.withColumn("_seq", stamp),
+                            os.path.join(stage, "vectors"),
+                        )
+                    )
+                if replace:
+                    writes.append(
+                        lambda: _write_deletes(
+                            self, batch.select(id_col), stage, seq
+                        )
+                    )
+                _run_writes(writes)
+
+            _commit(path, "add_batch", write, lambda: _committed_batches(path))
+        if replace:
+            # in-memory mirror of the seq rule: older rows with these ids
+            # vanish, then the batch's own rows union in below
+            old_ids = F.broadcast(batch.select(id_col))
+            self.codes = self.codes.join(old_ids, id_col, "left_anti")
+            if self.vectors is not None:
+                self.vectors = self.vectors.join(old_ids, id_col, "left_anti")
+        self.codes = self.codes.unionByName(
+            enc.select(id_col, code_col, "centroid"), allowMissingColumns=True
+        )
+        if self.vectors is not None:
+            self.vectors = self.vectors.unionByName(vecs, allowMissingColumns=True)
+        # a commit onto the mirrored layout keeps the mirror; an
+        # in-memory-only (or foreign-path) ingest breaks it — save() then
+        # takes the full rewrite instead of the bounded fold
+        self._mirror_path = path if self._mirror_path == path else None
+        return self
+
+    def upsert(self, batch: DataFrame, path: str | None = None):
+        """Replace-by-id ingest — the reference's write verb
+        (upsert.go:16): one atomic commit that tombstones the batch's
+        ids against every older row and adds the batch's fresh codes
+        (and co-located floats) in their place. See ``add_batch``."""
+        return self.add_batch(batch, path=path, replace=True)
+
+    def delete(self, ids, path: str | None = None):
+        """Delete-by-id — the remaining Pinecone-surface verb on the
+        persisted serving artifact. ``ids`` is a one-column DataFrame
+        (or any python iterable of ids). With ``path``, the tombstone
+        set commits as an atomic ``batches/<seq>_<uuid>`` dir holding
+        only ``deletes`` (ONE rename — readable state either shows the
+        delete or doesn't, never half of it); every read path then
+        masks rows whose commit seq is strictly older (a later
+        ``add_batch``/``upsert`` of the same id is visible again —
+        last-writer-wins by commit order), and the in-memory plans take
+        one broadcast anti-join each. The tombstone set stays
+        broadcast-small by contract; ``save`` folds it away physically,
+        resetting the mask to empty."""
+        self._require_writable("delete")
+        spark = self.codes.sparkSession
+        if not isinstance(ids, DataFrame):
+            # driver data: deterministic and known non-empty, so no pin and
+            # no emptiness job — the commit write is the one job
+            rows = [(i,) for i in ids]
+            if not rows:
+                return self
+            ids = local_df(spark, rows, [self.id_col]).select(self.id_col)
+        else:
+            # pin: the disk write and the in-memory anti-joins are separate
+            # jobs — a nondeterministic ids plan could tombstone one set on
+            # disk and mask another in memory
+            ids = ids.select(self.id_col).localCheckpoint(eager=True)
+            if ids.isEmpty():
+                return self
+        if path is not None:
+            _commit(
+                path,
+                "delete",
+                lambda stage, seq: _write_deletes(self, ids, stage, seq),
+                lambda: _committed_batches(path),
+            )
+        self.codes = self.codes.join(F.broadcast(ids), self.id_col, "left_anti")
+        if self.vectors is not None:
+            self.vectors = self.vectors.join(
+                F.broadcast(ids), self.id_col, "left_anti"
+            )
+        # mirror bookkeeping (see _fold_touched): a committed delete on the
+        # layout this object mirrors keeps the mirror; an in-memory-only or
+        # foreign-path delete breaks it (save() then takes the full rewrite)
+        self._mirror_path = path if self._mirror_path == path else None
+        return self
+
+
+class IvfSq8Index(_PersistedIvfIndex):
     """The persisted FAISS-style ``IVFx,SQ8`` serving artifact — the
     production form the registry rows (`ann_ivf_sq8_*`) build inline.
     One object owns the three frozen components a serving fleet ships:
@@ -4309,6 +4518,9 @@ class IvfSq8Index:
     it plus ``shortlist`` float point-reads, and the driver state is
     k·dim centroids + 2·dim scaler floats — kilobytes."""
 
+    _code_col = "sq8_codes"
+    _frozen = "scaler"
+
     def __init__(
         self,
         codes: DataFrame,
@@ -4319,25 +4531,16 @@ class IvfSq8Index:
         vec_col: str = "embedding",
         vectors: DataFrame | None = None,
     ):
-        self.codes = codes  # (id_col, sq8_codes, centroid)
-        self.centroids = np.asarray(centroids, dtype=np.float64)
+        super().__init__(codes, centroids, id_col, vec_col, vectors)
         self.mins = list(mins)
         self.deltas = list(deltas)
-        self.id_col = id_col
-        self.vec_col = vec_col
-        # optional CO-LOCATED float store (id, vec, centroid), persisted
-        # partitionBy(centroid) next to the codes: the re-rank shortlist
-        # is a subset of the probed cells by construction, so pruning the
-        # float side to the same cells is lossless — re-rank reads
-        # nprobe/k of the float bytes instead of scanning the whole float
-        # table (measured: BASELINE.md r13, flat ~9 s vs colocated
-        # sub-second at 1M×1536). FAISS keeps raw vectors inside the IVF
-        # lists for exactly this refine step.
-        self.vectors = vectors
-        # set by load(); kept by mutations committed to the same path;
-        # cleared by in-memory-only mutations. When it names `path`,
-        # save(path) may fold boundedly from committed state alone.
-        self._mirror_path: str | None = None
+
+    @classmethod
+    def _from_meta(cls, meta: dict, codes: DataFrame, vectors) -> "IvfSq8Index":
+        return cls(
+            codes, meta["centroids"], meta["mins"], meta["deltas"],
+            meta["id_col"], meta["vec_col"], vectors=vectors,
+        )
 
     def _meta_dict(self) -> dict:
         return {
@@ -4413,213 +4616,10 @@ class IvfSq8Index:
             vectors=assigned.select(id_col, vec_col, "centroid"),
         )
 
-    def save(
-        self, path: str, store_vectors: bool | None = None
-    ) -> "IvfSq8Index":
-        """Codes ``partitionBy(centroid)`` + one meta json (centroids,
-        scaler, column names). ``store_vectors=True`` additionally
-        persists the CO-LOCATED float store (``vectors/``, same
-        partitioning) so a loaded index re-ranks against nprobe/k of the
-        float bytes with no external table — the FAISS keep-raw-in-list
-        refine layout. Leave it off when the floats live in a source
-        table that supports its own pruning (then pass ``vectors_df`` to
-        ``search``); a flat external float table costs a full
-        float-column scan per re-rank (measured, BASELINE.md r13).
-        The default ``None`` PRESERVES the existing layout: re-saving
-        (compacting) a path whose layout carries a float store keeps it,
-        a fresh save stays codes-only — so the compaction verb can never
-        silently destroy the float store (``False`` still drops it
-        explicitly).
-
-        CRASH SAFETY (ADVICE r13): everything is staged under
-        ``_staging/<uuid>`` first (codes, vectors, meta.json), then
-        committed in an order with no silently-wrong window: the OLD
-        ``meta.json`` is removed FIRST (an interrupted save leaves the
-        index loudly unreadable — ``load`` raises — never new codes
-        scored with a stale scaler), the staged layouts rename in, and
-        the new meta.json renames into place LAST as the atomic publish.
-        Saving also folds any ``batches/<uuid>`` appends into the base
-        layout (``self.codes`` already carries them after ``load`` +
-        ``add_batch``), so ``save`` doubles as the compaction verb.
-
-        BOUNDED FOLD (round 16): when this object MIRRORS the committed
-        layout at ``path`` (loaded from it, every mutation since
-        committed back to it — ``_mirror_path``) and the float-store
-        shape is unchanged, the fold rewrites ONLY the centroid
-        partitions the accumulated commits touched and leaves every
-        other partition dir physically in place — O(touched cells)
-        maintenance instead of the r15 O(corpus) full rewrite (74.6 s /
-        ~7.5 GB at 1M×1536 for a 2-cell mutation). See
-        ``_fold_touched``. Any in-memory-only mutation, foreign path, or
-        explicit float-store change still takes the full rewrite.
-
-        Implementation shared with ``IvfPqIndex.save`` (``_save_layout``
-        — the r15-deferred dedup of the staged-commit choreography)."""
-        return _save_layout(self, path, store_vectors, "sq8_codes")
-
-    @staticmethod
-    def _layout_roots(
-        path: str, sub: str, as_of: int | None = None
-    ) -> list[tuple[int, str]]:
-        """Committed parquet roots for one layout table: the base
-        ``<sub>/`` dir (mutation seq 0) plus every committed
-        ``batches/<seq>_<uuid>/<sub>`` dir (its commit seq). A root is
-        listed only once its single commit rename succeeded; dirs with
-        no part files anywhere (a legacy empty commit: just _SUCCESS)
-        are skipped — they hold no rows and would fail schema inference
-        and brick the whole load.
-
-        ``as_of`` is TIME TRAVEL: keep only roots committed at or
-        before that mutation seq — a snapshot read of the layout as it
-        stood after commit ``as_of``. Pure metadata (commit dirs newer
-        than the bound are never opened, let alone scanned), the same
-        mechanism Delta/Iceberg ``VERSION AS OF`` uses: the commit log
-        IS the snapshot structure."""
-
-        def has_parquet(root: str) -> bool:
-            for _, _, files in os.walk(root):
-                if any(f.endswith(".parquet") for f in files):
-                    return True
-            return False
-
-        roots: list[tuple[int, str]] = []
-        base = os.path.join(path, sub)
-        if os.path.isdir(base) and has_parquet(base):
-            roots.append((0, base))
-        bdir = os.path.join(path, "batches")
-        roots.extend(
-            (_parse_seq(b), os.path.join(bdir, b, sub))
-            for b in _committed_batches(path)
-            if (as_of is None or _parse_seq(b) <= as_of)
-            and os.path.isdir(os.path.join(bdir, b, sub))
-            and has_parquet(os.path.join(bdir, b, sub))
-        )
-        return roots
-
-    @staticmethod
-    def _read_layout(
-        spark: SparkSession,
-        path: str,
-        sub: str,
-        meta: dict,
-        as_of: int | None = None,
-    ) -> DataFrame | None:
-        """Base ``<sub>/`` layout unioned by name with every committed
-        ``batches/<seq>_<uuid>/<sub>`` append, each row carrying its
-        commit ``_seq`` (base = 0). Every root reads under ONE explicit
-        schema: the one ``meta`` records for the table, or — a layout
-        saved before schemas were recorded — the first root's footer,
-        inferred once. No root pays its own footer-read job, and every
-        branch has the same shape (``_read_seq_root``). Each root is read
-        separately, so a ``centroid`` probe prunes every branch of the
-        union: ``centroid=N`` dirs on the base (and on deltas written
-        partitioned), row-group min/max on the centroid-sorted flat
-        delta files (``_write_delta``). Callers apply ``_mask_deleted``
-        (which drops ``_seq``) before serving rows. ``as_of`` bounds the
-        union to commits ``<= as_of`` (time travel — see
-        ``_layout_roots``)."""
-        from functools import reduce
-
-        roots = IvfSq8Index._layout_roots(path, sub, as_of)
-        if not roots:
-            return None
-        with_seq = _seq_schema(spark, _recorded_schema(meta, sub), roots[0][1])
-        return reduce(
-            lambda a, b: a.unionByName(b),
-            [_read_seq_root(spark, root, seq, with_seq) for seq, root in roots],
-        )
-
-    @staticmethod
-    def _read_delete_marks(
-        spark: SparkSession, path: str, meta: dict, as_of: int | None = None
-    ) -> DataFrame | None:
-        """The layout's tombstone rows ``(_del_id, _del_seq)``, one per
-        tombstone — NOT folded to one row per id: ``_mask_deleted``'s
-        anti-join drops a row iff SOME tombstone for its id is newer,
-        which is the same predicate as comparing against the max, and
-        without a ``groupBy`` the mask costs no shuffle. Tombstones live
-        inside the same atomic batch dirs as the data they accompany
-        (``batches/<seq>_<uuid>/deletes``) — a pure delete commits a dir
-        holding only ``deletes``, an upsert commits codes + vectors + its
-        own ids' tombstones under ONE rename. ``as_of`` bounds the set to
-        tombstones committed ``<= as_of`` (time travel)."""
-        marks = IvfSq8Index._read_layout(spark, path, "deletes", meta, as_of)
-        return None if marks is None else _mark_cols(marks, meta["id_col"])
-
-    @classmethod
-    def load(
-        cls,
-        spark: SparkSession,
-        path: str,
-        as_of: int | tuple[int, int] | None = None,
-    ) -> "IvfSq8Index":
-        """Open the committed layout — the TIP by default, or (with
-        ``as_of``) a READ-ONLY snapshot. The bound is either a bare
-        commit seq (CURRENT-epoch shorthand) or the stable
-        ``(fold_epoch, seq)`` pair ``layout_snapshots(path)`` returns —
-        the pair form survives folds: seqs reset at every fold but
-        epochs never do, and an older epoch resolves through the
-        retained pre-fold versions (``vacuum_layout`` expires them;
-        ADVICE r16 / r16 verdict #2). Snapshot semantics follow the
-        epoch's commit log exactly: batch dirs with seq > bound are
-        never opened, tombstones fold only over commits <= bound, the
-        strictly-older mask applies within it, and the snapshot scores
-        with ITS epoch's frozen quantizer/scaler (a rebuild retrains
-        them). Snapshot handles refuse every mutating verb
-        (``_require_writable``); current-epoch bound cost over a tip
-        load is zero (the bound only DROPS union branches and mask
-        entries)."""
-        import json as _json
-
-        meta_path = os.path.join(path, "meta.json")
-        if not os.path.exists(meta_path):
-            if os.path.isdir(os.path.join(path, "codes")):
-                raise RuntimeError(
-                    f"IvfSq8Index at {path!r} has codes but no meta.json — "
-                    "an interrupted save; re-save from the builder (codes "
-                    "without their scaler must never be scored)"
-                )
-            raise FileNotFoundError(meta_path)
-        with open(meta_path) as f:
-            meta = _json.load(f)
-        meta, codes, vecs, marks, norm = _load_layout_frames(
-            spark, path, as_of, meta
-        )
-        if codes is None:
-            raise RuntimeError(f"IvfSq8Index at {path!r} has meta.json but no codes")
-        idx = cls(
-            _mask_deleted(codes, marks, meta["id_col"]),
-            meta["centroids"],
-            meta["mins"],
-            meta["deltas"],
-            meta["id_col"],
-            meta["vec_col"],
-            vectors=_mask_deleted(vecs, marks, meta["id_col"]),
-        )
-        idx._as_of = norm
-        # plans == committed state, by construction — but only the TIP
-        # may fold (a snapshot's fold would destroy newer commits)
-        idx._mirror_path = path if norm is None else None
-        return idx
-
     def cell_stats(self) -> dict:
         """Same balance fingerprint as ``IvfIndex.cell_stats`` (max_share
         near 1.0 = the composite is a full scan in disguise)."""
-        counts = [
-            r["c"]
-            for r in self.codes.groupBy("centroid")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        ]
-        counts.sort(reverse=True)
-        total = sum(counts)
-        return {
-            "n_cells": int(self.centroids.shape[0]),
-            "nonempty": len(counts),
-            "total": total,
-            "max_share": round(counts[0] / total, 4) if total else 0.0,
-            "top5_shares": [round(c / total, 4) for c in counts[:5]],
-        }
+        return _cell_stats(self.codes, int(self.centroids.shape[0]))
 
     def probe_centroid_ids(self, query_vec, nprobe: int = 2) -> list[int]:
         """Euclidean nearest cells (the quantizer's own metric) —
@@ -4627,26 +4627,6 @@ class IvfSq8Index:
         q = np.asarray(query_vec, dtype=np.float64)
         d = ((self.centroids - q[None, :]) ** 2).sum(axis=1)
         return [int(i) for i in np.argsort(d, kind="stable")[:nprobe]]
-
-    def _allowed_codes(self, allowed: DataFrame | None) -> DataFrame:
-        """Metadata-filtered serving (the reference API's query filter —
-        Pinecone restricts a query to ids matching a metadata
-        predicate): the caller evaluates the predicate on its metadata
-        table (that filter pushes down to the metadata parquet scan) and
-        passes the resulting id set; the codes scan takes ONE broadcast
-        semi-join on id ABOVE the partition filter — pruning is
-        untouched, nothing shuffles, and the ADC shortlist is then
-        all-allowed by construction, so ``k`` results are guaranteed to
-        satisfy the filter (PRE-filter semantics — no overfetch
-        heuristics). This is the selective-filter plan; for a permissive
-        filter that keeps most rows, skip ``allowed`` and filter the
-        RESULT of a larger-``k`` search instead (post-filter) — the
-        broadcast id set is the thing that must stay small."""
-        if allowed is None:
-            return self.codes
-        return self.codes.join(
-            F.broadcast(allowed.select(self.id_col)), self.id_col, "left_semi"
-        )
 
     def probe(
         self,
@@ -4668,23 +4648,6 @@ class IvfSq8Index:
             k=k,
             id_col=self.id_col,
             impl=impl,
-        )
-
-    def _rerank_side(self, vectors_df: DataFrame | None, cells: list[int]) -> DataFrame:
-        """Float frame for the exact re-rank. With a co-located store and
-        no explicit ``vectors_df``, prune it to the probed cells — the
-        shortlist is a subset of those cells by construction, so this is
-        lossless and reads nprobe/k of the float bytes."""
-        if vectors_df is not None:
-            return vectors_df
-        if self.vectors is None:
-            raise ValueError(
-                "no vectors_df given and the index carries no co-located "
-                "float store (save with store_vectors=True, or pass the "
-                "source table)"
-            )
-        return self.vectors.where(F.col("centroid").isin(cells)).select(
-            self.id_col, self.vec_col
         )
 
     def search(
@@ -4769,73 +4732,24 @@ class IvfSq8Index:
             impl=impl,
         )
 
-    def add_batch(
-        self, batch: DataFrame, path: str | None = None, replace: bool = False
-    ) -> "IvfSq8Index":
-        """Frozen-quantizer, frozen-scaler ingest: assign + encode the
-        batch map-only and append (to the in-memory union and — with
-        ``path`` — to the saved layout). Out-of-range values clamp to
-        0/255 by ``sq8_encode``'s contract; monitor clamp rates and
-        scaler drift, rebuild when they degrade — same maintenance
-        posture as ``IvfIndex.add_batch``/``drift``.
-
-        ``replace=True`` is the UPSERT verb (the reference's core write,
-        upsert.go:16 — Pinecone replace-by-id): the same commit also
-        tombstones the batch's ids at this commit's seq, masking any
-        OLDER row with the same id while the rows written here (same
-        seq, and the mask is strictly-older-only) stay visible.
-
-        CRASH SAFETY (ADVICE r13): the on-disk append stages the batch's
-        codes AND (when the saved index carries a float store) its
-        co-located vectors AND (replace) its tombstones under ONE
-        ``_staging/<uuid>`` dir and commits with a SINGLE ``os.rename``
-        into ``batches/<seq>_<uuid>`` — the two previous independent
-        ``mode('append')`` writes had a window where new codes landed
-        without their floats, and the exact re-rank's inner join would
-        then silently DROP those ids from results. One rename = codes,
-        floats, and delete marks visible together or not at all (an
-        upsert can never be observed as its delete half alone).
-        ``save`` folds accumulated batch dirs back into the base
-        layout (compaction), applying tombstones physically. Body shared
-        with ``IvfPqIndex.add_batch`` (``_index_add``)."""
-
-        def encode(batch):
-            # codes and floats both project the ONE assignment frame: a
-            # join of the codes back to it on id would cost a broadcast
-            # job per commit and multiply a repeated id's rows
-            assigned = assign_nearest_centroid(batch, self.centroids, self.vec_col)
-            enc = assigned.select(
-                self.id_col, _sq8_codes(self.vec_col, self.mins, self.deltas),
-                "centroid",
-            )
-            return enc, assigned.select(self.id_col, self.vec_col, "centroid")
-
-        return _index_add(self, batch, path, replace, "sq8_codes", encode)
-
-    def upsert(self, batch: DataFrame, path: str | None = None) -> "IvfSq8Index":
-        """Replace-by-id ingest — the reference's write verb
-        (upsert.go:16): one atomic commit that tombstones the batch's
-        ids against every older row and adds the batch's fresh codes
-        (and co-located floats) in their place. See ``add_batch``."""
-        return self.add_batch(batch, path=path, replace=True)
-
-    def delete(self, ids, path: str | None = None) -> "IvfSq8Index":
-        """Delete-by-id — the remaining Pinecone-surface verb on the
-        persisted serving artifact. ``ids`` is a one-column DataFrame
-        (or any python iterable of ids). With ``path``, the tombstone
-        set commits as an atomic ``batches/<seq>_<uuid>`` dir holding
-        only ``deletes`` (ONE rename — readable state either shows the
-        delete or doesn't, never half of it); every read path then
-        masks rows whose commit seq is strictly older (a later
-        ``add_batch``/``upsert`` of the same id is visible again —
-        last-writer-wins by commit order). The tombstone set stays
-        broadcast-small by contract; ``save`` folds it away physically,
-        resetting the mask to empty."""
-        _index_delete(self, ids, path)
-        return self
+    def _encode(self, batch: DataFrame):
+        """Frozen-quantizer, frozen-scaler ingest derivation for
+        ``add_batch``: assign + encode the batch map-only. Out-of-range
+        values clamp to 0/255 by ``sq8_encode``'s contract; monitor clamp
+        rates and scaler drift, rebuild when they degrade — same
+        maintenance posture as ``IvfIndex.add_batch``/``drift``. Codes
+        and floats both project the ONE assignment frame: a join of the
+        codes back to it on id would cost a broadcast job per commit and
+        multiply a repeated id's rows."""
+        assigned = assign_nearest_centroid(batch, self.centroids, self.vec_col)
+        enc = assigned.select(
+            self.id_col, _sq8_codes(self.vec_col, self.mins, self.deltas),
+            "centroid",
+        )
+        return enc, assigned.select(self.id_col, self.vec_col, "centroid")
 
 
-class IvfPqIndex:
+class IvfPqIndex(_PersistedIvfIndex):
     """Persisted FAISS-style ``IVFx,PQm`` serving artifact — the
     MEMORY-bound tier of the persisted index family (``IvfSq8Index`` is
     the 4×-compression tier). PQ codes cost ``m`` bytes/vector against
@@ -4844,7 +4758,8 @@ class IvfPqIndex:
     layout a RAM-resident 100 TB corpus actually deploys (FAISS
     ``IVF<x>,PQ<m>``; Jégou et al. TPAMI'11 §IV, residual encoding).
 
-    Same persistence contract as ``IvfSq8Index``, deliberately: codes
+    Same persistence contract as ``IvfSq8Index`` — one implementation,
+    the shared ``_PersistedIvfIndex`` base: codes
     ``partitionBy(centroid)`` (file-level pruning), one ``meta.json``
     carrying the FROZEN coarse centroids + residual codebooks
     (driver-side kilobytes), an optional co-located float store for the
@@ -4860,6 +4775,9 @@ class IvfPqIndex:
     scores mean cell pruning and quantization can only cost recall,
     never corrupt a returned score."""
 
+    _code_col = "codes"
+    _frozen = "codebooks"
+
     def __init__(
         self,
         codes: DataFrame,
@@ -4869,16 +4787,15 @@ class IvfPqIndex:
         vec_col: str = "embedding",
         vectors: DataFrame | None = None,
     ):
-        self.codes = codes  # (id_col, codes, centroid)
-        self.centroids = np.asarray(centroids, dtype=np.float64)
+        super().__init__(codes, centroids, id_col, vec_col, vectors)
         self.codebooks = np.asarray(codebooks, dtype=np.float64)
-        self.id_col = id_col
-        self.vec_col = vec_col
-        # optional co-located float store (id, vec, centroid) — the
-        # same refine layout as IvfSq8Index.vectors
-        self.vectors = vectors
-        # bounded-fold eligibility marker — the IvfSq8Index contract
-        self._mirror_path: str | None = None
+
+    @classmethod
+    def _from_meta(cls, meta: dict, codes: DataFrame, vectors) -> "IvfPqIndex":
+        return cls(
+            codes, meta["centroids"], meta["codebooks"], meta["id_col"],
+            meta["vec_col"], vectors=vectors,
+        )
 
     def _meta_dict(self) -> dict:
         return {
@@ -4978,69 +4895,11 @@ class IvfPqIndex:
         idx.vectors = idx._assign_vectors(df)
         return idx
 
-    def save(self, path: str, store_vectors: bool | None = None) -> "IvfPqIndex":
-        """Mirror of ``IvfSq8Index.save`` (see its docstring for the
-        staged-commit order, the store-preserving ``None`` default, and
-        the bounded O(touched-cells) fold): codes ``partitionBy
-        (centroid)`` + meta.json(centroids, codebooks, column names);
-        folds committed ``batches/<seq>_<uuid>`` appends into the base
-        layout, so save doubles as compaction. ONE shared implementation
-        (``_save_layout``) — commit-protocol fixes land once for both
-        persisted tiers (the r15-deferred cleanup)."""
-        return _save_layout(self, path, store_vectors, "codes")
-
-    @classmethod
-    def load(
-        cls, spark, path: str, as_of: int | tuple[int, int] | None = None
-    ) -> "IvfPqIndex":
-        """Tip load, or (``as_of``) a read-only time-travel snapshot —
-        the ``IvfSq8Index.load`` contract (one commit log shape, one
-        snapshot rule — bare seq for the current epoch, ``(epoch,
-        seq)`` pairs across folds through retention — for both
-        persisted tiers)."""
-        import json as _json
-
-        meta_path = os.path.join(path, "meta.json")
-        if not os.path.exists(meta_path):
-            if os.path.isdir(os.path.join(path, "codes")):
-                raise RuntimeError(
-                    f"IvfPqIndex at {path!r} has codes but no meta.json — "
-                    "an interrupted save; re-save from the builder (codes "
-                    "without their codebooks must never be scored)"
-                )
-            raise FileNotFoundError(meta_path)
-        with open(meta_path) as f:
-            meta = _json.load(f)
-        meta, codes, vecs, marks, norm = _load_layout_frames(
-            spark, path, as_of, meta
-        )
-        if codes is None:
-            raise RuntimeError(f"IvfPqIndex at {path!r} has meta.json but no codes")
-        idx = cls(
-            _mask_deleted(codes, marks, meta["id_col"]),
-            meta["centroids"],
-            meta["codebooks"],
-            meta["id_col"],
-            meta["vec_col"],
-            vectors=_mask_deleted(vecs, marks, meta["id_col"]),
-        )
-        idx._as_of = norm
-        # only the TIP may fold (see IvfSq8Index.load)
-        idx._mirror_path = path if norm is None else None
-        return idx
-
     def probe_cells(self, query_vec, nprobe: int = 2) -> list[int]:
         return self._proto().probe_cells(query_vec, nprobe)
 
     def luts_int(self, query_vec, cells: list[int]):
         return self._proto().luts_int(query_vec, cells)
-
-    def _allowed_codes(self, allowed: DataFrame | None) -> DataFrame:
-        """Metadata-filtered serving — the ``IvfSq8Index._allowed_codes``
-        contract (one broadcast semi-join on id above the partition
-        filter; PRE-filter semantics, k results guaranteed to satisfy
-        the caller's predicate)."""
-        return IvfSq8Index._allowed_codes(self, allowed)
 
     def probe(
         self,
@@ -5078,21 +4937,6 @@ class IvfPqIndex:
             self._proto(), self._allowed_codes(allowed), queries, probe_map, k=k
         )
 
-    def _rerank_side(
-        self, vectors_df: DataFrame | None, cells: list[int]
-    ) -> DataFrame:
-        if vectors_df is not None:
-            return vectors_df
-        if self.vectors is None:
-            raise ValueError(
-                "no vectors_df given and the index carries no co-located "
-                "float store (save with store_vectors=True, or pass the "
-                "source table)"
-            )
-        return self.vectors.where(F.col("centroid").isin(cells)).select(
-            self.id_col, self.vec_col
-        )
-
     def search(
         self,
         vectors_df: DataFrame | None = None,
@@ -5112,8 +4956,8 @@ class IvfPqIndex:
         if query_vec is None:
             raise ValueError("query_vec is required")
         cells = self.probe_cells(query_vec, nprobe)
-        short = self.probe(
-            query_vec, k=shortlist, nprobe=nprobe, allowed=allowed
+        short = self._proto()._probe_cells_topk(
+            self._allowed_codes(allowed), query_vec, cells, shortlist
         ).select(self.id_col)
         cand = self._rerank_side(vectors_df, cells).join(
             F.broadcast(short), self.id_col
@@ -5150,12 +4994,14 @@ class IvfPqIndex:
         probed cells serves the re-rank."""
         if not queries:
             raise ValueError("queries is required")
-        short = self.probe_batched(
-            queries, k=shortlist, nprobe=nprobe, allowed=allowed
+        probe_map = {
+            int(qid): self.probe_cells(vec, nprobe) for qid, vec in queries
+        }
+        short = ivfpq_residual_batched_topk(
+            self._proto(), self._allowed_codes(allowed), queries, probe_map,
+            k=shortlist,
         ).select("query_id", self.id_col)
-        union_cells = sorted(
-            {c for _, vec in queries for c in self.probe_cells(vec, nprobe)}
-        )
+        union_cells = sorted({c for cells in probe_map.values() for c in cells})
         return batched_exact_rerank(
             self._rerank_side(vectors_df, union_cells),
             short,
@@ -5167,38 +5013,14 @@ class IvfPqIndex:
             round_to=round_to,
         )
 
-    def add_batch(
-        self, batch: DataFrame, path: str | None = None, replace: bool = False
-    ) -> "IvfPqIndex":
-        """Frozen-quantizer, frozen-codebook ingest: ONE map-only
-        normalize→assign→residual→encode pass, committed (with ``path``)
-        as an atomic ``batches/<seq>_<uuid>`` rename — codes and (when
-        the saved layout carries a float store) co-located vectors stage
-        together and become visible together or not at all, exactly the
-        ``IvfSq8Index.add_batch`` contract. ``replace=True`` is the
-        upsert verb (the same commit tombstones the batch's ids against
-        every strictly-older row — see ``IvfSq8Index.add_batch``).
-        Codebook drift is the maintenance signal: rebuild when residual
-        distortion on new batches degrades (same posture as SQ8's
-        clamp-rate watch)."""
-        return _index_add(
-            self, batch, path, replace, "codes",
-            lambda b: (self._proto().encode(b), self._assign_vectors(b)),
-        )
-
-    def upsert(self, batch: DataFrame, path: str | None = None) -> "IvfPqIndex":
-        """Replace-by-id ingest (upsert.go:16) — one atomic commit of
-        fresh codes + tombstones for the same ids. See
-        ``IvfSq8Index.upsert``."""
-        return self.add_batch(batch, path=path, replace=True)
-
-    def delete(self, ids, path: str | None = None) -> "IvfPqIndex":
-        """Delete-by-id tombstone commit — the ``IvfSq8Index.delete``
-        contract (atomic ``batches/<seq>_<uuid>/deletes`` rename,
-        broadcast mask on every read path, folded physically by
-        ``save``)."""
-        _index_delete(self, ids, path)
-        return self
+    def _encode(self, batch: DataFrame):
+        """Frozen-quantizer, frozen-codebook ingest derivation for
+        ``add_batch``: ONE map-only normalize→assign→residual→encode
+        pass for the codes, and the same cell math for the co-located
+        floats (``_assign_vectors``). Codebook drift is the maintenance
+        signal: rebuild when residual distortion on new batches degrades
+        (same posture as SQ8's clamp-rate watch)."""
+        return self._proto().encode(batch), self._assign_vectors(batch)
 
 
 def sq8_topk_cosine(
