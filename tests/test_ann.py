@@ -2062,6 +2062,68 @@ def test_empty_base_layouts_load_and_serve_their_commits(
         assert verify_layout(p2, spark)["ok"], name
 
 
+def test_empty_base_layouts_load_with_no_commit(spark, embeddings, tmp_path):
+    """A layout whose base holds no rows and which has no commit yet
+    opens as a 0-row handle: after an empty save, and after a delete of
+    every id folded by ``maintenance_tick``. The handle serves nothing,
+    an ``add_batch`` through it serves exactly the batch, and the layout
+    verifies."""
+    from whatsapp_vectordb_spark.operators.ann import (
+        IvfPqIndex,
+        IvfSq8Index,
+        maintenance_tick,
+        verify_layout,
+    )
+
+    emb = embeddings.select("vec_id", "embedding")
+    batch = emb.where(F.col("vec_id") % 40 == 0)
+    want = sorted(r["vec_id"] for r in batch.collect())
+    qvec = batch.head()["embedding"]
+
+    def ids(df):
+        return sorted(r[0] for r in df.select("vec_id").collect())
+
+    for cls, kw in (
+        (IvfSq8Index, dict(n_centroids=4)),
+        (IvfPqIndex, dict(n_centroids=4, m=8, ksub=16, sample_rows=300)),
+    ):
+        name = cls.__name__
+        p1 = str(tmp_path / f"{name}_empty")
+        empty = cls.build(emb, **kw)
+        empty.codes = empty.codes.limit(0)
+        empty.vectors = empty.vectors.limit(0)
+        empty.save(p1, store_vectors=True)
+
+        p2 = str(tmp_path / f"{name}_all_deleted")
+        cls.build(emb, **kw).save(p2, store_vectors=True)
+        cls.load(spark, p2).delete(emb.select("vec_id"), path=p2)
+        tick = maintenance_tick(cls, spark, p2, max_tombstone_commits=0)
+        assert tick["folded"], name
+
+        for p in (p1, p2):
+            h = cls.load(spark, p)
+            assert h.codes.count() == 0 and h.vectors.count() == 0, (name, p)
+            assert h.search(query_vec=qvec, k=3).count() == 0, (name, p)
+            h.add_batch(batch, path=p)
+            assert ids(h.codes) == want and ids(h.vectors) == want, (name, p)
+            got = cls.load(spark, p)
+            assert ids(got.codes) == want and ids(got.vectors) == want, (name, p)
+            hits = ids(got.search(query_vec=qvec, k=3))
+            assert hits and set(hits) <= set(want), (name, p)
+            assert verify_layout(p, spark)["ok"], (name, p)
+
+    # without its codes/ dir, the same empty layout still refuses to open
+    import shutil
+
+    p3 = str(tmp_path / "no_codes_dir")
+    empty = IvfSq8Index.build(emb, n_centroids=4)
+    empty.codes = empty.codes.limit(0)
+    empty.save(p3)
+    shutil.rmtree(os.path.join(p3, "codes"))
+    with pytest.raises(RuntimeError, match="no codes"):
+        IvfSq8Index.load(spark, p3)
+
+
 def test_layout_mutation_stats(spark, embeddings, tmp_path):
     """The maintenance-telemetry verb: counts committed mutation dirs by
     kind (driver-side listing only), and resets at fold."""
@@ -3840,6 +3902,120 @@ def test_fused_sq8_train_cell_counts_matches_train_and_tripwire(spark, embedding
     assert (max(counts) / total > 0.5) == (old_share > 0.5)
     # on the gate fixture the shares agree to the stats' own rounding
     assert abs(max(counts) / total - old_share) < 5e-4
+
+
+def test_ivf_sq8_build_runs_few_jobs_without_mllib(spark, embeddings, monkeypatch):
+    """The build fits its quantizer on a driver sample, never through
+    MLlib: 2 jobs (scaler + row count, sample) when the sample is the
+    whole corpus, 3 when it is not (one more pass counts the cells), all
+    under the caller's job group."""
+    from pyspark.ml.clustering import KMeans
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
+
+    def no_mllib(*a, **kw):
+        raise AssertionError("IvfSq8Index.build must not fit MLlib KMeans")
+
+    monkeypatch.setattr(KMeans, "fit", no_mllib)
+    emb = embeddings.select("vec_id", "embedding")
+    whole, jobs = _jobs_run(spark, lambda: IvfSq8Index.build(emb, n_centroids=8))
+    assert jobs == 2
+    part, jobs = _jobs_run(
+        spark, lambda: IvfSq8Index.build(emb, n_centroids=8, sample_rows=200)
+    )
+    assert jobs == 3
+    for idx in (whole, part):
+        assert idx.centroids.shape == (8, 64)
+        assert idx.cell_stats()["max_share"] <= 0.5
+        assert idx.codes.count() == emb.count()
+
+
+def test_ivf_sq8_build_is_deterministic_across_partitionings(spark, embeddings):
+    """One frame built on 1 and on 3 partitions with one seed gives the
+    same centroids, scaler and codes — the sample is ranked by id hash,
+    the fit runs on the driver — and the scaler is ``sq8_train``'s."""
+    import numpy as np
+
+    from whatsapp_vectordb_spark.operators.ann import IvfSq8Index, sq8_train
+
+    emb = embeddings.select("vec_id", "embedding")
+    for kw in (dict(n_centroids=8), dict(n_centroids=8, sample_rows=200)):
+        one, three = (
+            IvfSq8Index.build(emb.repartition(n), seed=7, **kw) for n in (1, 3)
+        )
+        assert np.array_equal(one.centroids, three.centroids), kw
+        assert (one.mins, one.deltas) == (three.mins, three.deltas) == sq8_train(emb)
+
+        def rows(idx):
+            return sorted(
+                (r["vec_id"], tuple(r["sq8_codes"]), r["centroid"])
+                for r in idx.codes.collect()
+            )
+
+        assert rows(one) == rows(three), kw
+
+
+def test_ivf_sq8_build_falls_back_on_coincident_centroids(
+    spark, embeddings, monkeypatch
+):
+    """The build's degenerate-layout tripwire: a driver fit whose
+    centroids coincide puts every row in one cell, and the build must
+    refit with ``build_portable`` — whether the counts come from the
+    sample (the sample is the corpus) or from a pass over the corpus."""
+    import numpy as np
+
+    from whatsapp_vectordb_spark.operators import ann
+    from whatsapp_vectordb_spark.operators.ann import IvfIndex, IvfSq8Index
+
+    def coincident(x, k, seed, iters):
+        return np.tile(x.mean(axis=0), (k, 1)), np.zeros(len(x), dtype=np.int64)
+
+    monkeypatch.setattr(ann, "_kmeanspp_lloyd", coincident)
+    emb = embeddings.select("vec_id", "embedding")
+    portable = IvfIndex.build_portable(emb, n_centroids=8).centroids
+    for kw in (dict(), dict(sample_rows=200)):
+        idx = IvfSq8Index.build(emb, n_centroids=8, **kw)
+        assert idx.cell_stats()["max_share"] <= 0.5, kw
+        if not kw:
+            assert np.array_equal(idx.centroids, portable)
+
+
+def test_ivf_sq8_build_small_corpus_edges(spark, monkeypatch):
+    """Corpora smaller than the cell count: 3 distinct rows at 4 cells
+    give 3 centroids and code every row; 4 copies of one vector plus one
+    other still trip into ``build_portable``; an empty or all-NULL
+    corpus raises ``ValueError``."""
+    import numpy as np
+
+    from whatsapp_vectordb_spark.operators.ann import IvfIndex, IvfSq8Index
+
+    schema = "vec_id long, embedding array<double>"
+    x = np.random.default_rng(3).normal(size=(3, 8))
+    three = spark.createDataFrame([(i, x[i].tolist()) for i in range(3)], schema)
+    idx = IvfSq8Index.build(three, n_centroids=4)
+    assert idx.centroids.shape == (3, 8)
+    coded = idx.codes.collect()
+    assert sorted(r["vec_id"] for r in coded) == [0, 1, 2]
+    assert all(len(r["sq8_codes"]) == 8 and 0 <= r["centroid"] < 3 for r in coded)
+
+    calls = []
+    real = IvfIndex.build_portable.__func__
+
+    def spy(cls, df, **kw):
+        calls.append(kw)
+        return real(cls, df, **kw)
+
+    monkeypatch.setattr(IvfIndex, "build_portable", classmethod(spy))
+    v = x[0].tolist()
+    dup = spark.createDataFrame(
+        [(i, v) for i in range(4)] + [(4, x[1].tolist())], schema
+    )
+    IvfSq8Index.build(dup, n_centroids=2)
+    assert len(calls) == 1
+
+    for bad in (three.limit(0), spark.createDataFrame([(0, None), (1, None)], schema)):
+        with pytest.raises(ValueError, match="no non-NULL vector"):
+            IvfSq8Index.build(bad, n_centroids=4)
 
 
 def test_ivf_sq8_search_plan_cost_flat_in_dim(spark):

@@ -290,7 +290,10 @@ def main() -> None:
     )
     IvfSq8Index.load(spark, idx_path).upsert(tt_batch, path=idx_path)  # seq1
     IvfSq8Index.load(spark, idx_path).delete(tt_ids, path=idx_path)  # seq2
-    assert layout_snapshots(idx_path) == [(0, 0), (0, 1), (0, 2)]
+    # the folds above bumped the fold epoch; the two fresh commits are
+    # seqs 1 and 2 of the current one
+    epoch = layout_snapshots(idx_path)[-1][0]
+    assert layout_snapshots(idx_path)[-3:] == [(epoch, 0), (epoch, 1), (epoch, 2)]
 
     # warm the fresh commits' footers/plans once so the tip-vs-snapshot
     # comparison below measures the BOUND, not cold-read order bias

@@ -2907,7 +2907,9 @@ LIMIT 10
 )
 def ann_ivf_sq8_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted serving artifact end-to-end: ``IvfSq8Index.build``
-    (balanced quantizer + analytic SQ8 scaler) → ``save`` (codes
+    (k-means++ + Lloyd quantizer fit on a bounded driver sample, with the
+    ``build_portable`` mega-cell fallback, + analytic SQ8 scaler; codes
+    and probe cells from one assignment pass) → ``save`` (codes
     partitionBy(centroid) + meta.json) → ``load`` → ``search`` (prune +
     integer-ADC shortlist-50 + exact re-rank). The oracle reads the
     saved codes + the persisted probe choice and recomputes the scaler

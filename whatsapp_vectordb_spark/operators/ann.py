@@ -712,6 +712,7 @@ def _train_sample(
     vec_col: str,
     sample_rows: int,
     oversample: int = 8,
+    n: int | None = None,
 ) -> np.ndarray:
     """Deterministic, UNBIASED bounded sample for codebook training.
 
@@ -726,20 +727,31 @@ def _train_sample(
     TakeOrderedAndProject input to ~``oversample × sample_rows`` expected
     rows, so the heap never ranks the full index — at 100 TB the scan is
     still one pass over ids+vectors, but the sort side is tiny. (The
-    ``count()`` sizing pass is column-pruned and runs once per build.)
+    ``count()`` sizing pass is column-pruned and runs once per build; a
+    caller that already knows ``df``'s row count passes it as ``n`` and
+    skips that job.)
     """
     h = F.xxhash64(F.col(id_col).cast("string"))
-    n = df.count()
+    if n is None:
+        n = df.count()
     cand = df
     denom = int(n // (sample_rows * oversample))
     if denom > 1:
         cand = df.where(F.pmod(h, F.lit(denom)) == 0)
-    rows = (
-        cand.select(F.col(vec_col).alias("_v"), h.alias("_h"), F.col(id_col).alias("_id"))
-        .orderBy(F.col("_h").asc(), F.col("_id").asc())
-        .limit(sample_rows)
-        .collect()
+    ranked = cand.select(
+        F.col(vec_col).alias("_v"), h.alias("_h"), F.col(id_col).alias("_id")
     )
+    if n <= sample_rows:
+        # the whole frame is the sample: rank it on the driver. Spark drops
+        # a limit it can prove covers every row (a local frame), and the
+        # bare global sort left behind costs a sampling job and a shuffle
+        rows = sorted(ranked.collect(), key=lambda r: (r["_h"], r["_id"]))
+    else:
+        rows = (
+            ranked.orderBy(F.col("_h").asc(), F.col("_id").asc())
+            .limit(sample_rows)
+            .collect()
+        )
     return np.asarray([r["_v"] for r in rows], dtype=np.float64)
 
 
@@ -754,6 +766,42 @@ def _argmin_sq(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     the property test accordingly asserts chosen-DISTANCE equality, not
     index equality."""
     return ((cents * cents).sum(axis=1)[None, :] - 2.0 * (x @ cents.T)).argmin(axis=1)
+
+
+def _kmeanspp_lloyd(
+    x: np.ndarray, k: int, seed: int, iters: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-side coarse quantizer fit on a sample ``x``: seeded
+    k-means++ seeding (Arthur & Vassilvitskii, SODA 2007), then
+    ``iters`` Lloyd iterations; returns ``(centroids, labels)``, the
+    labels being each sample row's nearest final centroid. Seeding
+    draws each next centre with probability proportional to its squared
+    distance to the chosen ones, so a clustered corpus gets one seed per
+    cluster where uniform random seeds would double some up. When
+    ``x`` holds fewer than ``k`` distinct rows every remaining distance
+    is 0 and seeding stops early: fewer centroids, as MLlib's KMeans
+    returns. A cell that empties keeps its centre. O(n·k·dim), about
+    one Lloyd iteration; deterministic for a fixed sample and seed."""
+    rng = np.random.default_rng(seed)
+    first = x[rng.integers(len(x))]
+    cents = [first]
+    d2 = ((x - first) ** 2).sum(axis=1)
+    while len(cents) < k:
+        total = d2.sum()
+        if not total > 0:
+            break
+        nxt = x[rng.choice(len(x), p=d2 / total)]
+        cents.append(nxt)
+        d2 = np.minimum(d2, ((x - nxt) ** 2).sum(axis=1))
+    cent = np.array(cents)
+    for _ in range(iters):
+        labels = _argmin_sq(x, cent)
+        sums = np.zeros_like(cent)
+        np.add.at(sums, labels, x)
+        cnt = np.bincount(labels, minlength=len(cent))
+        live = cnt > 0
+        cent[live] = sums[live] / cnt[live, None]
+    return cent, _argmin_sq(x, cent)
 
 
 def _lloyd_codebooks(
@@ -3105,6 +3153,18 @@ def _read_seq_root(
     )
 
 
+def _empty_table(spark: SparkSession, path: str, sub: str, meta: dict):
+    """A 0-row frame, in ``_read_seq_root``'s shape, for a layout table
+    whose roots hold no rows: an empty save, or a fold after every row
+    was deleted, writes a base dir with no part file. None when the
+    table has no dir at ``path`` (a missing ``codes/`` stays an error)
+    or ``meta`` records no schema for it."""
+    schema = _recorded_schema(meta, sub)
+    if schema is None or not os.path.isdir(os.path.join(path, sub)):
+        return None
+    return spark.createDataFrame([], _seq_schema(spark, schema, ""))
+
+
 def _mark_cols(marks: DataFrame | None, id_col: str) -> DataFrame | None:
     """Raw tombstone rows ``(_del_id, _del_seq)`` for ``_mask_deleted``,
     one per tombstone — NOT folded to one row per id: the anti-join
@@ -4149,6 +4209,10 @@ class _PersistedIvfIndex:
             for sub in ("codes", "deletes", "vectors")
         )
         if codes is None:
+            codes = _empty_table(spark, path, "codes", meta)
+        if vecs is None:
+            vecs = _empty_table(spark, path, "vectors", meta)
+        if codes is None:
             raise RuntimeError(f"{cls.__name__} at {path!r} has meta.json but no codes")
         id_col = meta["id_col"]
         marks = _mark_cols(marks, id_col)
@@ -4569,50 +4633,71 @@ class IvfSq8Index(_PersistedIvfIndex):
         sample_rows: int | None = None,
         seed: int = 1,
     ) -> "IvfSq8Index":
-        """MLlib quantizer fit with the degenerate-layout tripwire
-        (``build_balanced``'s contract — a mega-cell composite would be a
-        hidden full scan), optionally fit on a ``sample_rows`` sample
-        (the 1M×1536 protocol); SQ8 trained on the FULL corpus;
-        encode+assign are each one map pass.
+        """Fit the coarse quantizer on a bounded driver-side sample (no
+        MLlib), train the SQ8 scaler on the FULL corpus, then assign and
+        encode in one map pass. Four steps:
 
-        FUSED measurement pass (r18, guide §1.2/§2.3): the scaler train
-        and the tripwire's occupancy counts ride ONE Arrow pass over the
-        house nearest-centroid assignment (``_sq8_train_cell_counts``)
-        instead of two jobs — a separate ``sq8_train`` pass and the
-        MLlib ``model.transform`` + aggregate behind ``cell_stats``. The
-        scaler is bit-identical to ``sq8_train``, which runs the same
-        pass over one constant cell. The degenerate-layout tripwire now
-        thresholds ``max_share`` of the house nearest-centroid
-        assignment of the FULL corpus — the layout actually being
-        persisted — not MLlib's assignment of the fit sample. Same
-        decision on every gate corpus (asserted by test); on other data
-        sample-vs-corpus shares and tie-breaking can differ, so the
-        rebuild decision can too."""
-        fit_on = df
-        if sample_rows is not None:
-            n = df.count()
-            if n > sample_rows:
-                fit_on = df.sample(fraction=sample_rows / n, seed=seed)
-        centroids = IvfIndex.build(
-            fit_on, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-        ).centroids  # fit only — the MLlib assignment frame is never acted on
-        assigned = assign_nearest_centroid(df, centroids, vec_col)
-        mins, deltas, counts = _sq8_train_cell_counts(
-            assigned, vec_col, n_centroids
+        - one Arrow pass over the corpus (``_sq8_train_cell_counts``
+          over one constant cell, which is exactly ``sq8_train``, so the
+          scaler is bit-identical to it) gives the scaler and the
+          non-NULL row count;
+        - ``_train_sample`` draws ``min(256·n_centroids, sample_rows)``
+          of those rows, ranked by ``xxhash64(id)``: 256 rows per
+          centroid is FAISS's ``max_points_per_centroid`` default, and
+          ``sample_rows`` only lowers that cap. The draw does not depend
+          on the partitioning;
+        - seeded k-means++ plus ``iters`` Lloyd iterations fit the
+          centroids in numpy on the driver (``_kmeanspp_lloyd``;
+          ``seed`` seeds k-means++). A corpus with fewer distinct
+          vectors than ``n_centroids`` gets fewer centroids;
+        - codes and co-located floats both project the ONE nearest-
+          centroid assignment frame (``_sq8_codes``, as ``_encode``
+          does), so no join of codes back on id.
+
+        Degenerate-layout tripwire (``build_balanced``'s contract: a
+        mega-cell composite would be a hidden full scan): when more than
+        half of the FULL corpus's assignment falls in one cell, the
+        quantizer is refit by ``IvfIndex.build_portable`` on the corpus
+        (or on its Bernoulli ``sample_rows`` sample). When the sample is
+        the whole non-NULL corpus the occupancy counts come from the
+        sample's own labels; otherwise one more fused pass over the
+        assignment counts them. So the build runs at most 2 Spark jobs,
+        or 3 when the corpus outgrows the sample, plus
+        ``build_portable``'s on a trip. A corpus with no non-NULL vector
+        raises ``ValueError``."""
+        mins, deltas, (n,) = _sq8_train_cell_counts(
+            df.select(vec_col, F.lit(0).alias("centroid")), vec_col, 1
         )
-        total = sum(counts)
-        if total and max(counts) / total > 0.5:
-            proto = IvfIndex.build_portable(
+        if n == 0:
+            raise ValueError(
+                f"IvfSq8Index.build: {vec_col!r} holds no non-NULL vector"
+            )
+        cap = 256 * n_centroids
+        if sample_rows is not None:
+            cap = min(cap, sample_rows)
+        x = _train_sample(
+            df.where(F.col(vec_col).isNotNull()), id_col, vec_col, cap, n=n
+        )
+        centroids, labels = _kmeanspp_lloyd(x, n_centroids, seed, iters)
+        assigned = assign_nearest_centroid(df, centroids, vec_col)
+        if len(x) == n:
+            counts = np.bincount(labels)
+        else:
+            _, _, counts = _sq8_train_cell_counts(
+                assigned, vec_col, len(centroids)
+            )
+        if max(counts) / n > 0.5:
+            fit_on = df
+            if sample_rows is not None and n > sample_rows:
+                fit_on = df.sample(fraction=sample_rows / n, seed=seed)
+            centroids = IvfIndex.build_portable(
                 fit_on, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
                 iters=iters,
-            )
-            centroids = proto.centroids
+            ).centroids
             assigned = assign_nearest_centroid(df, centroids, vec_col)
-        codes = sq8_encode(df, mins, deltas, id_col=id_col, vec_col=vec_col).join(
-            assigned.select(id_col, "centroid"), id_col
-        )
         return cls(
-            codes, centroids, mins, deltas, id_col, vec_col,
+            assigned.select(id_col, _sq8_codes(vec_col, mins, deltas), "centroid"),
+            centroids, mins, deltas, id_col, vec_col,
             vectors=assigned.select(id_col, vec_col, "centroid"),
         )
 
