@@ -3906,9 +3906,12 @@ def test_fused_sq8_train_cell_counts_matches_train_and_tripwire(spark, embedding
 
 def test_ivf_sq8_build_runs_few_jobs_without_mllib(spark, embeddings, monkeypatch):
     """The build fits its quantizer on a driver sample, never through
-    MLlib: 2 jobs (scaler + row count, sample) when the sample is the
-    whole corpus, 3 when it is not (one more pass counts the cells), all
-    under the caller's job group."""
+    MLlib: over a file scan, 2 jobs (scaler + row count, sample) when the
+    sample is the whole corpus, 3 when it is not (one more pass counts
+    the cells), all under the caller's job group. An in-memory frame
+    whose rows all fit the sample sorts them globally (Spark drops the
+    limit): still at most 5."""
+    import numpy as np
     from pyspark.ml.clustering import KMeans
 
     from whatsapp_vectordb_spark.operators.ann import IvfSq8Index
@@ -3924,7 +3927,11 @@ def test_ivf_sq8_build_runs_few_jobs_without_mllib(spark, embeddings, monkeypatc
         spark, lambda: IvfSq8Index.build(emb, n_centroids=8, sample_rows=200)
     )
     assert jobs == 3
-    for idx in (whole, part):
+    local = spark.createDataFrame(emb.collect(), emb.schema)
+    mem, jobs = _jobs_run(spark, lambda: IvfSq8Index.build(local, n_centroids=8))
+    assert jobs <= 5
+    assert np.array_equal(mem.centroids, whole.centroids)
+    for idx in (whole, part, mem):
         assert idx.centroids.shape == (8, 64)
         assert idx.cell_stats()["max_share"] <= 0.5
         assert idx.codes.count() == emb.count()

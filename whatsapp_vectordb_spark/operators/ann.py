@@ -738,20 +738,12 @@ def _train_sample(
     denom = int(n // (sample_rows * oversample))
     if denom > 1:
         cand = df.where(F.pmod(h, F.lit(denom)) == 0)
-    ranked = cand.select(
-        F.col(vec_col).alias("_v"), h.alias("_h"), F.col(id_col).alias("_id")
+    rows = (
+        cand.select(F.col(vec_col).alias("_v"), h.alias("_h"), F.col(id_col).alias("_id"))
+        .orderBy(F.col("_h").asc(), F.col("_id").asc())
+        .limit(sample_rows)
+        .collect()
     )
-    if n <= sample_rows:
-        # the whole frame is the sample: rank it on the driver. Spark drops
-        # a limit it can prove covers every row (a local frame), and the
-        # bare global sort left behind costs a sampling job and a shuffle
-        rows = sorted(ranked.collect(), key=lambda r: (r["_h"], r["_id"]))
-    else:
-        rows = (
-            ranked.orderBy(F.col("_h").asc(), F.col("_id").asc())
-            .limit(sample_rows)
-            .collect()
-        )
     return np.asarray([r["_v"] for r in rows], dtype=np.float64)
 
 
@@ -4661,10 +4653,12 @@ class IvfSq8Index(_PersistedIvfIndex):
         (or on its Bernoulli ``sample_rows`` sample). When the sample is
         the whole non-NULL corpus the occupancy counts come from the
         sample's own labels; otherwise one more fused pass over the
-        assignment counts them. So the build runs at most 2 Spark jobs,
-        or 3 when the corpus outgrows the sample, plus
-        ``build_portable``'s on a trip. A corpus with no non-NULL vector
-        raises ``ValueError``."""
+        assignment counts them. So the build runs 2 Spark jobs over a
+        file scan, or 3 when the corpus outgrows the sample, plus
+        ``build_portable``'s on a trip. (On an in-memory frame no larger
+        than the sample, Spark drops the sample's limit and sorts the
+        frame globally: a sampling job and a shuffle more.) A corpus
+        with no non-NULL vector raises ``ValueError``."""
         mins, deltas, (n,) = _sq8_train_cell_counts(
             df.select(vec_col, F.lit(0).alias("centroid")), vec_col, 1
         )
